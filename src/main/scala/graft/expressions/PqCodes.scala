@@ -2,6 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -59,6 +60,17 @@ case class PqCodesExpr(child: Expression, m: Int, ksub: Int, dsub: Int,
   // the fused form is non-nullable too and handles null input itself
   override def nullable: Boolean = false
   override def prettyName: String = "pq_codes"
+
+  // any other element type would be read with getDouble and decode
+  // garbage, so it fails analysis instead
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType | DoubleType, _) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"pq_codes requires array<float> or array<double>, got " +
+          other.catalogString)
+    }
 
   private lazy val elemIsFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true

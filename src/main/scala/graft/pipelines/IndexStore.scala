@@ -31,11 +31,11 @@ import graft.operators.TextAnalysis
   * one-row `stats` keep n_docs/avgdl maintenance O(1) per batch and
   * query-side global stats O(#batches).
   *
-  * `b=<tag>` batch partitioning gives the same overwrite-idempotent
-  * replay contract as the sibling stores: re-running a batch REPLACES
-  * its directory, never double-appends. Batch ids must be disjoint
-  * from store ids (the store does not namespace them; a re-indexed id
-  * in a DIFFERENT tag double-counts its df).
+  * Batches (`b=<tag>` in both tables), replay, compaction and
+  * visibility follow the one [[BatchLog]] protocol, so postings and
+  * stats switch generation in one manifest rename. Batch ids must be
+  * disjoint from store ids (the store does not namespace them; a
+  * re-indexed id in a DIFFERENT tag double-counts its df).
   *
   * Scoring is [[TextAnalysis.bm25ContribMicros]] — the same integer-
   * micros expression tree as the one-shot [[TextAnalysis.bm25TopK]],
@@ -51,26 +51,22 @@ object IndexStore {
   def create(spark: SparkSession, dir: String, seed: DataFrame,
       idCol: String, textCol: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/stats"), true)
+    log.reset(spark, dir)
     import spark.implicits._
     Seq(nBuckets).toDF("n_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/conf")
     // seed the metadata memo with the conf just written
     StoreMeta.put(spark, s"$dir/conf", "conf", Conf(nBuckets))
-    writeBatch(spark, dir, seed, idCol, textCol, nBuckets, "seed")
+    writeBatch(spark, dir, seed, idCol, textCol, nBuckets, BatchLog.Seed)
   }
 
   /** Tokenize and persist one batch — work and bytes are O(batch); the
     * existing store is never read. Same-tag re-append REPLACES the
-    * batch (idempotent retry/backfill). */
+    * batch (idempotent retry/backfill); a tag a committed [[compact]]
+    * retired raises. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, batchTag: String): Unit = {
-    require(batchTag.nonEmpty && batchTag != "seed" &&
-      batchTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchTag must be a non-'seed' dir-safe token: '$batchTag'")
+    log.checkAppendTag(spark, dir, batchTag)
     writeBatch(spark, dir, batch, idCol, textCol,
       loadConf(spark, dir).nBuckets, batchTag)
   }
@@ -98,17 +94,6 @@ object IndexStore {
     require(k > 0, s"bm25TopK: k must be positive, got $k")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    // a missing live dir with a complete temp copy means a compact()
-    // crashed between its commit renames — name the recovery instead
-    // of failing with a bare path-not-found (one listing call)
-    val fsq = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fsq.exists(new org.apache.hadoop.fs.Path(s"$dir/postings")) ||
-        !fsq.exists(new org.apache.hadoop.fs.Path(
-          s"$dir/postings_compacting")),
-      s"IndexStore at $dir is mid-compaction (crashed between commit " +
-        "renames) — re-run compact() to roll the swap forward, then " +
-        "query")
     val conf = loadConf(spark, dir)
     val qt = scope.cache(queries
       .select(col(qidCol),
@@ -122,13 +107,13 @@ object IndexStore {
     // cacheEager: posts feeds the df aggregate AND the scoring join
     // subtrees of one action — an unmaterialized cache would be
     // recomputed per consumer (the bm25TopK tf lesson)
-    val posts = scope.cacheEager(spark.read.parquet(s"$dir/postings")
+    val posts = scope.cacheEager(log.read(spark, dir, "postings")
       .filter(col("bkt").isin(buckets: _*))
       .join(broadcast(qt.select(col("term")).distinct()), Seq("term")))
     // one posting row per (term, id) per batch and batch ids are
     // disjoint → count(*) per term IS the corpus-wide df
     val dfT = posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val global = broadcast(spark.read.parquet(s"$dir/stats")
+    val global = broadcast(log.read(spark, dir, "stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
       .select(col("n_docs"),
         (col("dl_sum").cast("double") / col("n_docs")).as("avgdl")))
@@ -166,121 +151,37 @@ object IndexStore {
     q.awaitTermination()
   }
 
-  /** Merge every persisted batch into ONE batch directory — the
-    * operational counterweight to fine-grained streaming appends: a
-    * long-running ingester leaves thousands of b=stream-* directories,
-    * and at some point the per-directory listing cost (and the
-    * per-batch stats rows) outweighs the append savings. Compaction
-    * rewrites postings bucket-by-bucket (the repartition(bkt) write
-    * parallelizes over buckets — no global sort, no skew point) and
-    * folds the stats rows into one.
-    *
-    * Crash safety: the merged copy is written OUTSIDE the read roots
-    * (postings_compacting / stats_compacting), so a reader never sees
-    * a partial or double-counted state; the commit is a directory swap
-    * (live → _old, temp → live) and a crash between the two renames
-    * leaves the complete temp copy plus a missing live dir — re-running
-    * compact() ROLLS FORWARD (renames the temp into place) before doing
-    * anything else, and [[bm25TopK]] names that recovery in its error.
-    * A stats/postings swap interleaving is harmless: the per-batch
-    * stats rows and the folded row SUM to identical global totals.
-    *
-    * df correctness is unaffected: one posting row per (term, id)
-    * before = one after; queries see identical results
-    * ([[IndexStoreSpec]] pins this). Not concurrency-safe with appends
-    * — quiesce ingestion first (same contract as every sibling store's
-    * maintenance).
-    *
-    * DELIBERATE DESIGN: this store keeps the swap+roll-forward idiom
-    * while [[VectorStore]]/[[SignatureStore]] use manifest+vacuum —
-    * two idioms on purpose, not drift. The manifest protocol exists
-    * to keep RETIRED data readable until vacuum (their readers filter
-    * by manifest); this store's readers always want exactly the live
-    * dirs, its stats table must swap atomically WITH the postings
-    * generation, and the swap needs no manifest bookkeeping to do
-    * that. The cost is a read-unavailability window between the first
-    * rename and roll-forward — which [[bm25TopK]] names loudly and
-    * the kill/replay drill in IndexStoreSpec exercises at every
-    * commit-op boundary. */
+  /** Fold every live non-seed batch into ONE compact batch
+    * ([[BatchLog]] protocol) — the operational counterweight to
+    * fine-grained streaming appends: a long-running ingester leaves
+    * thousands of b=stream-* directories, and at some point the
+    * per-directory listing cost (and the per-batch stats rows)
+    * outweighs the append savings. Postings copy bucket-by-bucket (the
+    * repartition(bkt) write parallelizes over buckets — no global
+    * sort, no skew point); the stats rows fold into one, whose sums
+    * equal theirs. One posting row per (term, id) before = one after,
+    * so df and every query answer are unchanged ([[IndexStoreSpec]]
+    * pins this). Returns the committed tag, or None when fewer than
+    * two batches qualify. */
   def compact(spark: SparkSession, dir: String,
-      intoTag: String = "compacted"): Unit =
-    compactImpl(spark, dir, intoTag, Int.MaxValue)
-
-  /** Test seam: run [[compact]] but THROW after the k-th
-    * commit-sequence FS operation (renames + old-copy deletes), so the
-    * kill/replay drill (IndexStoreSpec) can exercise the recovery
-    * contract at EVERY boundary of the swap protocol instead of only
-    * the one a hand-built crash state happens to model. Production
-    * callers never use this. */
-  private[graft] def compactCrashing(spark: SparkSession, dir: String,
-      intoTag: String, crashAfterOps: Int): Unit =
-    compactImpl(spark, dir, intoTag, crashAfterOps)
-
-  private def compactImpl(spark: SparkSession, dir: String,
-      intoTag: String, crashAfterOps: Int): Unit = {
-    require(intoTag.nonEmpty &&
-      intoTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"intoTag must be a dir-safe token: '$intoTag'")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
-    rollForward(fs, p)
-    // leftovers from an earlier crash BEFORE its commit point: the live
-    // dirs are intact, so the temp/old copies are redundant
-    Seq("postings_old", "stats_old", "postings_compacting",
-      "stats_compacting").foreach(s => fs.delete(p(s), true))
-    require(fs.exists(p("postings")),
-      s"IndexStore.compact: no postings at $dir")
-    // full merged copy outside the read roots (the read's file listing
-    // is fixed before the write starts)
-    StoreMeta.oneJobWrite(spark) {
-      spark.read.parquet(s"$dir/postings")
-        .select(col("term"), col("id"), col("tf"), col("dl"), col("bkt"))
-        // explicit count: without it AQE coalesces the small shuffle to
-        // one partition and a single task writes every bucket dir
-        // sequentially (parquet-writer init per dir)
+      vacuumAfter: Boolean = false): Option[String] =
+    log.compact(spark, dir, vacuumAfter) {
+      // explicit count: without it AQE coalesces the small shuffle to
+      // one partition and a single task writes every bucket dir
+      // sequentially (parquet-writer init per dir)
+      case ("postings", postings) => postings
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$dir/postings_compacting/b=$intoTag")
-      spark.read.parquet(s"$dir/stats")
+        .write.partitionBy("bkt")
+      case (_, stats) => stats
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("dl_sum")).as("dl_sum"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/stats_compacting/b=$intoTag")
+        .coalesce(1).write
     }
-    // commit: swap live for merged, then drop the old copies. Each op
-    // routes through the crash seam so the drill can stop the world at
-    // any boundary; a crash anywhere in this sequence is recovered by
-    // the NEXT compact()'s rollForward + leftover cleanup (every state
-    // has either the live dir or its complete _compacting copy).
-    var ops = 0
-    def op(f: => Unit): Unit = {
-      f; ops += 1
-      if (ops >= crashAfterOps) throw new IllegalStateException(
-        s"IndexStore.compact: injected crash after commit op $ops " +
-          "(test seam)")
-    }
-    op(fs.rename(p("postings"), p("postings_old")))
-    op(fs.rename(p("postings_compacting"), p("postings")))
-    op(fs.rename(p("stats"), p("stats_old")))
-    op(fs.rename(p("stats_compacting"), p("stats")))
-    op(fs.delete(p("postings_old"), true))
-    op(fs.delete(p("stats_old"), true))
-  }
-
-  /** Complete a compact() that crashed between its commit renames: the
-    * temp copy is complete by construction (written before the swap
-    * begins), so when the live dir is missing the temp IS the store. */
-  private def rollForward(fs: org.apache.hadoop.fs.FileSystem,
-      p: String => org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(p("postings")) && fs.exists(p("postings_compacting")))
-      fs.rename(p("postings_compacting"), p("postings"))
-    if (!fs.exists(p("stats")) && fs.exists(p("stats_compacting")))
-      fs.rename(p("stats_compacting"), p("stats"))
-  }
 
   // ---- internals --------------------------------------------------------
+
+  private val log = new BatchLog("IndexStore", Seq("postings", "stats"))
 
   /** One file per (bucket, batch) via repartition-before-partitionBy —
     * the same small-file-storm control as the sibling stores. The tf
@@ -306,14 +207,15 @@ object IndexStore {
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("bkt"))
         .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$dir/postings/b=$tag")
+        .parquet(log.path(dir, "postings", tag))
       // n_docs counts EVERY batch doc (token-free docs too — they are
       // part of the collection BM25 normalizes over, matching the
       // one-shot path's docs.count); dl_sum only tokened docs
       batch.agg(count(lit(1)).as("n_docs"))
         .crossJoin(dl.agg(coalesce(sum(col("dl")), lit(0L))
           .as("dl_sum")))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats/b=$tag")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(log.path(dir, "stats", tag))
     } finally tf.unpersist(blocking = false)
   }
 

@@ -265,7 +265,10 @@ object Pipelines {
   }
 
   /** Atomic-swap overwrite: write to a staging location, then swap — the
-    * re-runnability contract of the reference's staging+MERGE+commit. */
+    * re-runnability contract of the reference's staging+MERGE+commit.
+    * The live dir is deleted only after the staging write finished, so
+    * a crash between the delete and the rename leaves a complete
+    * staging copy, which [[loadOrEmpty]] rolls forward. */
   private def overwriteParquet(spark: SparkSession, df: DataFrame,
       path: String): Unit = {
     val dst = new org.apache.hadoop.fs.Path(path)
@@ -274,14 +277,26 @@ object Pipelines {
     val tmp = new org.apache.hadoop.fs.Path(path + "__staging")
     df.write.mode("overwrite").parquet(tmp.toString)
     if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(tmp, dst)
+    if (!fs.rename(tmp, dst)) throw new java.io.IOException(
+      s"overwriteParquet: renaming $tmp to $dst failed — the new data " +
+        "stays in the staging dir and the next load rolls it forward")
   }
 
+  /** The table at `path`, or an empty frame when none exists yet. A
+    * missing live dir next to a staging dir is an [[overwriteParquet]]
+    * that crashed between its delete and its rename: the staging copy
+    * is the table, so it is renamed into place before the read. */
   private def loadOrEmpty(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
+    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
+    val live = fs.exists(p) || (fs.exists(staging) && {
+      if (!fs.rename(staging, p)) throw new java.io.IOException(
+        s"loadOrEmpty: rolling $staging forward to $p failed")
+      true
+    })
+    if (live)
       spark.read.parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

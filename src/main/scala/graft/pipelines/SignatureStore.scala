@@ -22,9 +22,8 @@ import graft.operators.Dedup
   * `bkt = pmod(band_hash, n_buckets)` partitioning is the query-side
   * pruning lever: a batch's bands land in a bounded set of buckets, so
   * the candidate join scans only those bucket directories instead of
-  * the whole band table. `b=<tag>` batch partitioning gives the same
-  * overwrite-idempotent replay contract as [[VectorStore]]: re-running
-  * a batch REPLACES its directory, never double-appends.
+  * the whole band table. Batches (`b=<tag>`), replay, compaction and
+  * visibility follow the one [[BatchLog]] protocol.
   *
   * The store returns CANDIDATES with the signature-agreement estimate
   * (exact dyadic arithmetic, deterministic). Callers wanting exact
@@ -47,13 +46,7 @@ object SignatureStore {
       idCol: String, textCol: String, k: Int = 3, numHashes: Int = 64,
       bands: Int = 32, nBuckets: Int = 64): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/sigs"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/bands"), true)
-    // stale manifests from a previous store at this path would retire
-    // fresh batches that happen to reuse a tag
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/compactions"), true)
+    log.reset(spark, dir)
     import spark.implicits._
     Seq((k, numHashes, bands, nBuckets))
       .toDF("k", "num_hashes", "bands", "n_buckets")
@@ -63,30 +56,18 @@ object SignatureStore {
     StoreMeta.put(spark, s"$dir/conf", "conf",
       Conf(k, numHashes, bands, nBuckets))
     writeBatch(spark, dir, seed, idCol, textCol, loadConf(spark, dir),
-      "seed")
+      BatchLog.Seed)
   }
 
   /** Sign and persist one batch — work and bytes are O(batch); the
-    * existing store is never read (beyond the O(#compactions) manifest
+    * existing store is never read (beyond the [[BatchLog]] manifest
     * listing). Same-tag re-append REPLACES the batch (idempotent
-    * retry/backfill) — but ONLY while the tag is live: once a
-    * committed [[compact]] manifest retires a tag, [[readVisible]]
-    * filters that partition forever, so a re-append under the retired
-    * name would write permanently invisible data. That case RAISES by
-    * name instead of silently succeeding; backfill a compacted batch
-    * under a fresh tag (e.g. `crawl-07-refill`). */
+    * retry/backfill) while the tag is live; a tag a committed
+    * [[compact]] retired RAISES by name — backfill it under a fresh
+    * tag (e.g. `crawl-07-refill`). */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, batchTag: String): Unit = {
-    require(batchTag.nonEmpty && batchTag != "seed" &&
-      !batchTag.startsWith("compact-") &&
-      batchTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchTag must be a non-'seed', non-'compact-*' dir-safe token: " +
-        s"'$batchTag'")
-    val (_, retired) = readCompactions(spark, dir)
-    require(!retired(batchTag),
-      s"SignatureStore.append: batch tag '$batchTag' was retired by a " +
-        "committed compaction manifest — rows written under it would be " +
-        "invisible to every read. Use a fresh tag for the backfill.")
+    log.checkAppendTag(spark, dir, batchTag)
     writeBatch(spark, dir, batch, idCol, textCol, loadConf(spark, dir),
       batchTag)
   }
@@ -159,7 +140,7 @@ object SignatureStore {
       conf.nBuckets)
     val buckets = bbands.select(col("bkt")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val sbands0 = readVisible(spark, dir, "bands")
+    val sbands0 = log.read(spark, dir, "bands")
       .filter(col("bkt").isin(buckets: _*))
     // shared cap machinery (Dedup.splitMegaBuckets) so the one-shot and
     // incremental paths cannot drift; the dropped-keys frame is small
@@ -171,7 +152,7 @@ object SignatureStore {
       .join(bbands.select(col("band"), col("band_hash"),
         col("id").as("batch_id")), Seq("band", "band_hash"))
       .select(col("store_id"), col("batch_id")).distinct()
-    val ssigs = readVisible(spark, dir, "sigs")
+    val ssigs = log.read(spark, dir, "sigs")
       .select(col("id").as("store_id"), col("sig").as("sig_s"))
     // static expansion over the stored hash count (codegen) instead of
     // an interpreted zip_with/filter HOF per candidate pair — same
@@ -212,168 +193,39 @@ object SignatureStore {
         lit(null).cast("double").as("agreement")))
   }
 
-  /** Merge all committed non-seed batch directories — INCLUDING prior
-    * committed `compact-*` batches, which are retired like any other
-    * source — into ONE compact batch under both tables, so the live
-    * compact-dir count is always ≤ 1 no matter how many compactions
-    * have run. The [[VectorStore.compact]] manifest
-    * protocol, ported verbatim: an append-per-crawl store grows one
+  /** Fold every live non-seed batch of both tables into one compact
+    * batch ([[BatchLog]] protocol): an append-per-crawl store grows one
     * `sigs/b=<tag>` dir and up to `n_buckets` band files per batch, so
     * after B batches every [[nearDups]] probe lists and opens O(B)
-    * files per bucket; compaction collapses that back to O(1) while
-    * the manifest keeps every read bit-identical.
-    *
-    *   1. rows copy VERBATIM (signatures and band hashes are pure
-    *      per-row values — nothing is re-signed) into
-    *      `sigs/b=compact-<digest>` and `bands/b=compact-<digest>`,
-    *      invisible to readers until the manifest commits;
-    *   2. `compactions/<tag>.list` lands via temp + ATOMIC rename —
-    *      the commit point: readers switch from the source batches to
-    *      the compact dirs in one step;
-    *   3. [[vacuum]] physically deletes retired source dirs, any
-    *      time, idempotently.
-    *
-    * The digest tag is a pure function of the sorted source batch
-    * names, so a crashed compact's retry targets the same path and
-    * overwrites the orphan; a crash before (2) leaves the store
-    * reading the sources. Returns the committed tag, or None when
-    * fewer than two batches qualify. The d9b gate hash-pins the
+    * files per bucket; compaction collapses that back to O(1). Rows
+    * copy verbatim (signatures and band hashes are pure per-row
+    * values): sigs coalesce to a bounded file count with no shuffle,
+    * bands keep one file per bucket. The d9b gate hash-pins the
     * post-compaction [[nearDups]] against the same brute-force oracle
     * as the uncompacted store. */
   def compact(spark: SparkSession, dir: String,
       vacuumAfter: Boolean = false): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (committedTags, retired) = readCompactions(spark, dir)
-    val sigRoot = new org.apache.hadoop.fs.Path(s"$dir/sigs")
-    val onDisk = fs.listStatus(sigRoot).map(_.getPath.getName)
-      .filter(_.startsWith("b=")).map(_.stripPrefix("b=")).toSeq
-    // COMMITTED prior compact batches qualify as sources too — they are
-    // retired by the new manifest like any batch, so repeated
-    // compactions fold down to ONE live compact dir instead of
-    // accumulating one per call (uncommitted compact-* orphans stay
-    // excluded: reading a crashed partial write would corrupt the copy)
-    val candidates = onDisk.filter(b => b != "seed" && !retired(b) &&
-      (!b.startsWith("compact-") || committedTags(b))).sorted
-    if (candidates.size < 2) return None
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(candidates.mkString("\n").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(16)
-    val tag = s"compact-$digest"
-    // data first (invisible until the manifest commits); sources read
-    // by EXPLICIT path with basePath anchoring partition discovery —
-    // the write target can't overlap a read root. Sigs coalesce to a
-    // bounded file count (no shuffle — compaction IS the small-file
-    // fix); bands keep the one-file-per-bucket write shape.
-    val nOut = spark.sessionState.conf.numShufflePartitions
-    StoreMeta.oneJobWrite(spark) {
-      spark.read.option("basePath", s"$dir/sigs")
-        .parquet(candidates.map(b => s"$dir/sigs/b=$b"): _*)
-        .drop("b")
-        .coalesce(nOut)
-        .write.mode("overwrite").parquet(s"$dir/sigs/b=$tag")
-      spark.read.option("basePath", s"$dir/bands")
-        .parquet(candidates.map(b => s"$dir/bands/b=$b"): _*)
-        .drop("b")
-        // explicit count: an unnumbered keyed repartition lets AQE
-        // coalesce this tiny shuffle to ONE partition, and that single
-        // task then writes every bucket dir sequentially (~1.2 s of
-        // parquet-writer inits per batch, measured at sf0.1). The count
-        // pins parallel writers; still one file per (bucket, batch).
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$dir/bands/b=$tag")
+    val n = spark.sessionState.conf.numShufflePartitions
+    log.compact(spark, dir, vacuumAfter) {
+      case ("sigs", sigs) => sigs.coalesce(n).write
+      // explicit count: an unnumbered keyed repartition lets AQE
+      // coalesce this tiny shuffle to ONE partition, and that single
+      // task then writes every bucket dir sequentially (~1.2 s of
+      // parquet-writer inits per batch, measured at sf0.1)
+      case (_, bands) =>
+        bands.repartition(n, col("bkt")).write.partitionBy("bkt")
     }
-    // manifest via temp + atomic rename = the commit point; a FALSE
-    // rename must not report a committed compaction unless the
-    // manifest already exists (idempotent retry: same sources ⇒ same
-    // tag ⇒ same dest)
-    val mdir = new org.apache.hadoop.fs.Path(s"$dir/compactions")
-    fs.mkdirs(mdir)
-    val tmp = new org.apache.hadoop.fs.Path(mdir, s".tmp_$tag")
-    val out = fs.create(tmp, true)
-    try out.write(candidates.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new org.apache.hadoop.fs.Path(mdir, s"$tag.list")
-    if (!fs.rename(tmp, dest) && !fs.exists(dest))
-      throw new java.io.IOException(
-        s"compact: manifest commit failed for $tag (rename returned " +
-          "false and no manifest exists) — the store still reads the " +
-          "source batches; retry compact()")
-    if (vacuumAfter) vacuum(spark, dir)
-    Some(tag)
   }
 
-  /** Physically delete batch directories retired by committed
-    * compaction manifests (under BOTH tables). Idempotent; safe any
-    * time after the manifest commit. `deleteOrphans = true`
-    * additionally reclaims UNCOMMITTED `b=compact-*` dirs (a crashed
-    * [[compact]] whose candidate set changed before the retry) —
-    * opt-in because it races an in-flight compact(); maintenance
-    * windows only. */
+  /** Delete the batch dirs committed compactions retired (and, with
+    * `deleteOrphans`, uncommitted compact dirs) — see [[BatchLog]]. */
   def vacuum(spark: SparkSession, dir: String,
-      deleteOrphans: Boolean = false): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (committed, retired) = readCompactions(spark, dir)
-    Seq("sigs", "bands").foreach { table =>
-      retired.foreach { b =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$table/b=$b")
-        if (fs.exists(p)) fs.delete(p, true)
-        ()
-      }
-      if (deleteOrphans) {
-        val root = new org.apache.hadoop.fs.Path(s"$dir/$table")
-        fs.listStatus(root).map(_.getPath)
-          .filter { p =>
-            val b = p.getName.stripPrefix("b=")
-            p.getName.startsWith("b=compact-") && !committed(b)
-          }
-          .foreach(p => fs.delete(p, true))
-      }
-    }
-  }
+      deleteOrphans: Boolean = false): Unit =
+    log.vacuum(spark, dir, deleteOrphans)
 
   // ---- internals --------------------------------------------------------
 
-  /** Visibility-filtered read of `sigs` or `bands`: a batch named in a
-    * committed manifest is retired; a compact dir WITHOUT a manifest
-    * is an uncommitted orphan (crash between data and manifest) and
-    * stays invisible until its retry commits. Predicates land on the
-    * `b` PARTITION column, so retired dirs prune at planning — they
-    * are never listed into the scan. */
-  private def readVisible(spark: SparkSession, dir: String,
-      table: String): DataFrame = {
-    val raw0 = spark.read.parquet(s"$dir/$table")
-    val (committed, retired) = readCompactions(spark, dir)
-    val raw1 =
-      if (retired.isEmpty) raw0
-      else raw0.filter(!col("b").isin(retired.toSeq: _*))
-    val isCompact = col("b").startsWith("compact-")
-    if (committed.isEmpty) raw1.filter(!isCompact)
-    else raw1.filter(!isCompact || col("b").isin(committed.toSeq: _*))
-  }
-
-  /** (committed compact tags, retired source batch names) from the
-    * manifest directory. */
-  private def readCompactions(spark: SparkSession,
-      dir: String): (Set[String], Set[String]) = {
-    val mdir = new org.apache.hadoop.fs.Path(s"$dir/compactions")
-    val fs = mdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mdir)) return (Set.empty, Set.empty)
-    val entries = fs.listStatus(mdir).map(_.getPath)
-      .filter(p => p.getName.endsWith(".list") &&
-        !p.getName.startsWith("."))
-    val tags = entries.map(_.getName.stripSuffix(".list")).toSet
-    val retired = entries.flatMap { p =>
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
-    }.toSet
-    (tags, retired)
-  }
+  private val log = new BatchLog("SignatureStore", Seq("sigs", "bands"))
 
   /** MinHash signing is the store's per-row hot kernel (k-shingle +
     * numHashes mins per doc); [[Tables.fanout]] spreads a
@@ -406,7 +258,7 @@ object SignatureStore {
     // the bands job reads it, and the count only added 2 AQE jobs)
     try StoreMeta.oneJobWrite(spark) {
       sc.setJobDescription(s"sigstore write sigs b=$tag")
-      sigs.write.mode("overwrite").parquet(s"$dir/sigs/b=$tag")
+      sigs.write.mode("overwrite").parquet(log.path(dir, "sigs", tag))
       sc.setJobDescription(s"sigstore write bands b=$tag")
       bucketed(Dedup.lshBands(sigs, "id", "sig", conf.bands),
           conf.nBuckets)
@@ -415,7 +267,7 @@ object SignatureStore {
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("bkt"))
         .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$dir/bands/b=$tag")
+        .parquet(log.path(dir, "bands", tag))
     } finally {
       sc.setJobDescription(null)
       sigs.unpersist(blocking = false)

@@ -81,7 +81,12 @@ private[graft] object StoreMeta {
 
   /** Seed the memo after a write with the value the writer already
     * holds. The fingerprint is taken AFTER the write completes, so the
-    * entry matches exactly the files on disk. */
+    * entry matches exactly the files on disk — provided this writer is
+    * the only one: a concurrent writer to the same metadata dir could
+    * land its files between this write and the fingerprint, and the
+    * memo would pair its files with this writer's value. Single writer
+    * per metadata dir is the contract; concurrent writers are
+    * unsupported. */
   def put[T](spark: SparkSession, path: String, kind: String,
       value: T): Unit =
     fingerprint(spark, path).foreach { fp =>

@@ -19,9 +19,6 @@ import graft.operators.Similarity.PqModel
   *   centroids/  — (cell: long, centroid: array<double>), tiny
   *   codebooks/  — one row: (m, ksub, dsub, flat: array<double>), tiny
   *   format/     — one row: (int8: boolean), the vector storage format
-  *   compactions/ — one `<tag>.list` manifest per committed
-  *                 [[compact]] run (its retired source batches);
-  *                 readers resolve visibility from these
   *   vectors/b=<batchTag>/cell=<c>/ —
   *                 (id: long, vec: array<double>, codes: array<int>),
   *                 or with int8 storage (id, q: array<tinyint>,
@@ -29,13 +26,10 @@ import graft.operators.Similarity.PqModel
   *                 dequantized on read.
   *                 `cell` partitioning: a query probing `nprobe` cells
   *                 prunes every other cell directory, so scan bytes
-  *                 scale with nprobe/nCells, not corpus. `b` batch
-  *                 partitioning: each batch owns its directory and is
-  *                 written with OVERWRITE, so re-running a batch (a
-  *                 crashed-and-replayed foreachBatch, a backfill retry)
-  *                 REPLACES it instead of double-appending — the
-  *                 idempotence that makes [[ingestStream]] exactly-once
-  *                 across crashes.
+  *                 scale with nprobe/nCells, not corpus. Batches
+  *                 (`b`), replay, compaction and visibility follow the
+  *                 one [[BatchLog]] protocol — its overwrite-by-tag
+  *                 replay is what makes [[ingestStream]] exactly-once.
   *
   * Frozen-quantizer consequence: query results over the store are
   * IDENTICAL to running [[Similarity.ivfTopK]] with the same centroids
@@ -65,16 +59,14 @@ object VectorStore {
       idCol: String, vecCol: String, nCells: Int, m: Int, ksub: Int,
       ivfIters: Int = 3, pqIters: Int = 8, int8: Boolean = false): Unit = {
     val clean = normalize(seed, idCol, vecCol)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/vectors"), true)
+    log.reset(spark, dir)
     val idx = Similarity.ivfBuild(clean, "id", "vec", nCells, ivfIters)
     idx.centroids.coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/centroids")
     val mdl = Similarity.pqTrain(clean, "id", "vec", m, ksub, pqIters)
     saveModel(spark, mdl, s"$dir/codebooks")
     saveFormat(spark, dir, int8)
-    writeVectors(withCodes(idx.assigned, mdl), dir, batchTag = "seed",
+    writeVectors(withCodes(idx.assigned, mdl), dir, BatchLog.Seed,
       int8 = int8)
   }
 
@@ -99,9 +91,7 @@ object VectorStore {
       pqIters: Int = 8, int8: Boolean = false): Unit = {
     require(nCells >= 1, s"createSeeded: nCells must be >= 1: $nCells")
     val clean = normalize(seed, idCol, vecCol)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/vectors"), true)
+    log.reset(spark, dir)
     val picked = clean
       .orderBy(md5(col("id").cast("string")), col("id"))
       .limit(nCells).collect()
@@ -130,7 +120,7 @@ object VectorStore {
     saveFormat(spark, dir, int8)
     val assigned = Similarity.assignCells(clean, "id", "vec",
       centroidsDF(spark, dir))
-    writeVectors(withCodes(assigned, mdl), dir, batchTag = "seed",
+    writeVectors(withCodes(assigned, mdl), dir, BatchLog.Seed,
       int8 = int8)
   }
 
@@ -141,23 +131,11 @@ object VectorStore {
     *
     * `batchTag` names the batch's partition directory: unique per
     * logical batch; writing the same tag again REPLACES that batch
-    * (idempotent retry / backfill semantics). */
+    * (idempotent retry / backfill semantics); a tag a committed
+    * [[compact]] retired raises. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, vecCol: String, batchTag: String): Unit = {
-    require(batchTag.nonEmpty && batchTag != "seed" &&
-      !batchTag.startsWith("compact-") &&
-      batchTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchTag must be a non-'seed', non-'compact-*' dir-safe " +
-        s"token: '$batchTag'")
-    // a tag retired by a committed compaction is filtered from every
-    // read FOREVER and physically deleted by the next vacuum — an
-    // append under such a tag (e.g. an ingestStream restarted with a
-    // FRESH checkpoint, whose batch ids restart at 0) would be
-    // silently invisible data loss; fail loudly instead
-    require(!readCompactions(spark, dir)._2.contains(batchTag),
-      s"batchTag '$batchTag' was retired by a committed compaction — " +
-        "its directory is invisible to readers and reclaimed by " +
-        "vacuum(); use a fresh tag (ingestStream: a new tagPrefix)")
+    log.checkAppendTag(spark, dir, batchTag)
     val clean = normalize(batch, idCol, vecCol)
     val centroids = centroidsDF(spark, dir)
     val mdl = loadModel(spark, s"$dir/codebooks")
@@ -373,34 +351,16 @@ object VectorStore {
           out.sparkSession.sessionState.conf.numShufflePartitions,
           col("cell"))
         .write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$dir/vectors/b=$batchTag")
+        .partitionBy("cell").parquet(log.path(dir, "vectors", batchTag))
     }
   }
 
-  /** Fold many small batch directories into one — the answer to the
-    * small-files tax a fine-grained [[ingestStream]] accrues (measured
-    * ~16 s/batch fixed cost at 20k-vector micro-batches: 256 cell
-    * files per batch, 45 batches ⇒ 11.5k files the probe's directory
-    * listing must walk). Compaction rewrites every live non-seed,
-    * non-compact batch into ONE `b=compact-<digest>` directory and
-    * COMMITS it with a manifest — LSM-style logical deletion:
-    *
-    *   1. data lands at `vectors/b=compact-<digest>` (readers still
-    *      ignore it: a compact dir with no manifest is invisible);
-    *   2. the manifest (its source list) renames into `compactions/`
-    *      — the ATOMIC commit point: readers switch from the source
-    *      batches to the compact dir in one step;
-    *   3. [[vacuum]] physically deletes retired source dirs, any time,
-    *      idempotently.
-    *
-    * A crash before (2) leaves the store reading the sources (the
-    * orphan compact dir is ignored and OVERWRITTEN by the retry — the
-    * digest tag is a pure function of the sorted source names, so the
-    * retry targets the same path; if new appends changed the
-    * candidate set before the retry, the old orphan is reclaimed by
-    * `vacuum(deleteOrphans = true)` in a maintenance window); a crash
-    * after (2) only delays the disk reclaim. Rows are copied in their
-    * STORED layout (float64 or int8 codes verbatim, never
+  /** Fold many small batch directories into one ([[BatchLog]]
+    * protocol) — the answer to the small-files tax a fine-grained
+    * [[ingestStream]] accrues (measured ~16 s/batch fixed cost at
+    * 20k-vector micro-batches: 256 cell files per batch, 45 batches ⇒
+    * 11.5k files the probe's directory listing must walk). Rows copy in
+    * their STORED layout (float64 or int8 codes verbatim, never
     * re-quantized), so query results are bit-identical before and
     * after — the anq4 gate hash-pins that through the full DuckDB
     * replay.
@@ -413,106 +373,24 @@ object VectorStore {
     * need. Returns the committed tag, or None when fewer than two
     * batches qualify. */
   def compact(spark: SparkSession, dir: String,
-      vacuumAfter: Boolean = false): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (committed, retired) = readCompactions(spark, dir)
-    val vecRoot = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-    val onDisk = fs.listStatus(vecRoot).map(_.getPath.getName)
-      .filter(_.startsWith("b=")).map(_.stripPrefix("b=")).toSeq
-    val candidates = onDisk.filter(b => b != "seed" &&
-      !b.startsWith("compact-") && !retired(b)).sorted
-    if (candidates.size < 2) return None
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(candidates.mkString("\n").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(16)
-    val tag = s"compact-$digest"
-    // data first (invisible until the manifest commits); sources are
-    // read by EXPLICIT path (basePath anchors partition discovery so
-    // the b=/cell= levels parse) — the write target can't overlap a
-    // read root, and the stored columns copy verbatim — no re-quantize
-    StoreMeta.oneJobWrite(spark) {
-      spark.read.option("basePath", s"$dir/vectors")
-        .parquet(candidates.map(b => s"$dir/vectors/b=$b"): _*)
-        .drop("b")
-        // explicit count — see writeVectors(): pins parallel cell writers
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/vectors/b=$tag")
+      vacuumAfter: Boolean = false): Option[String] =
+    log.compact(spark, dir, vacuumAfter) { (_, vectors) =>
+      // explicit count — see writeVectors(): pins parallel cell writers
+      vectors.repartition(spark.sessionState.conf.numShufflePartitions,
+        col("cell")).write.partitionBy("cell")
     }
-    // manifest via temp + atomic rename = the commit point; a FALSE
-    // rename (racing maintenance job, lost tmp) must not report a
-    // committed compaction — callers would measure/trust an
-    // uncompacted store — unless the manifest is already there (the
-    // idempotent-retry case: same sources ⇒ same tag ⇒ same dest)
-    val mdir = new org.apache.hadoop.fs.Path(s"$dir/compactions")
-    fs.mkdirs(mdir)
-    val tmp = new org.apache.hadoop.fs.Path(mdir, s".tmp_$tag")
-    val out = fs.create(tmp, true)
-    try out.write(candidates.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new org.apache.hadoop.fs.Path(mdir, s"$tag.list")
-    if (!fs.rename(tmp, dest) && !fs.exists(dest))
-      throw new java.io.IOException(
-        s"compact: manifest commit failed for $tag (rename returned " +
-          "false and no manifest exists) — the store still reads the " +
-          "source batches; retry compact()")
-    if (vacuumAfter) vacuum(spark, dir)
-    Some(tag)
-  }
 
-  /** Physically delete batch directories retired by committed
-    * compaction manifests. Idempotent; safe any time after the
-    * manifest commit (readers stopped seeing those dirs at commit).
-    *
-    * `deleteOrphans = true` additionally reclaims UNCOMMITTED
-    * `b=compact-*` dirs (a [[compact]] crash whose retry never landed
-    * on the same tag because the candidate set changed — without this
-    * flag such a dir, a full copy of the store's non-seed data, leaks
-    * forever). Opt-in because it RACES a concurrently running
-    * compact() that has written data but not yet committed: only use
-    * it in a maintenance window with no compaction in flight. */
+  /** Delete the batch dirs committed compactions retired. Idempotent;
+    * `deleteOrphans = true` also reclaims uncommitted compact dirs (a
+    * crashed [[compact]] whose candidate set changed before its retry
+    * — otherwise a full copy of the non-seed data leaks forever); it
+    * races a compaction in flight, so use it only in a maintenance
+    * window. See [[BatchLog]]. */
   def vacuum(spark: SparkSession, dir: String,
-      deleteOrphans: Boolean = false): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (committed, retired) = readCompactions(spark, dir)
-    retired.foreach { b =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/vectors/b=$b")
-      if (fs.exists(p)) fs.delete(p, true)
-      ()
-    }
-    if (deleteOrphans) {
-      val vecRoot = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-      fs.listStatus(vecRoot).map(_.getPath)
-        .filter { p =>
-          val b = p.getName.stripPrefix("b=")
-          p.getName.startsWith("b=compact-") && !committed(b)
-        }
-        .foreach(p => fs.delete(p, true))
-    }
-  }
+      deleteOrphans: Boolean = false): Unit =
+    log.vacuum(spark, dir, deleteOrphans)
 
-  /** (committed compact tags, retired source batch names) from the
-    * manifest directory. */
-  private def readCompactions(spark: SparkSession,
-      dir: String): (Set[String], Set[String]) = {
-    val mdir = new org.apache.hadoop.fs.Path(s"$dir/compactions")
-    val fs = mdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mdir)) return (Set.empty, Set.empty)
-    val entries = fs.listStatus(mdir).map(_.getPath)
-      .filter(p => p.getName.endsWith(".list") &&
-        !p.getName.startsWith("."))
-    val tags = entries.map(_.getName.stripSuffix(".list")).toSet
-    val retired = entries.flatMap { p =>
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
-    }.toSet
-    (tags, retired)
-  }
+  private val log = new BatchLog("VectorStore", Seq("vectors"))
 
   /** Query-side twin of the ingest guard: a NaN/Inf element in a QUERY
     * vector makes every candidate cosine NaN — and NaN sorts as the
@@ -535,23 +413,7 @@ object VectorStore {
     * scored PAIR, an extra O(dim) per candidate that the bandwidth
     * saving dwarfs once probed cells stop fitting in page cache). */
   private def readVectors(spark: SparkSession, dir: String): DataFrame = {
-    val raw0 = spark.read.parquet(s"$dir/vectors")
-    // compaction visibility rules (predicates on the `b` PARTITION
-    // column — pruned at planning, retired dirs are never listed into
-    // the scan): a batch named in a committed manifest is retired; a
-    // compact dir WITHOUT a manifest is an uncommitted orphan (crash
-    // between data and manifest) and stays invisible until its retry
-    // overwrites + commits it
-    val (committed, retired) = readCompactions(spark, dir)
-    val raw1 =
-      if (retired.isEmpty) raw0
-      else raw0.filter(!col("b").isin(retired.toSeq: _*))
-    val raw = {
-      val isCompact = col("b").startsWith("compact-")
-      if (committed.isEmpty) raw1.filter(!isCompact)
-      else raw1.filter(!isCompact ||
-        col("b").isin(committed.toSeq: _*))
-    }
+    val raw = log.read(spark, dir, "vectors")
     val vec =
       if (!raw.columns.contains("q")) col("vec")
       else transform(col("q"), x => x.cast("double") * col("scale"))
@@ -621,18 +483,28 @@ object VectorStore {
   private def probePlan(spark: SparkSession, dir: String,
       queries: DataFrame, qidCol: String, qvecCol: String, nprobe: Int)
       : (DataFrame, Seq[Long], Seq[(Long, Seq[Double])]) = {
+    val byQuery =
+      org.apache.spark.sql.expressions.Window.partitionBy(col(qidCol))
     val cellRankPlan = queries
       .select(col(qidCol).cast("long").as(qidCol), col(qvecCol))
       .crossJoin(broadcast(centroidsDF(spark, dir)))
-      .withColumn("crank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col(qidCol))
-          .orderBy(Similarity.cosine(col(qvecCol), col("centroid")).desc,
-            col("cell"))))
+      .withColumn("crank", row_number().over(byQuery
+        .orderBy(Similarity.cosine(col(qvecCol), col("centroid")).desc,
+          col("cell"))))
+      // a qid carrying two different vectors has no single answer; the
+      // flag rides the same window, before the probe cut drops rows
+      .withColumn("__mixed",
+        min(col(qvecCol)).over(byQuery) =!= max(col(qvecCol)).over(byQuery))
       .filter(col("crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("cell"))
+      .select(col(qidCol), col(qvecCol), col("cell"), col("__mixed"))
     val rows = cellRankPlan.collect().toIndexedSeq
+    val mixed = rows.filter(_.getBoolean(3)).map(_.getLong(0)).distinct
+    require(mixed.isEmpty,
+      s"VectorStore: qid(s) ${mixed.sorted.mkString(", ")} map to more " +
+        s"than one query vector — '$qidCol' must identify one query")
     import scala.jdk.CollectionConverters._
     val cellRank = spark.createDataFrame(rows.asJava, cellRankPlan.schema)
+      .drop("__mixed")
     val probed = rows.map(_.getLong(2)).distinct.toSeq
     // one (qid → vector) row per query, widened to double exactly as
     // the cast the previous per-caller collect applied (float → double

@@ -137,8 +137,8 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
-  test("compact merges every batch into one dir; queries are " +
-      "unchanged; a crashed swap rolls forward") {
+  test("compact folds every non-seed batch into one dir; queries are " +
+      "unchanged") {
     val dir = Files.createTempDirectory("graft_idxcomp").toString
     val docs = corpus.toDF("id", "text")
     IndexStore.create(spark, dir, docs.filter($"id" <= 3), "id", "text")
@@ -148,79 +148,26 @@ class IndexStoreSpec extends SparkSpec {
       "b2")
     val before = IndexStore.bm25TopK(spark, dir, queriesDf, "qid",
       "qtext", k = 4).orderBy($"qid", $"rank").collect().toSeq
-    IndexStore.compact(spark, dir)
-    val batchDirs = new java.io.File(s"$dir/postings").listFiles()
-      .map(_.getName).filter(_.startsWith("b=")).toSeq
-    assert(batchDirs === Seq("b=compacted"))
-    assert(spark.read.parquet(s"$dir/stats").count() === 1L)
+    val tag = IndexStore.compact(spark, dir, vacuumAfter = true)
+    assert(tag.exists(_.startsWith("compact-")))
+    // the seed is never folded: postings and stats both hold it plus
+    // the one compact batch, and the two stats rows sum to the totals
+    Seq("postings", "stats").foreach { t =>
+      val batchDirs = new java.io.File(s"$dir/$t").listFiles()
+        .map(_.getName).filter(_.startsWith("b=")).toSeq.sorted
+      assert(batchDirs === Seq(s"b=${tag.get}", "b=seed"), t)
+    }
+    assert(spark.read.parquet(s"$dir/stats").count() === 2L)
     val after = IndexStore.bm25TopK(spark, dir, queriesDf, "qid",
       "qtext", k = 4).orderBy($"qid", $"rank").collect().toSeq
     assert(after === before)
-    // simulate a crash between the commit renames: live postings gone,
-    // complete temp copy present
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/postings"),
-      new org.apache.hadoop.fs.Path(s"$dir/postings_compacting"))
+    // one live compact batch plus the seed: nothing left to fold
+    assert(IndexStore.compact(spark, dir) === None)
     val e = intercept[IllegalArgumentException] {
-      IndexStore.bm25TopK(spark, dir, queriesDf, "qid", "qtext", k = 4)
+      IndexStore.append(spark, dir, docs.filter($"id" > 5), "id", "text",
+        "b2")
     }
-    assert(e.getMessage.contains("mid-compaction"))
-    IndexStore.compact(spark, dir) // rolls forward, then re-compacts
-    val recovered = IndexStore.bm25TopK(spark, dir, queriesDf, "qid",
-      "qtext", k = 4).orderBy($"qid", $"rank").collect().toSeq
-    assert(recovered === before)
-  }
-
-  test("kill/replay drill: a compact crashed at EVERY commit-op " +
-      "boundary recovers to identical answers, never silent " +
-      "corruption") {
-    // commit sequence = 6 FS ops (4 renames + 2 old-copy deletes);
-    // for each boundary k: inject a crash after op k, verify the
-    // store either answers IDENTICALLY or fails LOUDLY, then replay
-    // compact() and verify full recovery with clean dirs
-    (1 to 6).foreach { k =>
-      val dir = Files.createTempDirectory(s"graft_idxkill$k").toString
-      val docs = corpus.toDF("id", "text")
-      IndexStore.create(spark, dir, docs.filter($"id" <= 3), "id",
-        "text")
-      IndexStore.append(spark, dir,
-        docs.filter($"id" === 4 || $"id" === 5), "id", "text", "b1")
-      IndexStore.append(spark, dir, docs.filter($"id" > 5), "id",
-        "text", "b2")
-      // every query runs in its OWN scope bracket: the store paths are
-      // rewritten under the same names between queries, and a
-      // session-cached plan over a dead generation would otherwise be
-      // hit by the NEXT read of the same path
-      def ask(): Seq[org.apache.spark.sql.Row] =
-        CacheScope.withScope { implicit sc =>
-          IndexStore.bm25TopK(spark, dir, queriesDf, "qid",
-            "qtext", k = 4).orderBy($"qid", $"rank").collect().toSeq
-        }
-      val before = ask()
-      val e = intercept[IllegalStateException] {
-        IndexStore.compactCrashing(spark, dir, "compacted", k)
-      }
-      assert(e.getMessage.contains(s"injected crash after commit op $k"),
-        s"boundary $k")
-      // crashed state: identical answers or a loud failure — never a
-      // silently wrong result
-      try {
-        assert(ask() === before, s"boundary $k answered WRONG")
-      } catch { case _: Exception => () /* loud is acceptable */ }
-      // replay: the next compact rolls forward / cleans up, and the
-      // store answers exactly as before with no leftover dirs
-      IndexStore.compact(spark, dir)
-      assert(ask() === before, s"boundary $k recovery")
-      Seq("postings_old", "stats_old", "postings_compacting",
-        "stats_compacting").foreach { leftover =>
-        assert(!new java.io.File(s"$dir/$leftover").exists(),
-          s"boundary $k left $leftover behind")
-      }
-      val batchDirs = new java.io.File(s"$dir/postings").listFiles()
-        .map(_.getName).filter(_.startsWith("b=")).toSeq
-      assert(batchDirs === Seq("b=compacted"), s"boundary $k dirs")
-    }
+    assert(e.getMessage.contains("retired"))
   }
 
   test("bucket pruning: a query's postings scan reads only the " +

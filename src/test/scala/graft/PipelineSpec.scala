@@ -50,6 +50,35 @@ class PipelineSpec extends SparkSpec {
     assert(new java.io.File(s"$root/extract/Archive").list().nonEmpty)
   }
 
+  test("a crash between the DW overwrite's delete and rename keeps all " +
+      "history: the next load rolls the staging copy forward") {
+    val root = Files.createTempDirectory("graft_pipe_crash").toString
+    val db1 = Pipelines.sourceLoad(spark, root, nFacts = 200,
+      dateId = 20240115)
+    Pipelines.extract(spark, db1, root)
+    val (dw1, _) = Pipelines.dwLoad(spark, db1, root,
+      s"$root/incoming/sales_snapshot")
+    val n1 = dw1.count()
+    val max1 = dw1.agg(max("fact_key")).head().getLong(0)
+    assert(n1 > 0 && max1 === n1)
+    // the crash state: the staging write finished and the live dir is
+    // deleted, but the rename never ran
+    val live = new java.io.File(s"$root/dw/fact_sales")
+    assert(live.renameTo(new java.io.File(s"$root/dw/fact_sales__staging")))
+    // next day: new facts only, so every incoming row is an INSERT
+    val db2 = Pipelines.sourceLoad(spark, root, nFacts = 150,
+      dateId = 20240116)
+    Pipelines.extract(spark, db2, root)
+    val (dw2, stats2) = Pipelines.dwLoad(spark, db2, root,
+      s"$root/incoming/sales_snapshot")
+    val inserts = stats2("inserts")
+    assert(inserts > 0 && stats2("updates") === 0)
+    assert(dw2.count() === n1 + inserts, "history dropped")
+    assert(dw2.agg(max("fact_key")).head().getLong(0) === max1 + inserts,
+      "fact_key restarted")
+    assert(!new java.io.File(s"$root/dw/fact_sales__staging").exists())
+  }
+
   test("FIXTURES §6: poison, retry, and snowflake-dim maintenance") {
     val root = Files.createTempDirectory("graft_pipe2").toString
     val db = Pipelines.sourceLoad(spark, root, nFacts = 200,

@@ -103,4 +103,16 @@ class PqCodesSpec extends SparkSpec {
       .orderBy("id").collect().map(_.getSeq[Int](1))
     assert(a.toSeq === b.toSeq)
   }
+
+  test("array<int> input fails analysis instead of decoding garbage") {
+    val mdl = trainModel()
+    import spark.implicits._
+    val ints = Seq((0L, Seq.tabulate(8)(t => t * 3))).toDF("id", "vec")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ints.select(Similarity.pqCodes(col("vec"), mdl)).collect()
+    }
+    assert(e.getMessage.contains(
+      "pq_codes requires array<float> or array<double>, got array<int>"),
+      e.getMessage)
+  }
 }

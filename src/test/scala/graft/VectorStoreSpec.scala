@@ -365,12 +365,18 @@ class VectorStoreSpec extends SparkSpec {
       .parquet(s"$dir/vectors/b=${tag.get}").columns.toSet
     assert(compactCols.contains("q") && compactCols.contains("scale")
       && !compactCols.contains("vec"), s"compact layout: $compactCols")
-    // appends keep working after compaction and a second compaction
-    // needs two new batches (one append alone is not compactable)
+    // appends keep working after compaction, and the next compaction
+    // FOLDS the live compact batch with the new one: at most one
+    // compact dir stays live however many compactions run
     val extra = odd.limit(5)
       .select((col("vec_id") + 9000L).as("vec_id"), col("embedding"))
     VectorStore.append(spark, dir, extra, "vec_id", "embedding", "b3")
-    assert(VectorStore.compact(spark, dir).isEmpty)
+    val tag2 = VectorStore.compact(spark, dir, vacuumAfter = true)
+    assert(tag2.exists(_.startsWith("compact-")) && tag2 != tag)
+    val compactDirs = new java.io.File(s"$dir/vectors").listFiles()
+      .map(_.getName).filter(_.startsWith("b=compact-")).toSeq
+    assert(compactDirs === Seq(s"b=${tag2.get}"),
+      s"live compact dirs must fold into one: $compactDirs")
     assert(spark.read.parquet(s"$dir/vectors")
       .select("id").distinct().count() === total + 5)
     // a RETIRED tag is a permanently-invisible name (filtered from
@@ -388,7 +394,7 @@ class VectorStoreSpec extends SparkSpec {
     // an orphan whose retry never landed (candidate set changed)
     // reclaims only under the explicit deleteOrphans flag
     org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/vectors/b=b3"), fs,
+      new org.apache.hadoop.fs.Path(s"$dir/vectors/b=${tag2.get}"), fs,
       new org.apache.hadoop.fs.Path(s"$dir/vectors/b=compact-stale"),
       false, spark.sparkContext.hadoopConfiguration)
     VectorStore.vacuum(spark, dir)
@@ -398,7 +404,8 @@ class VectorStoreSpec extends SparkSpec {
     VectorStore.vacuum(spark, dir, deleteOrphans = true)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/vectors/b=compact-stale")))
-    // orphan reclaim touched nothing live (b3's rows included)
+    // orphan reclaim touched nothing live (b3's rows, now in the live
+    // compact dir, included)
     assert(spark.read.parquet(s"$dir/vectors")
       .select("id").distinct().count() === total + 5)
   }
@@ -493,5 +500,34 @@ class VectorStoreSpec extends SparkSpec {
     val bad = stored.filter(size(col("codes")) =!= 4 ||
       exists(col("codes"), c => c < 0 || c >= 8)).count()
     assert(bad === 0L)
+  }
+
+  test("a qid carrying two different query vectors raises by name") {
+    import spark.implicits._
+    val r = new scala.util.Random(11)
+    val corpus = (1L to 40L).map(i => (i, Seq.fill(8)(r.nextDouble() - 0.5)))
+    val dir = java.nio.file.Files.createTempDirectory("vdupq").toString
+    VectorStore.create(spark, dir, corpus.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", nCells = 4, m = 4, ksub = 8, ivfIters = 2,
+      pqIters = 2)
+    // opposite vectors under one qid: at nprobe = 1 the second one can
+    // lose every probe slot to the first, and must still be caught
+    val v = corpus.head._2
+    val dup = Seq((7L, v), (7L, v.map(-_)), (8L, corpus(1)._2))
+      .toDF("qid", "qv")
+    def raisesFor7(query: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](query)
+      assert(e.getMessage.contains("qid(s) 7 map to more than one query " +
+        "vector"), e.getMessage)
+    }
+    raisesFor7(VectorStore.topK(spark, dir, dup, "qid", "qv", k = 3,
+      nprobe = 1))
+    raisesFor7(VectorStore.topKPq(spark, dir, dup, "qid", "qv", k = 3,
+      nprobe = 1, candidates = 5))
+    raisesFor7(VectorStore.recallAtK(spark, dir, dup, "qid", "qv", k = 3,
+      nprobe = 1))
+    // distinct qids still answer
+    assert(VectorStore.topK(spark, dir, dup.filter($"qid" === 8L), "qid",
+      "qv", k = 3, nprobe = 1).count() === 3L)
   }
 }
