@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions.col
 
 /** The one batch log behind every append-only persisted store
   * ([[SignatureStore]], [[VectorStore]], [[IndexStore]]): the paper's
-  * stage → MERGE → commit re-runnability (`load_fact_sales_dw.py`,
-  * see [[BucketedDw]]) written once, with the metadata commit kept
-  * apart from the columnar data as in Dremel's manifest log.
+  * stage → MERGE → commit re-runnability (`load_fact_sales_dw.py`, see
+  * [[Pipelines.loadIncoming]]) written once, with the metadata commit
+  * kept apart from the columnar data as in Dremel's manifest log.
   *
   * Layout under a store's `dir`, for each of its tables:
   *   <table>/b=<tag>/      — one batch; `seed` from create, any

@@ -12,14 +12,14 @@ import graft.operators.Dedup
   * The naive form anti-joins each batch against the WHOLE corpus, which
   * shuffles the corpus on content_hash every day — at 100 TB the
   * target-side exchange dwarfs the batch. Storing the corpus as a table
-  * bucketed by `content_hash` (same discipline as [[BucketedDw]] for the
-  * DW fact) makes the corpus scan report its hash partitioning, so the
-  * dedup anti-join co-locates: only the day's batch is exchanged, the
-  * corpus is read in place, and the append lands bucket-aligned. Total
-  * bytes moved per ingest is O(batch), not O(corpus).
+  * bucketed by `content_hash` makes the corpus scan report its hash
+  * partitioning, so the dedup anti-join co-locates: only the day's batch
+  * is exchanged, the corpus is read in place, and the append lands
+  * bucket-aligned. Total bytes moved per ingest is O(batch), not
+  * O(corpus).
   *
   * Bucket count: 32 locally; size for ~100-500 MB per bucket at target
-  * volume (100 TB → ~8192), matching the BucketedDw guidance.
+  * volume (100 TB → ~8192).
   */
 object CorpusStore {
 

@@ -18,7 +18,7 @@ import graft.validate._
   *   E1 sourceLoad   : generate dims + facts → parquet "source DB"
   *   E2 extract      : full fact dump (comma CSV, rotation) + 4-way
   *                     star-join snapshot (pipe CSV into incoming/)
-  *   E3 dwLoad       : incoming snapshot CSV → schema-resolve → clean →
+  *   E3 loadIncoming : incoming snapshot CSV → schema-resolve → clean →
   *                     resolve dim keys → classify changes → assign
   *                     surrogate keys → merge into the DW fact
   *   V10 validation  : per-table declarative contracts
@@ -96,8 +96,12 @@ object Pipelines {
   final case class Poison(reason: String) extends LoadOutcome
   final case class Retry(reason: String) extends LoadOutcome
 
-  /** Outcome-classified load: empty file → Poison; unresolvable schema →
-    * Poison; any empty dim → Retry; else run the 9-stage load. */
+  /** E3, the 9-stage fact loader (load_fact_sales_dw.py), with the
+    * reference's file-level outcomes: empty file → Poison; unresolvable
+    * schema → Poison; any empty dim → Retry. Otherwise the file read for
+    * those checks runs every stage: alias-resolve → clean → resolve the
+    * 4 dim keys → drop misses → classify INSERT/UPDATE vs the current DW
+    * state → assign surrogate keys → merge → overwrite. */
   def loadIncoming(spark: SparkSession, db: SourceDb, root: String,
       incomingPath: String): LoadOutcome = {
     val raw = CsvIO.readAllString(spark, incomingPath, sep = "|")
@@ -111,8 +115,78 @@ object Pipelines {
       .collect { case (n, d) if d.isEmpty => n }
     if (dimsEmpty.nonEmpty)
       return Retry(s"empty dims: ${dimsEmpty.mkString(", ")}")
-    val (facts, stats) = dwLoad(spark, db, root, incomingPath)
-    Loaded(facts, stats)
+    // stage 4: alias-tolerant schema resolution, all-string → cleaned
+    val resolved = SchemaMapper(raw, factLogicalCols)
+    // stage 5: dim-key resolution through normalized business keys
+    val keyed = DimResolver.resolveDimKeys(resolved, Seq(
+      DimLookup(db.stores, Seq("STORE_NAME"), Seq("store_name"),
+        "store_id", "STORE_KEY"),
+      DimLookup(db.products, Seq("PRODUCT_NAME"), Seq("product_name"),
+        "product_id", "PRODUCT_KEY",
+        fallback = Some(("PRODUCT_NAME", "product_name", "product_id"))),
+      DimLookup(db.distributors, Seq("DIST_NAME"), Seq("dist_name"),
+        "dist_id", "DIST_KEY"),
+      DimLookup(db.dates.withColumn("fd", col("full_date").cast("string")),
+        Seq("FULL_DATE"), Seq("fd"), "date_id", "DATE_ID")))
+    val misses = DimResolver.missCounts(keyed,
+      Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY", "DATE_ID"))
+    // stage 6: drop unresolved / unparseable rows (P5/P6)
+    val clean = keyed.na.drop(Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY",
+      "DATE_ID", "QUANTITY_SOLD", "NET_AMOUNT"))
+      .withColumn("natural_key", Cleansing.naturalKey(col("DATE_ID"),
+        col("STORE_KEY"), col("PRODUCT_KEY"), col("DIST_KEY")))
+    // the delta at DW schema minus fact_key, persisted: every later job
+    // would re-run the CSV read + schema map + dim joins + dedup otherwise
+    val incoming = Dedupe.dedupeByKey(clean, Seq("natural_key"),
+      Seq(col("SALES_ID")))
+      .select(col("natural_key"), col("DATE_ID").as("date_id"),
+        col("STORE_KEY").as("store_key"),
+        col("PRODUCT_KEY").as("product_key"),
+        col("DIST_KEY").as("dist_key"),
+        col("QUANTITY_SOLD").as("quantity_sold"),
+        col("SALES_UNIT_PRICE").cast("double").as("unit_price"),
+        col("GROSS_AMOUNT").cast("double").as("gross_amount"),
+        col("DISCOUNT_AMOUNT").cast("double").as("discount_amount"),
+        col("NET_AMOUNT").cast("double").as("net_amount"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // stage 7: classify vs current DW state
+      val dwPath = s"$root/dw/fact_sales"
+      val existing = loadOrEmpty(spark, dwPath, incoming.schema
+        .add("fact_key", LongType))
+      val tracked = Seq(TrackedCol("quantity_sold", Some(0.5)),
+        TrackedCol("unit_price", Some(0.01)),
+        TrackedCol("gross_amount", Some(0.01)),
+        TrackedCol("discount_amount", Some(0.01)),
+        TrackedCol("net_amount", Some(0.01)))
+      // natural_key is concat-built from non-null keys → plain equality;
+      // null-safe keys would make Catalyst repartition on coalesce/isnull
+      val classified = ChangeClassifier.classifyChanges(incoming,
+        existing.drop("fact_key"), Seq("natural_key"), tracked,
+        nullSafeKeys = false)
+      // stage 8: surrogate keys for the INSERT set only (W3's lesson)
+      val maxKey = SurrogateKeys.currentMax(existing, "fact_key")
+      val inserts = SurrogateKeys.assignSequential(
+        classified.filter(col("operation") === "INSERT"), "fact_key",
+        maxKey, Seq(col("natural_key")))
+      val updates = classified.filter(col("operation") === "UPDATE")
+        .join(existing.select("natural_key", "fact_key"), "natural_key")
+      val staged = inserts.unionByName(updates.select(inserts.columns
+        .map(col).toIndexedSeq: _*))
+      // stage 9: merge, committed by the atomic overwrite below
+      val merged = MergeInto.mergeInto(existing, staged, Seq("natural_key"),
+        incoming.columns.filterNot(c => c == "natural_key").toSeq,
+        opCol = Some("operation"), nullSafeKeys = false)
+      // one aggregate for both counts, over the rows the merge applies
+      val ops = staged.agg(
+        count(when(col("operation") === "INSERT", 1)),
+        count(when(col("operation") === "UPDATE", 1))).head()
+      val stats = Map("incoming" -> incoming.count(),
+        "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++
+        misses.map { case (k, v) => s"miss_$k" -> v }
+      overwriteParquet(spark, merged, dwPath)
+      Loaded(spark.read.parquet(dwPath), stats)
+    } finally incoming.unpersist()
   }
 
   /** Alias-tolerant logical schema of the incoming snapshot (FIXTURES
@@ -145,105 +219,6 @@ object Pipelines {
     LogicalCol("NET_AMOUNT", aliases = Seq("NET_SALES", "NET"),
       clean = Some(Cleansing.cleanNumeric),
       targetType = Some(DecimalType(12, 2))))
-
-  /** Stages 4-6 of the fact loader, shared by the parquet-path and
-    * bucketed-table variants: read incoming CSV → alias-resolve → clean →
-    * resolve the 4 dim keys → drop misses → dedupe to the fact grain.
-    * Returns (incoming delta at DW schema minus fact_key, miss counters).
-    */
-  def prepareIncoming(spark: SparkSession, db: SourceDb,
-      incomingPath: String): (DataFrame, Map[String, Long]) = {
-    val raw = CsvIO.readAllString(spark, incomingPath, sep = "|")
-    // stage 4: alias-tolerant schema resolution, all-string → cleaned
-    val resolved = SchemaMapper(raw, factLogicalCols)
-    // stage 5: dim-key resolution through normalized business keys
-    val keyed = DimResolver.resolveDimKeys(resolved, Seq(
-      DimLookup(db.stores, Seq("STORE_NAME"), Seq("store_name"),
-        "store_id", "STORE_KEY"),
-      DimLookup(db.products, Seq("PRODUCT_NAME"), Seq("product_name"),
-        "product_id", "PRODUCT_KEY",
-        fallback = Some(("PRODUCT_NAME", "product_name", "product_id"))),
-      DimLookup(db.distributors, Seq("DIST_NAME"), Seq("dist_name"),
-        "dist_id", "DIST_KEY"),
-      DimLookup(db.dates.withColumn("fd", col("full_date").cast("string")),
-        Seq("FULL_DATE"), Seq("fd"), "date_id", "DATE_ID")))
-    val misses = DimResolver.missCounts(keyed,
-      Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY", "DATE_ID"))
-    // stage 6: drop unresolved / unparseable rows (P5/P6)
-    val clean = keyed.na.drop(Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY",
-      "DATE_ID", "QUANTITY_SOLD", "NET_AMOUNT"))
-      .withColumn("natural_key", Cleansing.naturalKey(col("DATE_ID"),
-        col("STORE_KEY"), col("PRODUCT_KEY"), col("DIST_KEY")))
-    val incoming = Dedupe.dedupeByKey(clean, Seq("natural_key"),
-      Seq(col("SALES_ID")))
-      .select(col("natural_key"), col("DATE_ID").as("date_id"),
-        col("STORE_KEY").as("store_key"),
-        col("PRODUCT_KEY").as("product_key"),
-        col("DIST_KEY").as("dist_key"),
-        col("QUANTITY_SOLD").as("quantity_sold"),
-        col("SALES_UNIT_PRICE").cast("double").as("unit_price"),
-        col("GROSS_AMOUNT").cast("double").as("gross_amount"),
-        col("DISCOUNT_AMOUNT").cast("double").as("discount_amount"),
-        col("NET_AMOUNT").cast("double").as("net_amount"))
-    (incoming, misses)
-  }
-
-  /** The 9-stage fact loader (load_fact_sales_dw.py): read incoming →
-    * alias-resolve → clean → resolve the 4 dim keys → drop misses →
-    * classify INSERT/UPDATE vs the current DW state → assign surrogate
-    * keys → merge → overwrite. Returns (newDwFacts, stats). */
-  def dwLoad(spark: SparkSession, db: SourceDb, root: String,
-      incomingPath: String): (DataFrame, Map[String, Long]) = {
-    val (incoming0, misses) = prepareIncoming(spark, db, incomingPath)
-    // four downstream actions (stats ×3 + the merge write) would each
-    // re-run the CSV read + schema map + dim joins + dedup otherwise
-    val incoming = incoming0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // stage 7: classify vs current DW state
-      val dwPath = s"$root/dw/fact_sales"
-      val existing = loadOrEmpty(spark, dwPath, incoming.schema
-        .add("fact_key", LongType))
-      val (merged, inserts, updates) = stageAndMerge(incoming, existing)
-      val stats = Map(
-        "incoming" -> incoming.count(),
-        "inserts" -> inserts.count(), "updates" -> updates.count()) ++
-        misses.map { case (k, v) => s"miss_$k" -> v }
-      overwriteParquet(spark, merged, dwPath)
-      (spark.read.parquet(dwPath), stats)
-    } finally incoming.unpersist()
-  }
-
-  /** Stages 7-9 minus the write: classify INSERT/UPDATE vs `existing`
-    * (which must carry `fact_key`), assign surrogate keys to the INSERT
-    * set only (W3's lesson), merge. Returns (merged, inserts, updates). */
-  def stageAndMerge(incoming: DataFrame,
-      existing: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val tracked = Seq(TrackedCol("quantity_sold", Some(0.5)),
-      TrackedCol("unit_price", Some(0.01)),
-      TrackedCol("gross_amount", Some(0.01)),
-      TrackedCol("discount_amount", Some(0.01)),
-      TrackedCol("net_amount", Some(0.01)))
-    // natural_key is concat-built from non-null keys → plain equality,
-    // which keeps a bucketed `existing` co-located (no target shuffle)
-    val staged0 = ChangeClassifier.classifyChanges(incoming,
-      existing.drop("fact_key"), Seq("natural_key"), tracked,
-      nullSafeKeys = false)
-    // stage 8: surrogate keys for the INSERT set only (W3's lesson)
-    val maxKey = SurrogateKeys.currentMax(existing, "fact_key")
-    val inserts = SurrogateKeys.assignSequential(
-      staged0.filter(col("operation") === "INSERT"), "fact_key", maxKey,
-      Seq(col("natural_key")))
-    val updates = staged0.filter(col("operation") === "UPDATE")
-      .join(existing.select("natural_key", "fact_key"), "natural_key")
-    val staged = inserts.unionByName(updates.select(inserts.columns
-      .map(col).toIndexedSeq: _*))
-    // stage 9: merge (caller owns the atomic write/swap)
-    val merged = MergeInto.mergeInto(existing, staged, Seq("natural_key"),
-      incoming.columns.filterNot(c => c == "natural_key").toSeq,
-      opCol = Some("operation"), nullSafeKeys = false)
-    (merged, inserts, updates)
-  }
 
   /** Snowflake lookup-dim maintenance (target_dw's dim_category /
     * dim_sub_category / dim_manufacturer): distinct incoming values

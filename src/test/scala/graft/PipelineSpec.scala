@@ -9,6 +9,13 @@ import java.nio.file.Files
   * re-running the same file is a no-op). */
 class PipelineSpec extends SparkSpec {
 
+  private def load(db: Pipelines.SourceDb, root: String): Pipelines.Loaded =
+    Pipelines.loadIncoming(spark, db, root,
+      s"$root/incoming/sales_snapshot") match {
+      case l: Pipelines.Loaded => l
+      case other => fail(s"expected Loaded, got $other")
+    }
+
   test("E1→E2→E3→V10 end-to-end, then idempotent re-run") {
     val root = Files.createTempDirectory("graft_pipe").toString
     // E1: source load
@@ -23,8 +30,7 @@ class PipelineSpec extends SparkSpec {
     assert(new java.io.File(s"$root/incoming/sales_snapshot").exists())
 
     // E3: DW load from the incoming file
-    val (dw1, stats1) = Pipelines.dwLoad(spark, db, root,
-      s"$root/incoming/sales_snapshot")
+    val Pipelines.Loaded(dw1, stats1) = load(db, root)
     assert(stats1("inserts") > 0)
     assert(stats1("updates") === 0)           // first load: all inserts
     assert(stats1("miss_STORE_KEY") === 0)    // every key resolves
@@ -35,8 +41,7 @@ class PipelineSpec extends SparkSpec {
     assert(keys.toSeq === (1L to keys.length))
 
     // idempotence: same file again → zero inserts, zero updates
-    val (dw2, stats2) = Pipelines.dwLoad(spark, db, root,
-      s"$root/incoming/sales_snapshot")
+    val Pipelines.Loaded(dw2, stats2) = load(db, root)
     assert(stats2("inserts") === 0 && stats2("updates") === 0)
     assert(dw2.count() === dw1Count)
 
@@ -56,8 +61,7 @@ class PipelineSpec extends SparkSpec {
     val db1 = Pipelines.sourceLoad(spark, root, nFacts = 200,
       dateId = 20240115)
     Pipelines.extract(spark, db1, root)
-    val (dw1, _) = Pipelines.dwLoad(spark, db1, root,
-      s"$root/incoming/sales_snapshot")
+    val dw1 = load(db1, root).facts
     val n1 = dw1.count()
     val max1 = dw1.agg(max("fact_key")).head().getLong(0)
     assert(n1 > 0 && max1 === n1)
@@ -69,14 +73,57 @@ class PipelineSpec extends SparkSpec {
     val db2 = Pipelines.sourceLoad(spark, root, nFacts = 150,
       dateId = 20240116)
     Pipelines.extract(spark, db2, root)
-    val (dw2, stats2) = Pipelines.dwLoad(spark, db2, root,
-      s"$root/incoming/sales_snapshot")
+    val Pipelines.Loaded(dw2, stats2) = load(db2, root)
     val inserts = stats2("inserts")
     assert(inserts > 0 && stats2("updates") === 0)
     assert(dw2.count() === n1 + inserts, "history dropped")
     assert(dw2.agg(max("fact_key")).head().getLong(0) === max1 + inserts,
       "fact_key restarted")
     assert(!new java.io.File(s"$root/dw/fact_sales__staging").exists())
+  }
+
+  test("re-sent facts with changed amounts load as UPDATEs in place") {
+    val root = Files.createTempDirectory("graft_pipe_upd").toString
+    val db = Pipelines.sourceLoad(spark, root, nFacts = 300,
+      dateId = 20240115)
+    Pipelines.extract(spark, db, root)
+    val before = load(db, root).facts.select("natural_key", "fact_key")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // re-send k facts the DW kept (lowest sales id of their natural key)
+    // with a larger quantity and amounts
+    val key = Seq("date_id", "store_id", "product_id", "dist_id")
+    val kept = db.facts.groupBy(key.map(col): _*)
+      .agg(min("sales_id").as("sales_id")).select("sales_id")
+    val k = 25
+    val bump = col("sales_id") % 3 + 1
+    def plus(c: String) = (col(c) + bump * col("unit_price"))
+      .cast(db.facts.schema(c).dataType)
+    val resent = db.facts.join(kept.orderBy("sales_id").limit(k), "sales_id")
+      .withColumn("quantity_sold", col("quantity_sold") + bump)
+      .withColumn("gross_amount", plus("gross_amount"))
+      .withColumn("net_amount", plus("net_amount"))
+    Pipelines.extract(spark, db.copy(facts = resent), root)
+    val Pipelines.Loaded(dw, stats) = load(db, root)
+    assert(stats("updates") === k)
+    assert(stats("inserts") === 0)
+    assert(dw.count() === before.size)
+    val got = dw.join(resent.select(col("date_id"),
+        col("store_id").as("store_key"), col("product_id").as("product_key"),
+        col("dist_id").as("dist_key"), col("quantity_sold").as("q"),
+        col("gross_amount").cast("double").as("g"),
+        col("net_amount").cast("double").as("n")),
+        Seq("date_id", "store_key", "product_key", "dist_key"))
+      .collect()
+    assert(got.length === k)
+    got.foreach { r =>
+      val nk = r.getAs[String]("natural_key")
+      assert(r.getAs[Long]("fact_key") === before(nk), s"fact_key of $nk")
+      assert(r.getAs[Long]("quantity_sold") === r.getAs[Long]("q"))
+      assert(math.abs(r.getAs[Double]("gross_amount") -
+        r.getAs[Double]("g")) < 0.01)
+      assert(math.abs(r.getAs[Double]("net_amount") -
+        r.getAs[Double]("n")) < 0.01)
+    }
   }
 
   test("FIXTURES §6: poison, retry, and snowflake-dim maintenance") {
