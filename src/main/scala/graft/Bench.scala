@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
@@ -27,36 +27,6 @@ import org.apache.spark.sql.SparkSession
   * drift self-evident.
   */
 object Bench {
-
-  /** Per-task-metric accumulator; gates are timed sequentially, so a
-    * drain + snapshot-diff around each gate attributes its tasks. */
-  private final class GateMetrics
-      extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val runMs = new AtomicLong; val gcMs = new AtomicLong
-    val inB = new AtomicLong; val outB = new AtomicLong
-    val shufRB = new AtomicLong; val shufWB = new AtomicLong
-    val spillB = new AtomicLong; val tasks = new AtomicLong
-    val peakMem = new AtomicLong // reset per gate (max, not additive)
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        inB.addAndGet(m.inputMetrics.bytesRead)
-        outB.addAndGet(m.outputMetrics.bytesWritten)
-        shufRB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        peakMem.updateAndGet(p => math.max(p, m.peakExecutionMemory))
-        tasks.incrementAndGet()
-        ()
-      }
-    }
-    def counters(): Seq[Long] = Seq(runMs.get, gcMs.get, inB.get,
-      outB.get, shufRB.get, shufWB.get, spillB.get, tasks.get)
-  }
 
   /** Scoped log silencing (the r12 advice): deny exactly the two
     * benign, by-design warning families by MESSAGE PATTERN instead of
@@ -90,21 +60,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the driver contract is local[32] (builder prompt); honor an
     // explicit override but never default below it
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      // the stores' bucket-partitioned dirs cross the 32-path default,
-      // and each distributed-listing JOB costs ~140 ms against a local
-      // FS the driver lists in microseconds; keep distributed listing
-      // for genuinely wide object-store tables (the production case)
-      // by raising, not disabling, the threshold
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Two known-benign warning families would otherwise dominate the
     // artifact's stderr tail (the r10 "warning-free tail" ask):
@@ -160,7 +117,7 @@ object Bench {
     // NORMALIZED totals and machine drift cancels out of them.
     def calibOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, 2000000000L, 1, cpus.toInt)
+      spark.range(0, 2000000000L, 1, cpus)
         .selectExpr("sum(id * 2 + 1)").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -181,7 +138,7 @@ object Bench {
     // committed cost in BOTH official runs while the CPU calib read
     // QUIET. This probe names that resource. Sized to heap/4 capped at
     // 4 GiB so it fits the default 8g driver; unpersisted immediately.
-    val bwParts = cpus.toInt
+    val bwParts = cpus
     val bwBytes = math.min(4L << 30, Runtime.getRuntime.maxMemory / 4)
     val bwLongsPerPart = (bwBytes / bwParts / 8L).toInt
     def bwProbe(): (Double, Double) = {
@@ -362,10 +319,11 @@ object Bench {
     }.mkString("{", ",", "}")
     def mb(v: Long): String = f"${v / 1048576.0}%.1f"
     val gmJson = gateMetrics.map { case (k, m) =>
-      val Seq(run, gc, in, out, sr, sw, sp, nt, peak) = m: @unchecked
+      val Seq(run, gc, in, out, sr, sw, spMem, spDisk, nt, peak) =
+        m: @unchecked
       "\"" + k + s"""\":{"run_ms":$run,"gc_ms":$gc,"in_mb":${mb(in)},""" +
         s""""out_mb":${mb(out)},"shuf_r_mb":${mb(sr)},""" +
-        s""""shuf_w_mb":${mb(sw)},"spill_mb":${mb(sp)},""" +
+        s""""shuf_w_mb":${mb(sw)},"spill_mb":${mb(spMem + spDisk)},""" +
         s""""peak_exec_mb":${mb(peak)},"tasks":$nt}"""
     }.mkString("{", ",", "}")
     val maxSpread = rawRuns.values
@@ -402,16 +360,13 @@ object Bench {
     // regression (run_ms up with it) at a glance. Gates under 0.25 s
     // are exempt (scheduling-floor noise dominates them).
     val (anchorRatioJson, anchorFlagsJson) = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_anchor.json")), "UTF-8")
-      def numMap(section: String): Map[String, Double] = {
-        val m = (s"""\"$section\":\\{([^}]*)\\}""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse(""))
-        """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(m)
-          .map(g => g.group(1) -> g.group(2).toDouble).toMap
-      }
-      val aCalib = """"calib_sec":([0-9.]+)""".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble).getOrElse(CalibRef)
+      val anchor = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File("bench_anchor.json"))
+      def numMap(section: String): Map[String, Double] =
+        anchor.path(section).properties.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toMap
+      val aCalib = Option(anchor.get("calib_sec")).map(_.asDouble)
+        .getOrElse(CalibRef)
       val aQs = numMap("queries")
       val aRun = numMap("run_ms")
       val ratios = results.collect {

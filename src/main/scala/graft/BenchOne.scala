@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -61,21 +60,9 @@ object BenchOne {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      // the stores' bucket-partitioned dirs cross the 32-path default,
-      // and each distributed-listing JOB costs ~140 ms against a local
-      // FS the driver lists in microseconds; keep distributed listing
-      // for genuinely wide object-store tables (the production case)
-      // by raising, not disabling, the threshold
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.ui.enabled", "false")
+    val b0 = GraftSession.builder(cpus)
     // A/B seams for config experiments (comma-separated k=v pairs)
     val b1 = sys.env.get("SPARK_GRAFT_CONF").map(_.split(',').toSeq)
       .getOrElse(Nil).filter(_.contains('='))

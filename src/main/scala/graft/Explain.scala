@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop plan inspector: print the formatted physical plan of one or
   * more SparkEntry queries without executing them.
   * Usage: runMain graft.Explain <sfDir> <name> [<name> ...]
@@ -12,19 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val names = args.drop(1).toSeq
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      // the stores' bucket-partitioned dirs cross the 32-path default,
-      // and each distributed-listing JOB costs ~140 ms against a local
-      // FS the driver lists in microseconds; keep distributed listing
-      // for genuinely wide object-store tables (the production case)
-      // by raising, not disabling, the threshold
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(8)
+      .config("spark.sql.adaptive.enabled", aqe).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"==== $name ====")

@@ -52,16 +52,11 @@ object Stress {
     // execution-memory slice at the same heap; a real cluster tunes
     // this via AQE coalescing from an over-partitioned start, which is
     // exactly what this emulates.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val shufflePartitions = sys.env.getOrElse("STRESS_SHUFFLE",
-      (cpus.toInt * 4).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      (cpus * 4).toString)
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .config("spark.local.dir", dir + "/spill")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -70,35 +65,22 @@ object Stress {
     // when the parquet exists)
     val only = sys.env.get("STRESS_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // spill telemetry: cumulative task-level spill bytes, snapshotted
-    // per step — the direct evidence that a memory-pressured stage
-    // degraded to disk instead of OOMing (the 100 TB failure mode that
-    // matters). memoryBytesSpilled counts the in-memory size of data
-    // forced out; diskBytesSpilled its serialized on-disk size.
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            spillMem.addAndGet(m.memoryBytesSpilled)
-            spillDisk.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
+    // spill telemetry, snapshotted per step — the direct evidence that
+    // a memory-pressured stage degraded to disk instead of OOMing (the
+    // 100 TB failure mode that matters)
+    val metrics = new GateMetrics
+    spark.sparkContext.addSparkListener(metrics)
     val results = scala.collection.mutable.LinkedHashMap[String, String]()
     def step(name: String)(body: => Seq[(String, Any)]): Unit = {
       if (name != "generate" && !only.forall(_.contains(name))) return
       val t0 = System.nanoTime()
-      val (sm0, sd0) = (spillMem.get(), spillDisk.get())
+      val (sm0, sd0) = (metrics.spillMemB.get, metrics.spillDiskB.get)
       val kv = body
       val secs = (System.nanoTime() - t0) / 1e9
       val line = j((Seq("step" -> name, "secs" -> secs,
         "heap_mb" -> heapMb(),
-        "spill_mem_mb" -> (spillMem.get() - sm0) / (1024 * 1024),
-        "spill_disk_mb" -> (spillDisk.get() - sd0) / (1024 * 1024))
+        "spill_mem_mb" -> (metrics.spillMemB.get - sm0) / (1024 * 1024),
+        "spill_disk_mb" -> (metrics.spillDiskB.get - sd0) / (1024 * 1024))
         ++ kv): _*)
       results(name) = line
       println(s"STRESS $line")

@@ -132,10 +132,11 @@ object Tables {
     * whatever the footer delivers instead of assuming one physical type:
     *
     *  - TIMESTAMP(NANOS): Spark rejects it outright (PARQUET_TYPE_ILLEGAL),
-    *    so we read nanos as long (`nanosAsLong` conf) and convert with
-    *    integer division — `div`, not `/`, because double division loses
-    *    precision above 2^53 ns. DuckDB's TIMESTAMP_NS→TIMESTAMP cast
-    *    truncates identically.
+    *    so it is read as long (the `nanosAsLong` conf, which the session
+    *    recipe `GraftSession.builder` sets; this loader never sets it)
+    *    and converted with integer division — `div`, not `/`, because
+    *    double division loses precision above 2^53 ns. DuckDB's
+    *    TIMESTAMP_NS→TIMESTAMP cast truncates identically.
     *  - timestamp[us] with isAdjustedToUTC=false: arrives as TIMESTAMP_NTZ;
     *    cast to the session-zone TimestampType (identity under the UTC
     *    session zone every entrypoint sets) so downstream code and the
@@ -143,13 +144,6 @@ object Tables {
     *  - timestamp[us] adjusted to UTC: already TimestampType, pass through.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // entrypoints set this at session build; only fall back to a session
-    // mutation when a caller-supplied session lacks it (check-first so a
-    // long-lived session isn't re-mutated on every call — a concurrent
-    // reader of the conf should never observe churn)
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    if (s.conf.getOption(nanosKey).forall(_ != "true"))
-      s.conf.set(nanosKey, "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>
@@ -165,10 +159,8 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Name-dispatched loader that routes through the TYPED readers —
-    * `load("events")` without the nanosAsLong conf throws
-    * PARQUET_TYPE_ILLEGAL (this was the bench warm-up's anonymous
-    * aborted-job stack in rounds 5-6). */
+  /** Name-dispatched loader that routes through the TYPED readers, so
+    * events.ts arrives as a timestamp whatever its physical type. */
   def table(s: SparkSession, d: String, name: String): DataFrame =
     name match {
       case "events" => events(s, d)

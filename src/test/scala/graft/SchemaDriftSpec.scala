@@ -77,4 +77,25 @@ class SchemaDriftSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("column 'ts' expected timestamp"))
   }
+
+  test("events loader reads the recipe's conf and never changes it") {
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val spark2 = spark.newSession()
+    spark2.conf.set(nanosKey, "false")
+    // the sf0.001 events.ts is timestamp[us]: no conf needed to read it
+    val df = Tables.events(spark2, "/root/testdata/sf0.001")
+    assert(df.schema("ts").dataType ===
+      org.apache.spark.sql.types.TimestampType)
+    assert(spark2.conf.get(nanosKey) === "false")
+  }
+
+  test("the test session is built from the GraftSession recipe") {
+    val conf = SparkSpec.session.conf
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(conf.get(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold") === "512")
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.extensions")
+      .contains("graft.sql.GraftExtensions"))
+  }
 }
