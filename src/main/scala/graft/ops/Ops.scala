@@ -112,10 +112,9 @@ object ChangeClassifier {
     * `nullSafeKeys` (default true) matches the reference's pandas-dict
     * probe, where None components of a composite key DO match (product bk
     * includes nullable `size`). Pass false when every bk column is
-    * provably non-null (e.g. the fact's concat-built natural_key):
-    * Catalyst rewrites `<=>` joins to hash on `coalesce(k,''),isnull(k)`,
-    * which disqualifies a bucketed `existing` from co-located scans —
-    * plain `===` keeps the bucket layout and the target side unshuffled.
+    * provably non-null (e.g. the fact's concat-built natural_key): plain
+    * `===` is Oracle's `MERGE ON` equality, and Catalyst rewrites `<=>`
+    * joins to hash on `coalesce(k,''),isnull(k)`.
     */
   def classifyChanges(incoming: DataFrame, existing: DataFrame,
       bk: Seq[String], tracked: Seq[TrackedCol],
@@ -201,58 +200,106 @@ object SurrogateKeys {
 
 object MergeInto {
 
-  /** MERGE re-expressed as a full-outer join + column-wise coalesce:
-    * matched rows take the staged values, unmatched-target rows pass
-    * through, unmatched-staged rows insert. `updateCols` limits which
-    * columns a match overwrites (WHEN MATCHED UPDATE SET list); an
-    * optional `opCol` guard replays the reference's operation-tag
-    * discipline (update only rows tagged UPDATE, insert only INSERT —
-    * load_fact_sales_dw.py:390-418).
+  /** One WHEN action of a MERGE. Conditions and values are Columns over
+    * the target and source aliases; `None` values mean `SET *` /
+    * `INSERT *`. Assignments match target columns case-insensitively. */
+  sealed trait Clause { def condition: Option[Column] }
+  final case class Update(condition: Option[Column] = None,
+      set: Option[Seq[(String, Column)]] = None) extends Clause
+  final case class Delete(condition: Option[Column] = None) extends Clause
+  final case class Insert(condition: Option[Column] = None,
+      values: Option[Seq[(String, Column)]] = None) extends Clause
+
+  /** The one MERGE planner, shared by [[mergeInto]] and SQL `MERGE INTO`
+    * ([[graft.sql.GraftMergeCommand]]): a full-outer join on `on`, with
+    * presence markers telling matched, target-only and source-only rows
+    * apart (a null key cannot). Within each WHEN group the first clause
+    * whose condition holds fires; no clause firing keeps a matched or
+    * target-only row and drops a source-only one. Every output column is
+    * cast to the target's type.
     *
     * The result must be atomically swapped in by the caller (overwrite a
     * parquet/table location) — same re-runnability contract as the
-    * reference's staging + MERGE + commit.
-    *
-    * Scale: one shuffle of both sides on the key (sort-merge). With a
-    * bucketed/partitioned target AND `nullSafeKeys=false`, Spark
-    * co-locates and the exchange on the target side disappears
-    * (see [[ChangeClassifier.classifyChanges]] — `<=>` defeats bucket
-    * co-location; Oracle's `MERGE ON (t.k = s.k)` is plain equality
-    * anyway, so false is also the reference-faithful setting). AQE
-    * handles staged-side skew.
-    */
+    * reference's staging + MERGE + commit. Scale: one shuffle of both
+    * sides on the key (sort-merge); AQE handles source-side skew. As with
+    * SQL MERGE, the source must be unique on the join keys. */
+  def merge(target: DataFrame, tAlias: String, source: DataFrame,
+      sAlias: String, on: Column, matched: Seq[Clause],
+      notMatched: Seq[Clause], bySource: Seq[Clause]): DataFrame = {
+    val t = target.withColumn("__t_present", lit(true)).alias(tAlias)
+    val s = source.withColumn("__s_present", lit(true)).alias(sAlias)
+    val joined = t.join(s, on, "full_outer")
+
+    val tPresent = col(s"$tAlias.__t_present").isNotNull
+    val sPresent = col(s"$sAlias.__s_present").isNotNull
+    val isMatched = tPresent && sPresent
+    val tOnly = tPresent && !sPresent
+
+    // index of the first clause whose condition holds; -1 = none fired
+    def firstIdx(clauses: Seq[Clause]): Column =
+      clauses.zipWithIndex.foldRight(lit(-1)) { case ((c, i), els) =>
+        when(c.condition.getOrElse(lit(true)), lit(i)).otherwise(els)
+      }
+    val mAct = firstIdx(matched)
+    val iAct = firstIdx(notMatched)
+    val bAct = firstIdx(bySource)
+
+    def deletes(clauses: Seq[Clause], act: Column): Column = {
+      val idxs = clauses.zipWithIndex.collect { case (_: Delete, i) => i }
+      if (idxs.isEmpty) lit(false) else act.isin(idxs: _*)
+    }
+    val dropRow = (isMatched && deletes(matched, mAct)) ||
+      (!tPresent && iAct === -1) || (tOnly && deletes(bySource, bAct))
+
+    // per-column value: fold the group into a when-chain keyed by the
+    // fired clause (deleted rows are filtered, so any value does)
+    def chain(clauses: Seq[Clause], act: Column, c: String,
+        default: Column, star: Column): Column = {
+      def assigned(kvs: Seq[(String, Column)]): Column =
+        kvs.find(_._1.equalsIgnoreCase(c)).map(_._2).getOrElse(default)
+      clauses.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
+        val v = cl match {
+          case Update(_, None) | Insert(_, None) => Some(star)
+          case Update(_, Some(kvs)) => Some(assigned(kvs))
+          case Insert(_, Some(kvs)) => Some(assigned(kvs))
+          case _: Delete => None
+        }
+        v.fold(els)(when(act === i, _).otherwise(els))
+      }
+    }
+
+    val outCols = target.schema.fields.map { f =>
+      val tCol = col(s"$tAlias.${f.name}")
+      val sCol = col(s"$sAlias.${f.name}")
+      when(isMatched, chain(matched, mAct, f.name, tCol, sCol))
+        .when(tOnly, chain(bySource, bAct, f.name, tCol, tCol))
+        .otherwise(chain(notMatched, iAct, f.name, lit(null), sCol))
+        .cast(f.dataType).as(f.name)
+    }
+    joined.filter(!dropRow).select(outCols.toIndexedSeq: _*)
+  }
+
+  /** The reference's fact/dim MERGE (load_fact_sales_dw.py:390-418):
+    * `WHEN MATCHED AND s.op = 'UPDATE' THEN UPDATE SET updateCols WHEN
+    * NOT MATCHED AND s.op = 'INSERT' THEN INSERT *`, on `onKeys`.
+    * `nullSafeKeys` (default true) joins with `<=>`, so null key
+    * components match as in the reference's pandas-dict probe; false
+    * joins with plain `=` like Oracle's `MERGE ON` and keeps Catalyst
+    * from hashing on `coalesce`/`isnull`. The unguarded form is SQL
+    * `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`. */
   def mergeInto(target: DataFrame, staged: DataFrame, onKeys: Seq[String],
-      updateCols: Seq[String], opCol: Option[String] = None,
+      updateCols: Seq[String], opCol: String,
       nullSafeKeys: Boolean = true): DataFrame = {
-    val t = target.alias("t")
-    val s = staged.alias("s")
-    val cond = onKeys.map { k =>
+    val on = onKeys.map { k =>
       if (nullSafeKeys) col(s"t.$k") <=> col(s"s.$k")
       else col(s"t.$k") === col(s"s.$k")
     }.reduce(_ && _)
-    val joined0 = t.join(s, cond, "full_outer")
-    // NOT MATCHED + op != 'INSERT' rows are dropped (the reference's
-    // WHEN NOT MATCHED ... WHERE op='INSERT' guard).
-    val joined = opCol match {
-      case Some(op) => joined0.filter(
-        col(s"t.${onKeys.head}").isNotNull ||
-          col(s"s.$op") === "INSERT")
-      case None => joined0
-    }
-    val sUpdates = opCol match {
-      case Some(op) => col(s"s.${onKeys.head}").isNotNull &&
-        (col(s"s.$op") === "UPDATE" || col(s"t.${onKeys.head}").isNull)
-      case None => col(s"s.${onKeys.head}").isNotNull
-    }
-    val outCols = target.columns.map { c =>
-      val fromS = col(s"s.$c")
-      val fromT = col(s"t.$c")
-      if (onKeys.contains(c)) coalesce(fromT, fromS).as(c)
-      else if (updateCols.contains(c))
-        when(sUpdates, fromS).otherwise(fromT).as(c)
-      else coalesce(fromT, fromS).as(c)
-    }
-    joined.select(outCols.toIndexedSeq: _*)
+    val op = col(s"s.$opCol")
+    merge(target, "t", staged, "s", on,
+      matched = Seq(Update(Some(op === "UPDATE"),
+        Some(updateCols.map(c => c -> col(s"s.$c"))))),
+      notMatched = Seq(Insert(Some(op === "INSERT"))),
+      bySource = Nil)
   }
 }
 

@@ -169,14 +169,15 @@ object Pipelines {
       val inserts = SurrogateKeys.assignSequential(
         classified.filter(col("operation") === "INSERT"), "fact_key",
         maxKey, Seq(col("natural_key")))
+      // a matched UPDATE keeps the target's fact_key (not in the SET list)
       val updates = classified.filter(col("operation") === "UPDATE")
-        .join(existing.select("natural_key", "fact_key"), "natural_key")
+        .withColumn("fact_key", lit(null).cast(LongType))
       val staged = inserts.unionByName(updates.select(inserts.columns
         .map(col).toIndexedSeq: _*))
       // stage 9: merge, committed by the atomic overwrite below
       val merged = MergeInto.mergeInto(existing, staged, Seq("natural_key"),
         incoming.columns.filterNot(c => c == "natural_key").toSeq,
-        opCol = Some("operation"), nullSafeKeys = false)
+        "operation", nullSafeKeys = false)
       // one aggregate for both counts, over the rows the merge applies
       val ops = staged.agg(
         count(when(col("operation") === "INSERT", 1)),

@@ -56,7 +56,7 @@ object OpsQueries {
         incomingParts(p), existingParts(p), Seq("bk"),
         Seq(TrackedCol("name"), TrackedCol("price", Some(0.01))))
       MergeInto.mergeInto(existingParts(p), staged, Seq("bk"),
-        Seq("name", "price"), opCol = Some("operation"))
+        Seq("name", "price"), "operation")
         .orderBy(col("bk"))
     }),
 

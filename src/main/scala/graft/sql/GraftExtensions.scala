@@ -13,8 +13,7 @@ import graft.expressions.{CosineSim, FreqSketch, HyperplaneBuckets, MinHashSig, 
   * a library: users add
   * `spark.sql.extensions=graft.sql.GraftExtensions` and every session in
   * the cluster gets the native functions and optimizer rules with no
-  * per-session registration call (unlike [[SqlSurface.registerFunctions]],
-  * which is session-local and imperative).
+  * per-session registration call.
   *
   * Injects:
   *  - the native expressions as SQL functions (`minhash_sig`,

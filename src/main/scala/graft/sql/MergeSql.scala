@@ -3,13 +3,13 @@ package graft.sql
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
-import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
+import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.ops.MergeInto
 
 /** `MERGE INTO` SQL for plain (v1 parquet) tables.
   *
@@ -20,19 +20,17 @@ import org.apache.spark.sql.functions._
   * execution requires a `SupportsRowLevelOperations` v2 table, which
   * parquet is not — so [[GraftSqlParser]] (injected via
   * `spark.sql.extensions`) rewrites the freshly parsed, fully unresolved
-  * [[MergeIntoTable]] into [[GraftMergeCommand]], which executes the
-  * same full-outer-join merge as [[graft.ops.MergeInto]] and swaps the
-  * result in atomically (staging table + DROP + RENAME), preserving the
-  * target's bucketing layout.
+  * [[MergeIntoTable]] into [[GraftMergeCommand]], which translates the
+  * WHEN actions into clauses for the one MERGE planner,
+  * [[graft.ops.MergeInto.merge]] (also behind `MergeInto.mergeInto`),
+  * and swaps the result in atomically (staging table + DROP + RENAME),
+  * preserving the target's partitioning and bucketing layout.
   *
-  * Supported shape (the reference's, exactly): plain table refs on both
-  * sides, ≤1 `WHEN MATCHED [AND c] THEN UPDATE SET * | SET a=b,...`,
-  * ≤1 `WHEN NOT MATCHED [AND c] THEN INSERT * | (cols) VALUES (...)`.
-  * Anything else (DELETE actions, NOT MATCHED BY SOURCE, subquery
-  * sources, schema evolution) falls through untouched to Spark's own
-  * path and error messages. As with SQL MERGE, the source must be
-  * unique on the join keys (the reference pre-assigns keys for the same
-  * reason — load_dim_product_dw.py:628-631).
+  * The supported shape is listed at [[MergeSql.tryRewrite]]; anything
+  * else falls through untouched to Spark's own path and error messages.
+  * As with SQL MERGE, the source must be unique on the join keys (the
+  * reference pre-assigns keys for the same reason —
+  * load_dim_product_dw.py:628-631).
   */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
@@ -118,18 +116,14 @@ final class MergeSpec(
       s"bySource=$bySource"
 }
 
-/** Driver-side merge execution: full-outer join on the (unresolved, so
-  * alias-correct) ON condition, per-column case analysis, atomic swap.
+/** Driver-side merge execution: crash recovery, the provider and
+  * EXTERNAL checks, the (unresolved, so alias-correct) ON condition and
+  * WHEN actions handed to [[graft.ops.MergeInto.merge]], atomic swap.
   */
 final case class GraftMergeCommand(
     targetParts: Seq[String], targetAlias: String,
     sourceParts: Seq[String], sourceAlias: String,
     spec: MergeSpec) extends LeafRunnableCommand {
-
-  private def condition: Expression = spec.condition
-  private def matched: Seq[MergeAction] = spec.matched
-  private def notMatched: Seq[MergeAction] = spec.notMatched
-  private def bySource: Seq[MergeAction] = spec.bySource
 
   override def output: Seq[Attribute] = Seq.empty
 
@@ -218,77 +212,21 @@ final case class GraftMergeCommand(
       throw new UnsupportedOperationException(
         s"graft MERGE INTO does not support EXTERNAL table `$tName`: " +
           "the staged swap would relocate its data into the warehouse")
-    val targetSchema = spark.table(tName).schema
-    val t = spark.table(tName)
-      .withColumn("__t_present", lit(true)).alias(targetAlias)
-    val s = spark.table(sName)
-      .withColumn("__s_present", lit(true)).alias(sourceAlias)
-    val joined = t.join(s, ColumnBridge.column(condition), "full_outer")
-
-    val tPresent = col(s"$targetAlias.__t_present").isNotNull
-    val sPresent = col(s"$sourceAlias.__s_present").isNotNull
-    val isMatched = tPresent && sPresent
-    val tOnly = tPresent && !sPresent
-    def cond(a: Option[Expression]): Column =
-      a.map(ColumnBridge.column).getOrElse(lit(true))
-
-    // SQL MERGE semantics: within each WHEN group, the FIRST action
-    // whose condition holds fires; no action firing means keep (matched
-    // / by-source) or drop (not-matched). -1 = nothing fired.
-    def firstIdx(actions: Seq[MergeAction]): Column =
-      actions.zipWithIndex.foldRight(lit(-1): Column) {
-        case ((a, i), els) => when(cond(a.condition), lit(i)).otherwise(els)
-      }
-    val mAct = firstIdx(matched)
-    val iAct = firstIdx(notMatched)
-    val bAct = firstIdx(bySource)
-
-    def deleteIdxs(actions: Seq[MergeAction]): Seq[Int] =
-      actions.zipWithIndex.collect { case (_: DeleteAction, i) => i }
-    def isin(c: Column, idxs: Seq[Int]): Column =
-      if (idxs.isEmpty) lit(false) else c.isin(idxs: _*)
-
-    val dropRow =
-      (isMatched && isin(mAct, deleteIdxs(matched))) ||
-        ((!tPresent) && iAct === -1) ||
-        (tOnly && isin(bAct, deleteIdxs(bySource)))
-
-    def assignVal(assigns: Seq[Assignment], c: String,
-        default: Column): Column =
-      assigns.find(a => nameOf(a.key).equalsIgnoreCase(c))
-        .map(a => ColumnBridge.column(a.value)).getOrElse(default)
-
-    // per-column value: fold the action list into a when-chain keyed by
-    // the fired-action index (delete rows are filtered, so any value do)
-    def chain(actions: Seq[MergeAction], act: Column, c: String,
-        default: Column, starVal: Column, insertMissing: Boolean): Column =
-      actions.zipWithIndex.foldRight(default) {
-        case ((a, i), els) => a match {
-          case _: UpdateStarAction | _: InsertStarAction =>
-            when(act === i, starVal).otherwise(els)
-          case UpdateAction(_, assigns, _) =>
-            when(act === i, assignVal(assigns, c, default)).otherwise(els)
-          case InsertAction(_, assigns) =>
-            when(act === i, assignVal(assigns, c,
-              if (insertMissing) lit(null) else default)).otherwise(els)
-          case _: DeleteAction => els
-        }
-      }
-
-    val outCols = targetSchema.fields.map { f =>
-      val c = f.name
-      val tCol = col(s"$targetAlias.$c")
-      val sCol = col(s"$sourceAlias.$c")
-      val base = when(isMatched,
-          chain(matched, mAct, c, tCol, sCol, insertMissing = false))
-        .when(tOnly,
-          chain(bySource, bAct, c, tCol, tCol, insertMissing = false))
-        .otherwise(
-          chain(notMatched, iAct, c, lit(null), sCol,
-            insertMissing = true))
-      base.cast(f.dataType).as(c)
+    // the WHEN actions as planner clauses (tryRewrite admits only these)
+    def column(e: Option[Expression]) = e.map(ColumnBridge.column)
+    def assigns(kvs: Seq[Assignment]): Option[Seq[(String, Column)]] =
+      Some(kvs.map(a => nameOf(a.key) -> ColumnBridge.column(a.value)))
+    def clause(a: MergeAction): MergeInto.Clause = a match {
+      case UpdateStarAction(c) => MergeInto.Update(column(c))
+      case UpdateAction(c, kvs, _) => MergeInto.Update(column(c), assigns(kvs))
+      case DeleteAction(c) => MergeInto.Delete(column(c))
+      case InsertStarAction(c) => MergeInto.Insert(column(c))
+      case InsertAction(c, kvs) => MergeInto.Insert(column(c), assigns(kvs))
     }
-    val result = joined.filter(!dropRow).select(outCols.toIndexedSeq: _*)
+    val result = MergeInto.merge(spark.table(tName), targetAlias,
+      spark.table(sName), sourceAlias, ColumnBridge.column(spec.condition),
+      spec.matched.map(clause), spec.notMatched.map(clause),
+      spec.bySource.map(clause))
 
     // swap preserving format, partitioning, and bucketing. Order matters
     // for safety: the merged result is fully materialized as the staging

@@ -2,14 +2,13 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 import graft.Tables
-import graft.expressions.{CosineSim, MinHashSig, SimHashSig}
 
 /** SQL entry point: the reference's users speak SQL (its compute is SQL
   * pushed to Oracle), so the engine exposes the same surface — register
-  * the tables as temp views and the native expressions as SQL functions,
-  * then `spark.sql(...)` anything. Catalyst plans SQL and DataFrame
-  * queries identically, so every optimization note in README applies
-  * unchanged.
+  * the tables as temp views, then `spark.sql(...)` anything; the native
+  * SQL functions come with every session from [[GraftExtensions]].
+  * Catalyst plans SQL and DataFrame queries identically, so every
+  * optimization note in README applies unchanged.
   */
 object SqlSurface {
 
@@ -21,24 +20,4 @@ object SqlSurface {
                else Tables.load(spark, dir, n)
       df.createOrReplaceTempView(n)
     }
-
-  /** Register the native expressions for SQL use:
-    *   minhash_sig(text), minhash_sig(text, k, n)
-    *   simhash_sig(text)
-    *   cosine_sim(a, b)
-    */
-  def registerFunctions(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("minhash_sig", exprs => exprs match {
-      case Seq(t) => MinHashSig(t, 3, 64)
-      case Seq(t, k, n) => MinHashSig(t,
-        k.eval(null).asInstanceOf[Int], n.eval(null).asInstanceOf[Int])
-      case _ => throw new IllegalArgumentException(
-        "minhash_sig(text[, k, numHashes])")
-    }, "scala_udf")
-    registry.createOrReplaceTempFunction("simhash_sig",
-      exprs => SimHashSig(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-  }
 }

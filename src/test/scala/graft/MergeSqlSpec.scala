@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.MergeInto
 import org.apache.spark.sql.functions._
 
 /** MERGE INTO SQL over plain parquet tables — the reference's native
@@ -153,6 +154,32 @@ class MergeSqlSpec extends SparkSpec {
     assert(got === Seq(
       (1L, "a2", 11.0),  // matched update
       (3L, "c", 0.0)))   // not-matched-by-source update; 2L deleted
+  }
+
+  test("op-guarded MERGE: SQL text and mergeInto give identical tables") {
+    dropAll("ms_t", "ms_s")
+    Seq((Some(1L), "a", 10.0), (Some(2L), "b", 20.0), (None, "n", 0.0))
+      .toDF("k", "name", "v")
+      .write.format("parquet").saveAsTable("ms_t")
+    Seq((Some(1L), "a2", 11.0, "INSERT"), (Some(2L), "b2", 21.0, "UPDATE"),
+      (Some(3L), "c", 30.0, "INSERT"), (Some(4L), "x", 4.0, "UPDATE"),
+      (None, "n2", 1.0, "UPDATE")).toDF("k", "name", "v", "operation")
+      .write.format("parquet").saveAsTable("ms_s")
+
+    val viaApi = MergeInto.mergeInto(spark.table("ms_t"),
+      spark.table("ms_s"), Seq("k"), Seq("name", "v"), "operation")
+      .as[(Option[Long], String, Double)].collect().toSet
+    // the reference's MERGE (load_fact_sales_dw.py:390-418), null-safe
+    spark.sql("""MERGE INTO ms_t t USING ms_s s ON t.k <=> s.k
+      |WHEN MATCHED AND s.operation = 'UPDATE'
+      |  THEN UPDATE SET name = s.name, v = s.v
+      |WHEN NOT MATCHED AND s.operation = 'INSERT' THEN INSERT *"""
+      .stripMargin)
+    val viaSql = spark.table("ms_t")
+      .as[(Option[Long], String, Double)].collect().toSet
+    assert(viaSql === Set((Some(1L), "a", 10.0), (Some(2L), "b2", 21.0),
+      (Some(3L), "c", 30.0), (None, "n2", 1.0)))
+    assert(viaApi === viaSql)
   }
 
   test("unsupported shapes fall through to Spark's own error") {

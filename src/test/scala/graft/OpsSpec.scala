@@ -97,15 +97,25 @@ class OpsSpec extends SparkSpec {
       (5L, "e", 50.0, "UPDATE"))    // unmatched + UPDATE -> dropped
       .toDF("bk", "name", "price", "operation")
     val merged = MergeInto.mergeInto(target, staged, Seq("bk"),
-      Seq("name", "price"), opCol = Some("operation"))
+      Seq("name", "price"), "operation")
     val got = merged.orderBy("bk").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
     assert(got === Seq((1L, "a", 10.0), (2L, "b2", 21.0), (3L, "c", 30.0),
       (4L, "d", 40.0)))
-    // without op guard: every staged row wins / inserts
-    val merged2 = MergeInto.mergeInto(target, staged.drop("operation"),
-      Seq("bk"), Seq("name", "price"))
-    assert(merged2.count() === 5)
+  }
+
+  test("MergeInto: null-safe keys keep and update a null-key target row") {
+    val target = Seq((Some(1L), "a"), (None, "n")).toDF("bk", "name")
+    def merged(staged: Seq[(Option[Long], String, String)]) =
+      MergeInto.mergeInto(target, staged.toDF("bk", "name", "operation"),
+        Seq("bk"), Seq("name"), "operation").as[(Option[Long], String)]
+        .collect().toSet
+    // an unrelated INSERT leaves the null-key row in place
+    assert(merged(Seq((Some(2L), "b", "INSERT"))) ===
+      Set((Some(1L), "a"), (None, "n"), (Some(2L), "b")))
+    // <=> matches the null key, so the guarded UPDATE applies
+    assert(merged(Seq((None, "n2", "UPDATE"))) ===
+      Set((Some(1L), "a"), (None, "n2")))
   }
 
   test("MergeInto is idempotent (re-running same staging is a no-op)") {
@@ -114,9 +124,9 @@ class OpsSpec extends SparkSpec {
     val staged = Seq((2L, "b2", 21.0, "UPDATE"), (3L, "c", 30.0, "INSERT"))
       .toDF("bk", "name", "price", "operation")
     val once = MergeInto.mergeInto(target, staged, Seq("bk"),
-      Seq("name", "price"), Some("operation"))
+      Seq("name", "price"), "operation")
     val twice = MergeInto.mergeInto(once, staged, Seq("bk"),
-      Seq("name", "price"), Some("operation"))
+      Seq("name", "price"), "operation")
     assert(twice.orderBy("bk").collect().toSeq ===
       once.orderBy("bk").collect().toSeq)
   }

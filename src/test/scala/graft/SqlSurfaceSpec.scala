@@ -10,7 +10,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("SQL surface: views + native functions usable from spark.sql") {
     SqlSurface.registerTables(spark, sf)
-    SqlSurface.registerFunctions(spark)
     val agg = spark.sql(
       """SELECT l_returnflag, COUNT(*) AS n FROM lineitem
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
