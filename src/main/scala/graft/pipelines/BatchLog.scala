@@ -188,12 +188,62 @@ private[graft] object BatchLog {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Replace the plain dir `path` whole — the commit of every table
+    * rewritten in full, not appended to (the DW fact and snowflake
+    * dims, a compacted Layout partition, a StreamingSummary version,
+    * a TokenizerStore):
+    *   1. `write` fills the sibling `.<name>__staging` (a leading dot:
+    *      partition discovery still lists `_` names that contain `=`);
+    *   2. live is renamed to `.<name>__old` — the commit point (a
+    *      first write has no live dir and skips it);
+    *   3. staging is renamed to live; 4. old is deleted.
+    * Starts with [[recoverDir]]. Live stays whole until staging is
+    * complete, so `write` may read it. Single writer per path. */
+  def replaceDir(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    val fs = fsOf(spark, path)
+    val (live, staging, old) = swapPaths(path)
+    recoverDir(spark, path)
+    op(s"wrote $staging")(write(staging.toString))
+    if (fs.exists(live)) op(s"renamed $live out")(rename(fs, live, old))
+    op(s"renamed $staging in")(rename(fs, staging, live))
+    if (fs.exists(old)) op(s"deleted $old") { fs.delete(old, true); () }
+  }
+
+  /** Finish or undo a crashed [[replaceDir]]; readers call it first.
+    * An old dir means the commit point passed (old moves out only once
+    * staging is complete): roll a missing live forward from staging,
+    * then drop old. Otherwise drop any leftover staging. Returns
+    * whether the live dir exists. */
+  def recoverDir(spark: SparkSession, path: String): Boolean = {
+    val fs = fsOf(spark, path)
+    val (live, staging, old) = swapPaths(path)
+    if (fs.exists(old)) {
+      if (!fs.exists(live)) rename(fs, staging, live)
+      fs.delete(old, true)
+    } else if (fs.exists(staging)) fs.delete(staging, true)
+    fs.exists(live)
+  }
+
+  private def swapPaths(path: String): (Path, Path, Path) = {
+    val live = new Path(path)
+    def sibling(suffix: String) =
+      new Path(live.getParent, s".${live.getName}$suffix")
+    (live, sibling("__staging"), sibling("__old"))
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"BatchLog: renaming $from to $to failed")
+
   private final class Budget(val ops: Int) { var done = 0 }
   private val budget = new scala.util.DynamicVariable[Option[Budget]](None)
 
   /** Crash seam for the kill/replay drill: run `body`, throwing after
     * its `ops`-th commit op (a compact table write, the manifest
-    * rename, or one vacuum delete). */
+    * rename, one vacuum delete, or one [[replaceDir]] step). The
+    * budget is inherited by threads `body` starts, such as a
+    * streaming query's micro-batch thread. */
   private[graft] def crashAfter[T](ops: Int)(body: => T): T =
     budget.withValue(Some(new Budget(ops)))(body)
 

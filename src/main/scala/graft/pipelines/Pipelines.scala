@@ -101,7 +101,9 @@ object Pipelines {
     * schema → Poison; any empty dim → Retry. Otherwise the file read for
     * those checks runs every stage: alias-resolve → clean → resolve the
     * 4 dim keys → drop misses → classify INSERT/UPDATE vs the current DW
-    * state → assign surrogate keys → merge → overwrite. */
+    * state → assign surrogate keys → merge → commit. `dw/fact_sales`
+    * stays one plain parquet dir of exactly the live rows; each load
+    * replaces it whole through [[BatchLog.replaceDir]]. */
   def loadIncoming(spark: SparkSession, db: SourceDb, root: String,
       incomingPath: String): LoadOutcome = {
     val raw = CsvIO.readAllString(spark, incomingPath, sep = "|")
@@ -174,7 +176,7 @@ object Pipelines {
         .withColumn("fact_key", lit(null).cast(LongType))
       val staged = inserts.unionByName(updates.select(inserts.columns
         .map(col).toIndexedSeq: _*))
-      // stage 9: merge, committed by the atomic overwrite below
+      // stage 9: merge, committed by the directory replace below
       val merged = MergeInto.mergeInto(existing, staged, Seq("natural_key"),
         incoming.columns.filterNot(c => c == "natural_key").toSeq,
         "operation", nullSafeKeys = false)
@@ -185,7 +187,8 @@ object Pipelines {
       val stats = Map("incoming" -> incoming.count(),
         "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++
         misses.map { case (k, v) => s"miss_$k" -> v }
-      overwriteParquet(spark, merged, dwPath)
+      BatchLog.replaceDir(spark, dwPath)(
+        merged.write.mode("overwrite").parquet(_))
       Loaded(spark.read.parquet(dwPath), stats)
     } finally incoming.unpersist()
   }
@@ -224,7 +227,8 @@ object Pipelines {
   /** Snowflake lookup-dim maintenance (target_dw's dim_category /
     * dim_sub_category / dim_manufacturer): distinct incoming values
     * anti-joined against the stored dim, new keys from max+1, append,
-    * atomic swap. Returns value→newRowCount per dim. */
+    * committed by [[BatchLog.replaceDir]]. Returns value→newRowCount
+    * per dim. */
   def maintainSnowflakeDims(spark: SparkSession, root: String,
       snapshot: DataFrame): Map[String, Long] = {
     val dimSchema = StructType(Seq(
@@ -235,48 +239,19 @@ object Pipelines {
       val (updated, newRows) = graft.ops.LookupDim.upsert(
         existing, snapshot.select(col(c).as("value")), "value", "key")
       val n = newRows.count()
-      overwriteParquet(spark, updated, path)
+      BatchLog.replaceDir(spark, path)(
+        updated.write.mode("overwrite").parquet(_))
       c -> n
     }.toMap
   }
 
-  /** Atomic-swap overwrite: write to a staging location, then swap — the
-    * re-runnability contract of the reference's staging+MERGE+commit.
-    * The live dir is deleted only after the staging write finished, so
-    * a crash between the delete and the rename leaves a complete
-    * staging copy, which [[loadOrEmpty]] rolls forward. */
-  private def overwriteParquet(spark: SparkSession, df: DataFrame,
-      path: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // the path's own filesystem, not fs.defaultFS
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__staging")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(
-      s"overwriteParquet: renaming $tmp to $dst failed — the new data " +
-        "stays in the staging dir and the next load rolls it forward")
-  }
-
-  /** The table at `path`, or an empty frame when none exists yet. A
-    * missing live dir next to a staging dir is an [[overwriteParquet]]
-    * that crashed between its delete and its rename: the staging copy
-    * is the table, so it is renamed into place before the read. */
+  /** The table at `path` after [[BatchLog.recoverDir]], or an empty
+    * frame when none exists yet. */
   private def loadOrEmpty(spark: SparkSession, path: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-    val live = fs.exists(p) || (fs.exists(staging) && {
-      if (!fs.rename(staging, p)) throw new java.io.IOException(
-        s"loadOrEmpty: rolling $staging forward to $p failed")
-      true
-    })
-    if (live)
-      spark.read.parquet(path)
+      schema: StructType): DataFrame =
+    if (BatchLog.recoverDir(spark, path)) spark.read.parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
   // ---- V10: validation suite -------------------------------------------
   def validationSuite(db: SourceDb, dwFacts: DataFrame,

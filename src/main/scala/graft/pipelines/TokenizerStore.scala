@@ -25,11 +25,12 @@ import org.apache.spark.sql.functions._
   *                   ids shard-stable (merges alone cannot bound its
   *                   script inventory); absent = legacy corpus-ranked
   *                   ids.
-  *   dir/format/   — ONE row (family, version), written LAST: the
-  *                   commit point. A crash mid-save leaves a dir with
-  *                   no format marker, which [[family]] rejects loudly —
-  *                   never a half-written model silently encoding.
+  *   dir/format/   — ONE row (family, version): the marker
+  *                   [[family]] checks, so a wrong path fails loudly.
   * }}}
+  * [[save]] replaces the whole dir through [[BatchLog.replaceDir]], so
+  * a crash mid-save leaves the previous store (or none) — never a
+  * half-written model silently encoding.
   *
   * Scale shape: models are MODEL-sized (≤ merges/vocab rows — a 32k-
   * merge BPE table is ~1 MB), so save is one tiny parquet write and
@@ -42,18 +43,11 @@ object TokenizerStore {
 
   /** Persist a trained model. `model` must carry the family's schema
     * (see layout above) — validated here, so a mixed-up frame fails at
-    * save time, not at some later load. Write order makes every crash
-    * window safe, INCLUDING a re-save over an existing store: the
-    * model rows are materialized to the DRIVER first (bounded — models
-    * are ~1 MB by contract, and `model` may lazily derive from THIS
-    * store, e.g. a schema-migrating `loadModel(dir)`-then-`save(dir)`;
-    * an un-materialized overwrite would read from the path it is
-    * truncating), then the OLD format marker is deleted (a crash from
-    * here on leaves a dir [[family]] rejects — never a stale marker
-    * blessing a partial or wrong-family model), then the model, then
-    * the new marker (the commit point). Single-writer assumed: a
-    * reader racing the delete→rewrite window fails loudly rather than
-    * reading a half-committed store. */
+    * save time, not at some later load. The whole store dir is written
+    * and committed by [[BatchLog.replaceDir]]: it holds exactly what
+    * this save wrote, and `model` may lazily derive from THIS store
+    * (a schema-migrating `loadModel(dir)`-then-`save(dir)`), because the
+    * live dir stays whole until the new one is complete. */
   def save(spark: SparkSession, dir: String, family: String,
       model: DataFrame, alphabet: Option[DataFrame] = None): Unit = {
     require(Families.contains(family),
@@ -76,44 +70,35 @@ object TokenizerStore {
       case "wordpiece" => model.select(
         col("piece").cast("string").as("piece"))
     }
-    // sever lineage from any on-disk source BEFORE mutating the dir
-    val localRows = m.collect().toIndexedSeq
-    val local = spark.createDataFrame(
-      spark.sparkContext.parallelize(localRows, 1), m.schema)
-    val aLocal = alphabet.map { a =>
-      val rows = a.select(col("sym").cast("string").as("sym"))
-        .collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        a.select(col("sym").cast("string").as("sym")).schema)
-    }
-    val fmtPath = new org.apache.hadoop.fs.Path(s"$dir/format")
-    val fs = fmtPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(fmtPath)) fs.delete(fmtPath, true)
-    // a re-save WITHOUT an alphabet must not leave a stale one
-    // blessing the new merges with the old script inventory
-    val alphaPath = new org.apache.hadoop.fs.Path(s"$dir/alphabet")
-    if (aLocal.isEmpty && fs.exists(alphaPath)) fs.delete(alphaPath, true)
-    local.coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
-    aLocal.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/alphabet"))
     import spark.implicits._
-    Seq((family, 1)).toDF("family", "version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/format")
+    BatchLog.replaceDir(spark, dir) { staging =>
+      m.coalesce(1).write.mode("overwrite").parquet(s"$staging/model")
+      alphabet.foreach(_.select(col("sym").cast("string").as("sym"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/alphabet"))
+      Seq((family, 1)).toDF("family", "version")
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/format")
+    }
   }
 
-  /** The stored family — fails loudly on a dir that is not a committed
-    * tokenizer store (no format marker = a crashed save or a wrong
-    * path; guessing would encode with a half-written model). */
+  /** The stored family — fails loudly on a dir that is not a tokenizer
+    * store (no format marker = a wrong path or a damaged store;
+    * guessing would encode with the wrong model). Every read goes
+    * through here, so it first finishes or undoes a crashed save
+    * ([[BatchLog.recoverDir]]). */
   def family(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/format")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"TokenizerStore: $dir has no format marker — not a committed " +
-        "tokenizer store (a crashed save leaves model/ without format/)")
+    BatchLog.recoverDir(spark, dir)
+    require(exists(spark, s"$dir/format"),
+      s"TokenizerStore: $dir has no format marker — not a tokenizer " +
+        "store")
     StoreMeta.load(spark, s"$dir/format", "family") {
       spark.read.parquet(s"$dir/format")
         .select(col("family")).collect().head.getString(0)
     }
+  }
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** The stored model frame, schema per family (see layout). */
@@ -180,10 +165,7 @@ object TokenizerStore {
         // merge outputs, OOV chars at the reserved id); a legacy
         // store without one keeps corpus-ranked ids — the drift its
         // absence implies is the caller's accepted posture
-        val alphaPath = new org.apache.hadoop.fs.Path(s"$dir/alphabet")
-        val fs = alphaPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(alphaPath))
+        if (exists(spark, s"$dir/alphabet"))
           TextAnalysis.bpeEncodeCorpusFrozen(docs, idCol, textCol,
             mergesSeq(spark, dir), alphabetSeq(spark, dir))
         else
@@ -236,10 +218,7 @@ object TokenizerStore {
       idsCol: String): DataFrame =
     family(spark, dir) match {
       case "bpe" =>
-        val alphaPath = new org.apache.hadoop.fs.Path(s"$dir/alphabet")
-        val fs = alphaPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        require(fs.exists(alphaPath),
+        require(exists(spark, s"$dir/alphabet"),
           s"TokenizerStore.decodeCorpus: char-BPE store $dir has no " +
             "alphabet snapshot — its ids were corpus-ranked at encode " +
             "time and are not a function of the model; re-save the " +

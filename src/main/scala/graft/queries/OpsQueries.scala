@@ -331,7 +331,7 @@ object OpsQueries {
     // The streamed-state contract for quantiles: two disjoint halves
     // (orderkey parity) summarize independently and FOLD by the
     // sketch's pure (month, bkt) SUM — the exact per-batch step
-    // StreamingSummary.maintainSketchFromFiles runs — and the folded
+    // StreamingSummary.maintainQuantilesFromFiles runs — and the folded
     // state's quantiles must equal the one-shot sketch's. The oracle
     // IS the one-shot replay (kq1's integer bucket math), so any fold
     // asymmetry, double count, or resolution mix-up breaks the hash;

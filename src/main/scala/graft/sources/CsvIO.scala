@@ -37,19 +37,32 @@ object CsvIO {
 
   /** S6: rotate everything in `current` into `archive` before a new
     * extract lands (extract_sales_daily.py:18-23). Hadoop rename — works
-    * on HDFS/S3A committers alike. */
+    * on HDFS/S3A committers alike. An entry whose name is already
+    * archived lands under the first free `<name>.<n>` (n = 1, 2, …):
+    * renaming onto an existing directory would nest the entry inside
+    * it, and each archived extract must stay its own entry. A rename
+    * that returns false raises. Returns the number of entries moved. */
   def rotate(spark: SparkSession, current: String, archive: String): Int = {
     val cur = new Path(current)
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val arc = new Path(archive)
     if (!fs.exists(cur)) return 0
     if (!fs.exists(arc)) fs.mkdirs(arc)
+    val taken = scala.collection.mutable.Set(
+      fs.listStatus(arc).map(_.getPath.getName).toSeq: _*)
     // entries may be plain files (the reference's case) or the directory
     // outputs a distributed CSV sink produces — rotate both
-    val moved = fs.listStatus(cur).map { st =>
-      fs.rename(st.getPath, new Path(arc, st.getPath.getName))
+    val entries = fs.listStatus(cur).map(_.getPath)
+    entries.foreach { src =>
+      val name = Iterator.from(0)
+        .map(n => if (n == 0) src.getName else s"${src.getName}.$n")
+        .find(!taken(_)).get
+      val dst = new Path(arc, name)
+      if (!fs.rename(src, dst))
+        throw new java.io.IOException(s"rotate: renaming $src to $dst failed")
+      taken += name
     }
-    moved.count(identity)
+    entries.length
   }
 }
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipelines.BatchLog
 
 /** Storage layout for the 100 TB fact: hive-style date partitioning.
   *
@@ -94,8 +95,10 @@ object Layout {
     * append-only layout needs: every [[appendMonth]] adds task-count
     * files, and at 100 TB unchecked file counts dominate planning time
     * (listing + footer reads) long before data size does. Rewrites the
-    * partition into ceil(bytes / targetBytes) files via a staged
-    * directory swap (readers of other partitions are unaffected).
+    * partition into ceil(bytes / targetBytes) files and commits it with
+    * [[graft.pipelines.BatchLog.replaceDir]] (readers of other
+    * partitions are unaffected; a reader of this one calls
+    * `recoverDir` on it first, as this method does).
     * Returns (filesBefore, filesAfter). */
   def compactPartition(spark: SparkSession, path: String,
       partition: String, targetBytes: Long = 128L * 1024 * 1024)
@@ -105,30 +108,16 @@ object Layout {
     // when compacting e.g. an object-store path from an HDFS-default
     // cluster
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = new org.apache.hadoop.fs.Path(
-      s"$path/.${partition}__compact")
-    val old = new org.apache.hadoop.fs.Path(s"$path/.${partition}__old")
-    // crash recovery: renamed-out but never renamed-in → put it back;
-    // stale staging/backup from completed or failed runs → remove
-    if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
-      throw new java.io.IOException(s"recovery rename $old -> $dir failed")
-    if (fs.exists(staged)) fs.delete(staged, true)
-    if (fs.exists(old)) fs.delete(old, true)
-
-    val files = fs.listStatus(dir).filter(f =>
+    BatchLog.recoverDir(spark, dir.toString)
+    def parquetFiles = fs.listStatus(dir).filter(f =>
       f.getPath.getName.endsWith(".parquet"))
-    val bytes = files.map(_.getLen).sum
+    val before = parquetFiles
+    val bytes = before.map(_.getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    if (files.length <= n) return (files.length, files.length)
-    spark.read.parquet(dir.toString).repartition(n)
-      .write.mode("overwrite").parquet(staged.toString)
-    if (!fs.rename(dir, old))
-      throw new java.io.IOException(s"rename $dir -> $old failed")
-    if (!fs.rename(staged, dir))
-      throw new java.io.IOException(s"rename $staged -> $dir failed")
-    fs.delete(old, true)
-    val after = fs.listStatus(dir).count(f =>
-      f.getPath.getName.endsWith(".parquet"))
-    (files.length, after)
+    if (before.length <= n) return (before.length, before.length)
+    BatchLog.replaceDir(spark, dir.toString)(
+      spark.read.parquet(dir.toString).repartition(n)
+        .write.mode("overwrite").parquet(_))
+    (before.length, parquetFiles.length)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 
 import graft.ops.{IncrementalAgg, QuantileSketch}
 import graft.ops.IncrementalAgg.Measure
+import graft.pipelines.BatchLog
 
 /** Streaming incremental view maintenance: a file stream of fact deltas
   * keeps an aggregate summary table current via
@@ -22,9 +23,10 @@ import graft.ops.IncrementalAgg.Measure
   *  - a replayed batch sees its own version already present and skips —
   *    no double-count;
   *  - each fold reads the latest version strictly older than itself and
-  *    writes its own (tmp + rename), so no crash window ever deletes
-  *    the only copy;
-  *  - superseded versions are pruned only after the new one is in place.
+  *    commits its own through [[graft.pipelines.BatchLog.replaceDir]],
+  *    so no crash window ever deletes the only copy;
+  *  - superseded versions are pruned only after the new one is in place
+  *    (a replay prunes what a crashed batch left).
   */
 object StreamingSummary {
 
@@ -59,23 +61,17 @@ object StreamingSummary {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = fsOf(spark, summaryPath)
         val existing = versions(spark, summaryPath)
+        val older = existing.filter(_ < batchId)
         if (!existing.contains(batchId)) { // replay after a crash: skip
-          val prev = existing.filter(_ < batchId).lastOption.map(v =>
-            spark.read.parquet(s"$summaryPath/v=$v"))
-          val next = fold(batch, prev)
-          val tmp = new Path(s"$summaryPath/.v=${batchId}__tmp")
-          val dst = new Path(s"$summaryPath/v=$batchId")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
-          next.write.mode("overwrite").parquet(tmp.toString)
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(s"rename $tmp -> $dst failed")
-          // prune superseded versions only now that dst is in place
-          existing.filter(_ < batchId).foreach(v =>
-            fs.delete(new Path(s"$summaryPath/v=$v"), true))
+          val next = fold(batch, older.lastOption.map(v =>
+            spark.read.parquet(s"$summaryPath/v=$v")))
+          BatchLog.replaceDir(spark, s"$summaryPath/v=$batchId")(
+            next.write.mode("overwrite").parquet(_))
         }
-        ()
+        // prune superseded versions only once this batch's is in place
+        val fs = fsOf(spark, summaryPath)
+        older.foreach(v => fs.delete(new Path(s"$summaryPath/v=$v"), true))
       }
       .start()
     q.awaitTermination()
@@ -119,8 +115,10 @@ object StreamingSummary {
     * log-histogram sketch of [[graft.ops.QuantileSketch]] — rows of
     * (keys…, bkt, cnt). Each batch's sketch unions in and counts SUM,
     * so the maintained state is bit-identical to the one-pass sketch
-    * over all data ever streamed (no decay, no randomness) while each
-    * batch costs O(delta + groups·buckets). Read quantiles off the
+    * over all data ever streamed (no decay, no randomness — bucketing
+    * is integer arithmetic, no KLL coin flips) while each batch costs
+    * O(delta + groups·buckets): "p99 per month" stays answerable at
+    * 100 TB without re-touching history. Read quantiles off the
     * result with [[graft.ops.QuantileSketch.quantiles]]. */
   def maintainQuantilesFromFiles(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, checkpoint: String,
@@ -135,12 +133,6 @@ object StreamingSummary {
         }
     }
 
-  /** Count-Min maintenance: the stored state is [[graft.ops.CountMin]]'s
-    * (depth, bkt, cnt, width) cell table — bounded by depth×width
-    * regardless of history size. Each batch sketches at O(delta) and
-    * folds by pure SUM, so the maintained state is exactly the one-pass
-    * sketch of everything ever streamed; probe it any time with
-    * `CountMin.estimate` for overcount-only frequency reads. */
   /** DSIR raw-distribution maintenance: the stored state is the
     * (b, ct) hashed-n-gram bucket count table of
     * [[graft.operators.Curation.dsirWeights]]' RAW side — ≤ `buckets`
@@ -232,29 +224,12 @@ object StreamingSummary {
           .getOrElse(delta)
     }
 
-  /** Streamed maintenance of a [[graft.ops.QuantileSketch]] summary —
-    * the incremental-quantiles leg of the summary family (COUNT/SUM/
-    * MIN/MAX exact, DISTINCT via HLL, quantiles here): per batch,
-    * summarize the delta and fold it by the sketch's pure
-    * (keys, bkt) SUM. Because bucketing is deterministic integer
-    * arithmetic (no KLL coin flips), the maintained state is
-    * bit-identical to the one-shot sketch over the union — the same
-    * contract the NB and Count-Min maintainers give, and what makes
-    * "p99 per month, maintained O(delta)" answerable at 100 TB without
-    * re-touching history. Read quantiles off the state with
-    * [[graft.ops.QuantileSketch.quantiles]] at any time. */
-  def maintainSketchFromFiles(spark: SparkSession, inDir: String,
-      schema: org.apache.spark.sql.types.StructType, checkpoint: String,
-      summaryPath: String, keys: Seq[String], valueCol: String,
-      m: Int = 7): DataFrame =
-    maintainVersioned(spark, inDir, schema, checkpoint, summaryPath) {
-      (batch, prev) =>
-        val delta = graft.ops.QuantileSketch.summarize(
-          batch, keys, valueCol, m)
-        prev.map(p => graft.ops.QuantileSketch.rollup(
-          p.unionByName(delta), keys)).getOrElse(delta)
-    }
-
+  /** Count-Min maintenance: the stored state is [[graft.ops.CountMin]]'s
+    * (depth, bkt, cnt, width) cell table — bounded by depth×width
+    * regardless of history size. Each batch sketches at O(delta) and
+    * folds by pure SUM, so the maintained state is exactly the one-pass
+    * sketch of everything ever streamed; probe it any time with
+    * `CountMin.estimate` for overcount-only frequency reads. */
   def maintainCountMinFromFiles(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, checkpoint: String,
       summaryPath: String, itemCol: String, depth: Int = 4,

@@ -55,31 +55,31 @@ class PipelineSpec extends SparkSpec {
     assert(new java.io.File(s"$root/extract/Archive").list().nonEmpty)
   }
 
-  test("a crash between the DW overwrite's delete and rename keeps all " +
-      "history: the next load rolls the staging copy forward") {
-    val root = Files.createTempDirectory("graft_pipe_crash").toString
-    val db1 = Pipelines.sourceLoad(spark, root, nFacts = 200,
-      dateId = 20240115)
-    Pipelines.extract(spark, db1, root)
-    val dw1 = load(db1, root).facts
-    val n1 = dw1.count()
-    val max1 = dw1.agg(max("fact_key")).head().getLong(0)
-    assert(n1 > 0 && max1 === n1)
-    // the crash state: the staging write finished and the live dir is
-    // deleted, but the rename never ran
-    val live = new java.io.File(s"$root/dw/fact_sales")
-    assert(live.renameTo(new java.io.File(s"$root/dw/fact_sales__staging")))
-    // next day: new facts only, so every incoming row is an INSERT
-    val db2 = Pipelines.sourceLoad(spark, root, nFacts = 150,
-      dateId = 20240116)
-    Pipelines.extract(spark, db2, root)
-    val Pipelines.Loaded(dw2, stats2) = load(db2, root)
-    val inserts = stats2("inserts")
-    assert(inserts > 0 && stats2("updates") === 0)
-    assert(dw2.count() === n1 + inserts, "history dropped")
-    assert(dw2.agg(max("fact_key")).head().getLong(0) === max1 + inserts,
-      "fact_key restarted")
-    assert(!new java.io.File(s"$root/dw/fact_sales__staging").exists())
+  test("three extracts leave two separate Archive entries, each holding " +
+      "exactly one earlier dump") {
+    val root = Files.createTempDirectory("graft_pipe_rotate").toString
+    def dump(rows: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+      rows.select(col("sales_id").cast("string"),
+          col("date_id").cast("string")).collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+    val dumps = Seq(40 -> 20240115, 50 -> 20240116, 60 -> 20240117).map {
+      case (n, day) =>
+        val db = Pipelines.sourceLoad(spark, root, nFacts = n, dateId = day)
+        Pipelines.extract(spark, db, root)
+        dump(db.facts)
+    }
+    val archive = s"$root/extract/Archive"
+    assert(new java.io.File(archive).list().sorted.toSeq ===
+      Seq("fact_sales", "fact_sales.1"))
+    Seq("fact_sales" -> dumps(0), "fact_sales.1" -> dumps(1)).foreach {
+      case (entry, expected) =>
+        val back = graft.sources.CsvIO.readAllString(spark,
+          s"$archive/$entry", sep = ",")
+        assert(back.count() === expected.size, entry)
+        assert(dump(back) === expected, entry)
+    }
+    assert(dump(graft.sources.CsvIO.readAllString(spark,
+      s"$root/extract/Current/fact_sales", sep = ",")) === dumps(2))
   }
 
   test("re-sent facts with changed amounts load as UPDATEs in place") {

@@ -56,7 +56,7 @@ class QuantileSketchSpec extends SparkSpec {
             new org.apache.hadoop.fs.Path(s"$root/deltas/b${i}_$j.parquet"))
         }
     }
-    val state = graft.streaming.StreamingSummary.maintainSketchFromFiles(
+    val state = graft.streaming.StreamingSummary.maintainQuantilesFromFiles(
       spark, s"$root/deltas", raw.schema, s"$root/ckpt", s"$root/state",
       Seq("month"), "cents")
     val oneShot = QuantileSketch.summarize(raw, Seq("month"), "cents")

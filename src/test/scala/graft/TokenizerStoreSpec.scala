@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** TokenizerStore (t23): save → load → encode must equal in-memory
   * encoding for all four tokenizer families; a dir without the format
-  * marker (a crashed save) is rejected loudly. */
+  * marker is rejected loudly. Crash safety of a save is BatchLogSpec's
+  * drill. */
 class TokenizerStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -259,14 +260,12 @@ class TokenizerStoreSpec extends SparkSpec {
     assert(TokenizerStore.loadMerges(spark, dir) === merges)
   }
 
-  test("re-saving over an existing store is crash-safe: the old " +
-      "format marker is gone before the new model lands") {
+  test("re-saving over an existing store replaces it: the format " +
+      "marker names the new family") {
     val wf = TextAnalysis.bpeWordFreq(docs, "text")
     val dir = tmp()
     TokenizerStore.save(spark, dir, "bpe",
       TextAnalysis.bpeTrainLocal(wf, nMerges = 2))
-    // a re-save deletes format/ FIRST — verify by writing a new model
-    // and checking the marker was re-created with the NEW family
     TokenizerStore.save(spark, dir, "bpe-byte",
       ByteBpe.train(ByteBpe.byteWordFreq(docs, "text"), 2))
     assert(TokenizerStore.family(spark, dir) === "bpe-byte")
@@ -278,7 +277,7 @@ class TokenizerStoreSpec extends SparkSpec {
     val model = TextAnalysis.bpeTrainLocal(wf, nMerges = 2)
     val dir = tmp()
     TokenizerStore.save(spark, dir, "bpe", model)
-    // simulate the crash window: model committed, format not
+    // a dir with a model but no marker: a wrong or damaged path
     def rmrf(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmrf)
       f.delete()
