@@ -17,9 +17,10 @@ import scala.jdk.CollectionConverters._
   *      persisted-array scan) — the resource ALU calibration is blind
   *      to (the r12 d10b lesson: a bandwidth-bound gate blew up 9.4×
   *      under a QUIET CPU calib).
-  *   3. Per-gate executor task metrics (gate_metrics: GC time,
-  *      input/shuffle/output bytes, spill, peak execution memory) — a
-  *      gate that blows up names its resource in the artifact itself.
+  *   3. Per-gate metrics from the gate's [[Trace]] span (gate_metrics:
+  *      executor time, GC time, input/shuffle/output bytes, spill, peak
+  *      execution memory, jobs, planning ms and the gap between jobs) —
+  *      a gate that blows up names its resource in the artifact itself.
   * Plus a compute-vs-store-lifecycle split (total_lifecycle /
   * total_compute, classified by observed bytes written): ~30 s of the
   * suite is create+write+query store lifecycles, which is exactly the
@@ -179,19 +180,10 @@ object Bench {
     // this constant ONLY when deliberately re-basing the band (and say
     // so in the commit).
     val CalibRef = 0.238
-    // attach the per-gate metrics listener AFTER warm-up so gate
-    // deltas carry measured work only
-    val gm = new GateMetrics
-    spark.sparkContext.addSparkListener(gm)
-    // waitUntilEmpty() throws TimeoutException after its 10 s default
-    // when the async bus is backlogged — exactly the contended
-    // conditions this bench measures. A missed drain only smears one
-    // gate's task attribution into its neighbor's; it must never
-    // abort the run and lose the whole artifact.
-    def drain(): Unit =
-      try org.apache.spark.GraftSparkHooks
-        .drainListenerBus(spark.sparkContext)
-      catch { case _: java.util.concurrent.TimeoutException => () }
+    // every gate's runs execute inside ONE span, opened after warm-up
+    // so it counts measured work only: its executor metrics, jobs,
+    // planning and between-job gap land in gate_metrics
+    val trace = new Trace(spark)
     // a failed query records -1 (NOT its elapsed time) so the JSON shows
     // the failure instead of counting it as a fast success.
     // MIN OF 2 RUNS per query (3 when the first two disagree by >2x):
@@ -210,38 +202,34 @@ object Bench {
     // next query — without the bracket the 148 gates accumulate
     // MEMORY_AND_DISK frames for the whole run and late queries pay the
     // eviction pressure (r8's CacheManager already-cached warnings).
+    def once(action: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try { action; (System.nanoTime() - t0) / 1e9 }
+      catch { case _: Throwable => -1.0 }
+    }
+    def best(runs: Seq[Double]): Double =
+      if (runs.exists(_ < 0)) -1.0 else runs.min
     val rawRuns = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    // per-gate task-metric deltas, TOTAL across the gate's 2-3 runs
-    val gateMetrics =
-      scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
+    // per-gate spans, TOTAL across the gate's 2-3 runs
+    val gateSpans = scala.collection.mutable.LinkedHashMap[String, Span]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
-        drain()
-        val before = gm.counters()
-        gm.peakMem.set(0L)
-        val runs = CacheScope.withScope { _ =>
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-            catch { case _: Throwable => -1.0 }
-          }
-          val a = once()
+        val (runs, span) = trace.timed(name)(CacheScope.withScope { _ =>
+          def run() = once(fn(spark, sfDir).count())
+          val a = run()
           if (a < 0) Seq(a) else {
-            val b = once()
+            val b = run()
             if (b < 0) Seq(a, b)
-            else if (math.max(a, b) > 2.0 * math.min(a, b)) Seq(a, b, once())
+            else if (math.max(a, b) > 2.0 * math.min(a, b)) Seq(a, b, run())
             else Seq(a, b)
           }
-        }
-        drain()
-        gateMetrics(name) =
-          gm.counters().zip(before).map { case (x, y) => x - y } :+
-            gm.peakMem.get
+        })
+        gateSpans(name) = span
         rawRuns(name) = runs
-        val ok = runs.filter(_ >= 0)
-        name -> (if (runs.exists(_ < 0) || ok.isEmpty) -1.0 else ok.min)
+        name -> best(runs)
     }
-    def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
+    def fmt(v: Double): java.math.BigDecimal =
+      if (v < 0) java.math.BigDecimal.valueOf(-1L) else Json.fixed(v, 3)
     // FORCED-EXECUTION leg (opt-out none — a declared gate list):
     // `.count()` does not force every plan equally — Catalyst elides
     // j1's terminal global sort under count (2.27 s forced vs 0.58 s
@@ -256,26 +244,14 @@ object Bench {
       "t16_trigram_lm", "t17_hashed5gram_lm")
     val forced = forcedGates.flatMap { n =>
       SparkEntry.queries.get(n).map { fn =>
-        drain()
-        val runs = CacheScope.withScope { _ =>
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, sfDir).foreachPartition(
-                (_: Iterator[org.apache.spark.sql.Row]) => ())
-              (System.nanoTime() - t0) / 1e9
-            } catch { case _: Throwable => -1.0 }
-          }
-          val a = once()
-          if (a < 0) Seq(a) else Seq(a, once())
-        }
-        val ok = runs.filter(_ >= 0)
-        n -> (if (runs.exists(_ < 0) || ok.isEmpty) -1.0 else ok.min)
+        n -> best(CacheScope.withScope { _ =>
+          def run() = once(fn(spark, sfDir).foreachPartition(
+            (_: Iterator[org.apache.spark.sql.Row]) => ()))
+          val a = run()
+          if (a < 0) Seq(a) else Seq(a, run())
+        })
       }
     }
-    val forcedJson = forced
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // Compute vs store-lifecycle split, classified by OBSERVED output
     // bytes: a gate whose tasks wrote >1 MB of files (store creates,
@@ -284,12 +260,12 @@ object Bench {
     // disk contention while the CPU calibration stays flat (PERF.md's
     // documented 7%-uniform-IO-drift window). Data-driven, so a new
     // store gate lands in the right bucket automatically.
-    val lifecycleGates = gateMetrics.collect {
-      case (n, m) if m(3) > (1L << 20) => n
+    val lifecycleGates = gateSpans.collect {
+      case (n, s) if s.counters.outBytes > (1L << 20) => n
     }.toSet
-    val byName0 = results.toMap
+    val byName = results.toMap
     val totalLifecycle = lifecycleGates.toSeq
-      .flatMap(byName0.get).filter(_ >= 0).sum
+      .flatMap(byName.get).filter(_ >= 0).sum
     val totalCompute = total - totalLifecycle
     // Warm/cold decomposition (the r11 forensics ask): a query's FIRST
     // run at this SF pays data-cold costs (page cache, shuffle files,
@@ -312,20 +288,17 @@ object Bench {
     // the driver): `queries` is the min estimate, `queries_raw` every
     // run, `max_spread` the worst max/min ratio — a loaded machine is
     // self-documenting in the artifact.
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val rawQs = rawRuns.map { case (k, vs) =>
-      "\"" + k + "\":[" + vs.map(fmt).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    def mb(v: Long): String = f"${v / 1048576.0}%.1f"
-    val gmJson = gateMetrics.map { case (k, m) =>
-      val Seq(run, gc, in, out, sr, sw, spMem, spDisk, nt, peak) =
-        m: @unchecked
-      "\"" + k + s"""\":{"run_ms":$run,"gc_ms":$gc,"in_mb":${mb(in)},""" +
-        s""""out_mb":${mb(out)},"shuf_r_mb":${mb(sr)},""" +
-        s""""shuf_w_mb":${mb(sw)},"spill_mb":${mb(spMem + spDisk)},""" +
-        s""""peak_exec_mb":${mb(peak)},"tasks":$nt}"""
-    }.mkString("{", ",", "}")
+    def mb(v: Long) = Json.fixed(v / 1048576.0, 1)
+    val gateMetrics = gateSpans.toSeq.map { case (k, s) =>
+      val c = s.counters
+      k -> Json.obj("run_ms" -> c.runMs, "gc_ms" -> c.gcMs,
+        "in_mb" -> mb(c.inBytes), "out_mb" -> mb(c.outBytes),
+        "shuf_r_mb" -> mb(c.shuffleReadBytes),
+        "shuf_w_mb" -> mb(c.shuffleWriteBytes),
+        "spill_mb" -> mb(c.memSpillBytes + c.diskSpillBytes),
+        "peak_exec_mb" -> mb(c.peakExecBytes), "tasks" -> c.tasks,
+        "jobs" -> c.jobs.size, "plan_ms" -> c.planMs, "gap_ms" -> s.gapMs())
+    }
     val maxSpread = rawRuns.values
       .filter(vs => vs.size >= 2 && vs.forall(_ > 0))
       .map(vs => vs.max / vs.min)
@@ -344,12 +317,8 @@ object Bench {
         else vs(1) / vs(0)
       }
       .foldLeft(1.0)(math.max)
-    val wf = warmupFailures.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\""
-    }.mkString("{", ",", "}")
     val calibEnd = { calibOnce(); math.min(calibOnce(), calibOnce()) }
     val (calibBwEnd, _) = bwProbe()
-    val calibRunsJson = calibRuns.map(fmt).mkString("[", ",", "]")
     // Per-gate ratio vs the COMMITTED quiet anchor (bench_anchor.json:
     // the post-review quiet-machine run, calib-normalized on both
     // sides) — the r13 lesson: j1 swung 3.7× official-to-official with
@@ -359,7 +328,7 @@ object Bench {
     // machine window (run_ms flat, wall up) separates from a plan
     // regression (run_ms up with it) at a glance. Gates under 0.25 s
     // are exempt (scheduling-floor noise dominates them).
-    val (anchorRatioJson, anchorFlagsJson) = try {
+    val (anchorRatios, anchorFlags) = try {
       val anchor = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(new java.io.File("bench_anchor.json"))
       def numMap(section: String): Map[String, Double] =
@@ -373,25 +342,49 @@ object Bench {
         case (n, v) if v > 0 && aQs.getOrElse(n, -1.0) > 0 =>
           n -> (v / calib) / (aQs(n) / aCalib)
       }
-      val rj = ratios.map { case (k, r) => "\"" + k + f"""\":$r%.2f""" }
-        .mkString("{", ",", "}")
-      val byName1 = results.toMap
       val flags = ratios.filter { case (n, r) =>
-        (r > 1.5 || r < 1.0 / 1.5) && byName1(n) > 0.25 &&
+        (r > 1.5 || r < 1.0 / 1.5) && byName(n) > 0.25 &&
           aQs(n) > 0.25
       }
-      val fj = flags.map { case (n, r) =>
-        val curRun = gateMetrics.get(n).map(_.head).getOrElse(-1L)
-        val aR = aRun.getOrElse(n, -1.0).toLong
-        "\"" + n + f"""\":{"ratio":$r%.2f,"sec":${fmt(byName1(n))},""" +
-          s""""anchor_sec":${fmt(aQs(n))},"run_ms":$curRun,""" +
-          s""""anchor_run_ms":$aR}"""
-      }.mkString("{", ",", "}")
-      (rj, fj)
-    } catch { case _: Throwable => ("{}", "{}") }
+      (ratios.map { case (n, r) => n -> Json.fixed(r, 2) },
+        flags.map { case (n, r) =>
+          n -> Json.obj("ratio" -> Json.fixed(r, 2), "sec" -> fmt(byName(n)),
+            "anchor_sec" -> fmt(aQs(n)),
+            "run_ms" -> gateSpans.get(n).map(_.counters.runMs).getOrElse(-1L),
+            "anchor_run_ms" -> aRun.getOrElse(n, -1.0).toLong)
+        })
+    } catch { case _: Throwable => (Nil, Nil) }
+    val calibs = Seq("calib_sec" -> fmt(calib),
+      "calib_runs" -> calibRuns.map(fmt), "calib_end" -> fmt(calibEnd),
+      "calib_ref" -> CalibRef, "calib_bw_sec" -> fmt(calibBw),
+      "calib_bw_gbps" -> Json.fixed(calibBwGbps, 1),
+      "calib_bw_end" -> fmt(calibBwEnd))
+    val totals = Seq("total_norm" -> fmt(totalNorm),
+      "total_warm" -> fmt(totalWarm), "total_first" -> fmt(totalFirst),
+      "total_lifecycle" -> fmt(totalLifecycle),
+      "total_compute" -> fmt(totalCompute))
+    val spanTotal = new Counters
+    gateSpans.values.foreach(s => spanTotal.add(s.counters))
     try {
       val w = new java.io.PrintWriter("bench_full.json")
-      try w.println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"max_spread":${f"$maxSpread%.2f"},"max_spread_warm":${f"$maxSpreadWarm%.2f"},"calib_sec":${fmt(calib)},"calib_runs":$calibRunsJson,"calib_end":${fmt(calibEnd)},"calib_ref":$CalibRef,"calib_bw_sec":${fmt(calibBw)},"calib_bw_gbps":${f"$calibBwGbps%.1f"},"calib_bw_end":${fmt(calibBwEnd)},"total_raw":${fmt(total)},"total_norm":${fmt(totalNorm)},"total_warm":${fmt(totalWarm)},"total_first":${fmt(totalFirst)},"total_lifecycle":${fmt(totalLifecycle)},"total_compute":${fmt(totalCompute)},"n_lifecycle":${lifecycleGates.size},"queries":$fullQs,"queries_raw":$rawQs,"forced_sec":$forcedJson,"gate_metrics":$gmJson,"anchor_ratio":$anchorRatioJson,"anchor_flags":$anchorFlagsJson,"warmup_failures":$wf,"sf":"$sfDir"}""")
+      try w.println(Json.write(Json.obj(Seq("metric" -> "total",
+        "value" -> fmt(total), "unit" -> "sec", "n" -> results.size,
+        "max_spread" -> Json.fixed(maxSpread, 2),
+        "max_spread_warm" -> Json.fixed(maxSpreadWarm, 2)) ++ calibs ++
+        Seq("total_raw" -> fmt(total)) ++ totals ++ Seq(
+        "n_lifecycle" -> lifecycleGates.size,
+        "total_jobs" -> spanTotal.jobs.size,
+        "total_plan_ms" -> spanTotal.planMs,
+        "total_gap_ms" -> gateSpans.values.map(_.gapMs()).sum,
+        "queries" -> Json.obj(results.map { case (k, v) => k -> fmt(v) }: _*),
+        "queries_raw" -> Json.obj(rawRuns.toSeq.map { case (k, vs) =>
+          k -> vs.map(fmt) }: _*),
+        "forced_sec" -> Json.obj(forced.map { case (k, v) => k -> fmt(v) }: _*),
+        "gate_metrics" -> Json.obj(gateMetrics: _*),
+        "anchor_ratio" -> Json.obj(anchorRatios: _*),
+        "anchor_flags" -> Json.obj(anchorFlags: _*),
+        "warmup_failures" -> Json.obj(warmupFailures.toSeq: _*),
+        "sf" -> sfDir): _*)))
       finally w.close()
     } catch { case _: Throwable => () }
     // The driver keeps only the LAST 2000 chars of stdout and parses the
@@ -405,13 +398,17 @@ object Bench {
       "st1_sessionize", "d1_exact_dedup", "d3_minhash_pairs",
       "d5_embedding_dups", "ann1_bruteforce_topk", "t1_text_analysis",
       "c1_corpus_clean", "w4_window_frames", "g1_rollup")
-    val byName = results.toMap
-    val qs = headline.flatMap(n => byName.get(n).map(v => "\"" + n + "\":" + fmt(v)))
-      .mkString("{", ",", "}")
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
-    val failed = results.count(_._2 < 0)
-    val anchorFlagsN = "\"ratio\"".r.findAllIn(anchorFlagsJson).size
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"calib_sec":${fmt(calib)},"calib_end":${fmt(calibEnd)},"calib_ref":$CalibRef,"calib_bw_sec":${fmt(calibBw)},"calib_bw_end":${fmt(calibBwEnd)},"total_norm":${fmt(totalNorm)},"total_warm":${fmt(totalWarm)},"total_lifecycle":${fmt(totalLifecycle)},"total_compute":${fmt(totalCompute)},"max_spread_warm":${f"$maxSpreadWarm%.2f"},"anchor_flags_n":$anchorFlagsN,"queries":$qs,"sf":$sfNum}""")
+    val notHeadline = Set("calib_runs", "calib_bw_gbps", "total_first")
+    println(Json.write(Json.obj(Seq("metric" -> "total",
+      "value" -> fmt(total), "unit" -> "sec", "n" -> results.size,
+      "failed" -> results.count(_._2 < 0)) ++
+      (calibs ++ totals).filterNot(kv => notHeadline(kv._1)) ++ Seq(
+      "max_spread_warm" -> Json.fixed(maxSpreadWarm, 2),
+      "anchor_flags_n" -> anchorFlags.size,
+      "queries" -> Json.obj(headline.flatMap(n =>
+        byName.get(n).map(v => n -> fmt(v))): _*),
+      "sf" -> new java.math.BigDecimal(sfNum)): _*)))
     spark.stop()
   }
 }

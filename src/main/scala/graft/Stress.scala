@@ -23,19 +23,21 @@ import org.apache.spark.sql.functions._
   *
   * Every operator run is bracketed in CacheScope.withScope and reports
   * wall seconds, output counts, the CANDIDATE counts that bound the
-  * quadratic risk, and planted-pair recall. Output: one JSON line per
-  * step on stdout (grep ^STRESS), summary JSON at the end.
+  * quadratic risk, and planted-pair recall. Each step is a [[Trace]]
+  * span and each timed part of it a child span, so a row also carries
+  * the step's jobs, planning ms, gap between jobs and spill. Output:
+  * one JSON line per step on stdout (grep ^STRESS), summary JSON at the
+  * end.
   *
   * Usage: SPARK_DRIVER_MEM=8g sbt "runMain graft.Stress [nDocs]"
   */
 object Stress {
 
-  private def j(kv: (String, Any)*): String =
-    kv.map {
-      case (k, v: String) => "\"" + k + "\":\"" + v + "\""
-      case (k, v: Double) => "\"" + k + "\":" + f"$v%.4f"
-      case (k, v) => "\"" + k + "\":" + v
-    }.mkString("{", ",", "}")
+  /** One STRESS row, finite doubles written with 4 decimals. */
+  private def row(kv: Seq[(String, Any)]) = Json.obj(kv.map {
+    case (k, v: Double) if !v.isNaN && !v.isInfinite => k -> Json.fixed(v, 4)
+    case other => other
+  }: _*)
 
   private def heapMb(): Long = {
     val rt = Runtime.getRuntime
@@ -65,25 +67,30 @@ object Stress {
     // when the parquet exists)
     val only = sys.env.get("STRESS_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // spill telemetry, snapshotted per step — the direct evidence that
-    // a memory-pressured stage degraded to disk instead of OOMing (the
+    // spill telemetry per step — the direct evidence that a
+    // memory-pressured stage degraded to disk instead of OOMing (the
     // 100 TB failure mode that matters)
-    val metrics = new GateMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    val results = scala.collection.mutable.LinkedHashMap[String, String]()
+    val trace = new Trace(spark)
+    val results = scala.collection.mutable.LinkedHashMap[String, Any]()
     def step(name: String)(body: => Seq[(String, Any)]): Unit = {
       if (name != "generate" && !only.forall(_.contains(name))) return
-      val t0 = System.nanoTime()
-      val (sm0, sd0) = (metrics.spillMemB.get, metrics.spillDiskB.get)
-      val kv = body
-      val secs = (System.nanoTime() - t0) / 1e9
-      val line = j((Seq("step" -> name, "secs" -> secs,
+      val (kv, span) = trace.timed(name)(body)
+      val c = trace.total(span)
+      val line = row(Seq("step" -> name, "secs" -> span.secs,
         "heap_mb" -> heapMb(),
-        "spill_mem_mb" -> (metrics.spillMemB.get - sm0) / (1024 * 1024),
-        "spill_disk_mb" -> (metrics.spillDiskB.get - sd0) / (1024 * 1024))
-        ++ kv): _*)
+        "spill_mem_mb" -> c.memSpillBytes / (1024 * 1024),
+        "spill_disk_mb" -> c.diskSpillBytes / (1024 * 1024),
+        "jobs" -> c.jobs.size, "plan_ms" -> c.planMs,
+        "gap_ms" -> span.gapMs(c)) ++ kv ++ trace.children(span).map(p =>
+          p.name -> math.round(p.secs * 100.0) / 100.0))
       results(name) = line
-      println(s"STRESS $line")
+      println(s"STRESS ${Json.write(line)}")
+    }
+    /** One timed part of a step, as a child span: (value, seconds).
+      * The step's row reports the seconds under the key `name`. */
+    def timed[T](name: String)(body: => T): (T, Double) = {
+      val (v, span) = trace.timed(name)(body)
+      (v, span.secs)
     }
 
     // ---- corpus synthesis (written to parquet: a real scan base, and
@@ -97,6 +104,23 @@ object Stress {
       Seq("n_docs" -> n)
     }
     val docs = spark.read.parquet(docsPath)
+    // the vector and edge sets the ANN and graph steps share, each
+    // generated on first use, so STRESS_ONLY selective reruns never
+    // depend on another step having run first
+    val nVecs = math.max(100000L, nDocs / 5)
+    def loadVecs(): DataFrame = {
+      val path = s"$dir/vecs_$nVecs.parquet"
+      if (!new java.io.File(path).isDirectory)
+        vectors(spark, nVecs).write.mode("overwrite").parquet(path)
+      spark.read.parquet(path)
+    }
+    // 100 queries drawn from the vectors themselves
+    def vecQueries(vecs: DataFrame): DataFrame =
+      vecs.filter(col("vec_id") % (nVecs / 100) === 0).limit(100)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def loadEdges(): DataFrame = spark.read.parquet(
+      ensurePagerankEdges(spark, dir, math.max(1000000L, nDocs)))
 
     // source skew telemetry: Zipf head must be hot (the corpus really is
     // skewed) and the groupBy must still be a bounded partial-agg shuffle
@@ -174,14 +198,13 @@ object Stress {
           "planted_dups" -> nPlanted, "planted_found" -> nFound,
           "dup_recall" -> nFound.toDouble / math.max(1, nPlanted))
         // clusters ride the found pairs while they're still persisted
-        val t0 = System.nanoTime()
-        val nClusters = graft.operators.Curation.dupClusters(
-          pairs.select("id_a", "id_b"), "id_a", "id_b")
-          .select(col("cluster_id")).distinct().count()
-        val clSecs = (System.nanoTime() - t0) / 1e9
+        val (nClusters, _) = timed("cluster_secs") {
+          graft.operators.Curation.dupClusters(
+            pairs.select("id_a", "id_b"), "id_a", "id_b")
+            .select(col("cluster_id")).distinct().count()
+        }
         pairs.unpersist()
-        out ++ Seq("n_clusters" -> nClusters,
-          "cluster_secs" -> clSecs)
+        out :+ ("n_clusters" -> nClusters)
       }
     }
 
@@ -191,29 +214,29 @@ object Stress {
       val seed = docs.filter(col("doc_id") % 100 =!= 0)
       val batch = docs.filter(col("doc_id") % 100 === 0)
         .select((col("doc_id") + nDocs).as("doc_id"), col("text"))
-      val t0 = System.nanoTime()
-      graft.pipelines.SignatureStore.create(spark, storeDir, seed,
-        "doc_id", "text")
-      val seedSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val nCands = graft.pipelines.SignatureStore.nearDups(spark,
-        storeDir, batch, "doc_id", "text").count()
-      val qSecs = (System.nanoTime() - t1) / 1e9
+      timed("seed_secs") {
+        graft.pipelines.SignatureStore.create(spark, storeDir, seed,
+          "doc_id", "text")
+      }
+      val (nCands, _) = timed("batch_query_secs") {
+        graft.pipelines.SignatureStore.nearDups(spark,
+          storeDir, batch, "doc_id", "text").count()
+      }
       // append-heavy maintenance: 8 crawl batches land, the store's
       // band table fans out to 8 × n_buckets files, then compaction
       // folds everything non-seed back to one batch — query answers
       // must be COUNT-identical before and after (bit-identity is the
       // d9b gate's job), and the file count is the telemetry the
       // small-file story stands on
-      val ta = System.nanoTime()
-      (0 until 8).foreach { b =>
-        val cb = docs.filter(col("doc_id") % 400 === b)
-          .select((col("doc_id") + 2L * nDocs + b).as("doc_id"),
-            col("text"))
-        graft.pipelines.SignatureStore.append(spark, storeDir, cb,
-          "doc_id", "text", s"c$b")
+      timed("append_8x_secs") {
+        (0 until 8).foreach { b =>
+          val cb = docs.filter(col("doc_id") % 400 === b)
+            .select((col("doc_id") + 2L * nDocs + b).as("doc_id"),
+              col("text"))
+          graft.pipelines.SignatureStore.append(spark, storeDir, cb,
+            "doc_id", "text", s"c$b")
+        }
       }
-      val appendSecs = (System.nanoTime() - ta) / 1e9
       def storeFiles(): Long = {
         def walk(f: java.io.File): Long =
           if (f.isDirectory) f.listFiles().map(walk).sum
@@ -222,30 +245,25 @@ object Stress {
           walk(new java.io.File(s"$storeDir/bands"))
       }
       val filesBefore = storeFiles()
-      val t2 = System.nanoTime()
-      val nBefore = graft.pipelines.SignatureStore.nearDups(spark,
-        storeDir, batch, "doc_id", "text").count()
-      val qBeforeSecs = (System.nanoTime() - t2) / 1e9
-      val t3 = System.nanoTime()
-      graft.pipelines.SignatureStore.compact(spark, storeDir,
-        vacuumAfter = true)
-      val compactSecs = (System.nanoTime() - t3) / 1e9
+      val (nBefore, _) = timed("query_before_compact_secs") {
+        graft.pipelines.SignatureStore.nearDups(spark,
+          storeDir, batch, "doc_id", "text").count()
+      }
+      timed("compact_secs") {
+        graft.pipelines.SignatureStore.compact(spark, storeDir,
+          vacuumAfter = true)
+      }
       val filesAfter = storeFiles()
-      val t4 = System.nanoTime()
-      val nAfter = graft.pipelines.SignatureStore.nearDups(spark,
-        storeDir, batch, "doc_id", "text").count()
-      val qAfterSecs = (System.nanoTime() - t4) / 1e9
+      val (nAfter, _) = timed("query_after_compact_secs") {
+        graft.pipelines.SignatureStore.nearDups(spark,
+          storeDir, batch, "doc_id", "text").count()
+      }
       require(nAfter == nBefore,
         s"compaction changed the answer: $nBefore -> $nAfter")
-      Seq("seed_secs" -> seedSecs, "batch_query_secs" -> qSecs,
-        "n_store_neardups" -> nCands,
+      Seq("n_store_neardups" -> nCands,
         "n_batch" -> batch.count(),
-        "append_8x_secs" -> appendSecs,
         "files_before_compact" -> filesBefore,
-        "query_before_compact_secs" -> qBeforeSecs,
-        "compact_secs" -> compactSecs,
         "files_after_compact" -> filesAfter,
-        "query_after_compact_secs" -> qAfterSecs,
         "neardups_before" -> nBefore, "neardups_after" -> nAfter)
     }
 
@@ -277,20 +295,23 @@ object Stress {
       }
     }
 
-    // ---- bigram LM: ~23 transitions/doc -> ~115M narrow pair rows
-    // through the (id, prev, cur) partial-agg shuffle; the model table
-    // is vocabulary²-bounded. Separation telemetry: docs drawn from the
-    // training templates must score lower NLL than the rest ------------
-    step("bigramlm") {
+    // ---- n-gram LMs over the full corpus, trained on the docs of
+    // templates bp0..bp4. Bigram: ~23 transitions/doc -> ~115M narrow
+    // pair rows through the (id, prev, cur) partial-agg shuffle; the
+    // model table is vocabulary²-bounded. Trigram (interpolated): one
+    // order up — the doc side collapses to per-doc (w1,w2,w3,nk); the
+    // model and FOUR derived marginals join by their n-gram keys, the
+    // heavier join fan of the CCNet-grade scorer. Separation telemetry:
+    // docs drawn from the training templates must score lower NLL than
+    // the rest. ---------------------------------------------------------
+    def lmStep(score: (DataFrame, CacheScope) => DataFrame) =
       CacheScope.withScope { implicit scope =>
-        val train = docs.filter(pmod(col("doc_id"), lit(20)) < 5)
-        val lm = graft.operators.TextAnalysis.bigramLm(train, "text")
-        val scored = graft.operators.TextAnalysis.bigramLogProb(
-          docs, "doc_id", "text", lm)
+        val inTarget = pmod(col("doc_id"), lit(20)) < 5
+        val scored = score(docs.filter(inTarget), scope)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = scored.count()
         val sep = scored.join(docs.select(col("doc_id"),
-            (pmod(col("doc_id"), lit(20)) < 5).as("in_target")), "doc_id")
+            inTarget.as("in_target")), "doc_id")
           .groupBy(col("in_target"))
           .agg(avg(col("avg_nll")).as("mean_nll"))
           .collect().map(r => r.getBoolean(0) -> r.getDouble(1)).toMap
@@ -301,33 +322,11 @@ object Stress {
           "separated" -> (sep.getOrElse(true, Double.MaxValue) <
             sep.getOrElse(false, 0.0)))
       }
-    }
-
-    // ---- trigram LM (interpolated): one order up from bigramlm — the
-    // doc side collapses to per-doc (w1,w2,w3,nk); the model and FOUR
-    // derived marginals join by their n-gram keys. Sizes the heavier
-    // join fan of the CCNet-grade scorer at full corpus. ----------------
-    step("trigramlm") {
-      CacheScope.withScope { implicit scope =>
-        val train = docs.filter(pmod(col("doc_id"), lit(20)) < 5)
-        val lm = graft.operators.TextAnalysis.trigramLm(train, "text")
-        val scored = graft.operators.TextAnalysis.trigramLogProb(
-          docs, "doc_id", "text", lm)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = scored.count()
-        val sep = scored.join(docs.select(col("doc_id"),
-            (pmod(col("doc_id"), lit(20)) < 5).as("in_target")), "doc_id")
-          .groupBy(col("in_target"))
-          .agg(avg(col("avg_nll")).as("mean_nll"))
-          .collect().map(r => r.getBoolean(0) -> r.getDouble(1)).toMap
-        scored.unpersist()
-        Seq("n_scored" -> n,
-          "mean_nll_target" -> sep.getOrElse(true, Double.NaN),
-          "mean_nll_rest" -> sep.getOrElse(false, Double.NaN),
-          "separated" -> (sep.getOrElse(true, Double.MaxValue) <
-            sep.getOrElse(false, 0.0)))
-      }
-    }
+    val ta = graft.operators.TextAnalysis
+    step("bigramlm")(lmStep((train, sc) => ta.bigramLogProb(
+      docs, "doc_id", "text", ta.bigramLm(train, "text"))(sc)))
+    step("trigramlm")(lmStep((train, sc) => ta.trigramLogProb(
+      docs, "doc_id", "text", ta.trigramLm(train, "text"))(sc)))
 
     // ---- CCNet bucket assignment under language skew: one language
     // holds 50% of the corpus — the shape that makes nllRankBuckets'
@@ -363,12 +362,12 @@ object Stress {
         val n = scored.count()
         val topFrac = scored.filter(col("lang") === "en").count()
           .toDouble / n
-        val t0 = System.nanoTime()
-        val sortCounts = graft.operators.TextAnalysis.nllRankBuckets(
-          scored, "doc_id", "lang")
-          .groupBy(col("bucket_label")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val sortSecs = (System.nanoTime() - t0) / 1e9
+        val (sortCounts, sortSecs) = timed("sort_secs") {
+          graft.operators.TextAnalysis.nllRankBuckets(
+            scored, "doc_id", "lang")
+            .groupBy(col("bucket_label")).agg(count(lit(1)).as("n"))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        }
         // m=15 (2^-15 relative resolution): the synthetic corpus's
         // per-transition NLL is CONCENTRATED (template docs share most
         // transitions), and at the default m=9 every doc of a language
@@ -376,12 +375,12 @@ object Stress {
         // edge and the whole language reads "head". Real web corpora
         // have orders more score spread; the finer resolution stands in
         // for that here and costs only more (tiny) bucket-count rows.
-        val t1 = System.nanoTime()
-        val skCounts = graft.operators.TextAnalysis.nllSketchBuckets(
-          scored, "doc_id", "lang", m = 15)
-          .groupBy(col("bucket_label")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val sketchSecs = (System.nanoTime() - t1) / 1e9
+        val (skCounts, sketchSecs) = timed("sketch_secs") {
+          graft.operators.TextAnalysis.nllSketchBuckets(
+            scored, "doc_id", "lang", m = 15)
+            .groupBy(col("bucket_label")).agg(count(lit(1)).as("n"))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        }
         // agreement (untimed): fraction of docs with the same label
         val agree = graft.operators.TextAnalysis.nllRankBuckets(
           scored, "doc_id", "lang")
@@ -396,8 +395,6 @@ object Stress {
         scored.unpersist()
         Seq("n_docs" -> n, "top_lang_frac" ->
             math.round(topFrac * 1000.0) / 1000.0,
-          "sort_secs" -> math.round(sortSecs * 100.0) / 100.0,
-          "sketch_secs" -> math.round(sketchSecs * 100.0) / 100.0,
           "sketch_speedup" ->
             math.round(sortSecs / sketchSecs * 100.0) / 100.0,
           "sort_head" -> sortCounts.getOrElse("head", 0L),
@@ -448,10 +445,10 @@ object Stress {
         val wf = scope.cache(graft.operators.TextAnalysis
           .bpeWordFreq(docs, "text"))
         val vocab = wf.count()
-        val t0 = System.nanoTime()
-        val merges = graft.operators.TextAnalysis.bpeTrain(wf, nMerges = 10)
-        val n = merges.count()
-        val iterSecs = (System.nanoTime() - t0) / 1e9 / math.max(n, 1)
+        val (n, trainSecs) = timed("train_secs") {
+          graft.operators.TextAnalysis.bpeTrain(wf, nMerges = 10).count()
+        }
+        val iterSecs = trainSecs / math.max(n, 1)
         Seq("vocab" -> vocab, "n_merges" -> n,
           "secs_per_merge" -> math.round(iterSecs * 1000.0) / 1000.0)
       }
@@ -472,25 +469,22 @@ object Stress {
         val vocab = wf.count()
         val nMerges = sys.env.get("STRESS_BPE_MERGES")
           .map(_.toInt).getOrElse(2000)
-        val t0 = System.nanoTime()
-        val mergeTable = graft.operators.TextAnalysis
-          .bpeTrainLocal(wf, nMerges = nMerges)
-        val mergeRows = mergeTable.orderBy(col("iter")).collect()
-        val trainSecs = (System.nanoTime() - t0) / 1e9
+        val (mergeRows, trainSecs) = timed("train_secs") {
+          graft.operators.TextAnalysis.bpeTrainLocal(wf, nMerges = nMerges)
+            .orderBy(col("iter")).collect()
+        }
         val merges = mergeRows
           .map(r => (r.getString(1), r.getString(2))).toSeq
-        val t1 = System.nanoTime()
-        val enc = graft.operators.TextAnalysis
-          .bpeEncodeWords(wf.select(col("word")), "word", merges)
-          .agg(count(lit(1)).as("n_words"),
-            sum(size(col("syms"))).as("n_syms"))
-          .collect().head
-        val encSecs = (System.nanoTime() - t1) / 1e9
+        val (enc, _) = timed("encode_secs") {
+          graft.operators.TextAnalysis
+            .bpeEncodeWords(wf.select(col("word")), "word", merges)
+            .agg(count(lit(1)).as("n_words"),
+              sum(size(col("syms"))).as("n_syms"))
+            .collect().head
+        }
         Seq("vocab" -> vocab, "n_merges" -> merges.size,
-          "train_secs" -> math.round(trainSecs * 100.0) / 100.0,
           "ms_per_merge" -> math.round(
             trainSecs * 1e5 / math.max(merges.size, 1)) / 100.0,
-          "encode_secs" -> math.round(encSecs * 100.0) / 100.0,
           "n_words_encoded" -> enc.getLong(0),
           "n_syms_total" -> enc.getLong(1))
       }
@@ -511,27 +505,26 @@ object Stress {
           .map(_.toInt).getOrElse(32000)
         val wf = scope.cache(graft.operators.TextAnalysis
           .bpeWordFreq(docs, "text"))
-        val t0 = System.nanoTime()
-        val merges = graft.operators.TextAnalysis
-          .bpeTrainLocal(wf, nMerges = nMerges)
-          .orderBy(col("iter")).collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-        val trainSecs = (System.nanoTime() - t0) / 1e9
+        val (merges, _) = timed("train_secs") {
+          graft.operators.TextAnalysis
+            .bpeTrainLocal(wf, nMerges = nMerges)
+            .orderBy(col("iter")).collect()
+            .map(r => (r.getString(1), r.getString(2))).toSeq
+        }
         def encode(corpus: DataFrame, tag: String): Seq[(String, Any)] =
           CacheScope.withScope { s2 =>
-            val t = System.nanoTime()
-            val (vocab, out) = graft.operators.TextAnalysis
-              .bpeEncodeCorpus(corpus, "doc_id", "text", merges)(s2)
-            val agg = out.agg(count(lit(1)).as("n"),
-              sum(col("n_tok").cast("long")).as("tok"),
-              max(col("n_tok")).as("mx")).collect().head
-            val secs = (System.nanoTime() - t) / 1e9
+            val ((vocab, agg), secs) = timed(s"${tag}_secs") {
+              val (vocab, out) = graft.operators.TextAnalysis
+                .bpeEncodeCorpus(corpus, "doc_id", "text", merges)(s2)
+              (vocab, out.agg(count(lit(1)).as("n"),
+                sum(col("n_tok").cast("long")).as("tok"),
+                max(col("n_tok")).as("mx")).collect().head)
+            }
             val nTok = agg.getLong(1)
             Seq(s"${tag}_docs" -> agg.getLong(0),
               s"${tag}_tokens" -> nTok,
               s"${tag}_max_doc_tokens" -> agg.getInt(2),
               s"${tag}_vocab_ids" -> vocab.count(),
-              s"${tag}_secs" -> math.round(secs * 100.0) / 100.0,
               s"${tag}_tokens_per_sec" -> math.round(nTok / secs))
           }
         val full = encode(docs, "full")
@@ -542,9 +535,7 @@ object Stress {
           .groupBy((col("doc_id") / 20).cast("long").as("doc_id"))
           .agg(concat_ws(" ", collect_list(col("text"))).as("text"))
         val long20 = encode(longDocs, "long20")
-        Seq("n_merges" -> merges.size,
-          "train_secs" -> math.round(trainSecs * 100.0) / 100.0) ++
-          full ++ long20
+        Seq("n_merges" -> merges.size) ++ full ++ long20
       }
     }
 
@@ -560,26 +551,24 @@ object Stress {
           .map(_.toInt).getOrElse(32000)
         val wf = scope.cache(
           graft.operators.ByteBpe.byteWordFreq(docs, "text"))
-        val t0 = System.nanoTime()
-        val merges = graft.operators.ByteBpe.train(wf, nMerges)
-          .orderBy(col("iter")).collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-        val trainSecs = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val (vocab, out) = graft.operators.ByteBpe
-          .encodeCorpus(docs, "doc_id", "text", merges)
-        val agg = out.agg(count(lit(1)).as("n"),
-          sum(col("n_tok").cast("long")).as("tok"),
-          max(col("n_tok")).as("mx")).collect().head
-        val secs = (System.nanoTime() - t1) / 1e9
+        val (merges, _) = timed("train_secs") {
+          graft.operators.ByteBpe.train(wf, nMerges)
+            .orderBy(col("iter")).collect()
+            .map(r => (r.getString(1), r.getString(2))).toSeq
+        }
+        val ((vocab, agg), secs) = timed("encode_secs") {
+          val (vocab, out) = graft.operators.ByteBpe
+            .encodeCorpus(docs, "doc_id", "text", merges)
+          (vocab, out.agg(count(lit(1)).as("n"),
+            sum(col("n_tok").cast("long")).as("tok"),
+            max(col("n_tok")).as("mx")).collect().head)
+        }
         val nTok = agg.getLong(1)
         Seq("n_merges" -> merges.size,
-          "train_secs" -> math.round(trainSecs * 100.0) / 100.0,
           "docs" -> agg.getLong(0),
           "tokens" -> nTok,
           "max_doc_tokens" -> agg.getInt(2),
           "vocab_ids" -> vocab.count(),
-          "encode_secs" -> math.round(secs * 100.0) / 100.0,
           "tokens_per_sec" -> math.round(nTok / secs))
       }
     }
@@ -595,16 +584,16 @@ object Stress {
               coalesce(col("text"), lit(""))), w => w =!= ""),
             w => pmod(conv(substring(md5(concat(lit("tok|"), w)), 1, 8),
               16, 10).cast("long"), lit(50000L))).as("tok_ids"))
-        val t0 = System.nanoTime()
-        val out = graft.operators.Curation.spanCorrupt(toks, "doc_id",
-          "tok_ids", window = 20, span = 3, sentinelBase = 50000L,
-          seed = "t5", validateIds = true)
-        val agg = out.agg(count(lit(1)).as("n"),
-          sum(col("n_tok").cast("long")).as("tok"),
-          sum(col("n_masked").cast("long")).as("msk"),
-          sum(size(col("targets")).cast("long")).as("tgt"))
-          .collect().head
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (agg, secs) = timed("secs") {
+          graft.operators.Curation.spanCorrupt(toks, "doc_id",
+            "tok_ids", window = 20, span = 3, sentinelBase = 50000L,
+            seed = "t5", validateIds = true)
+            .agg(count(lit(1)).as("n"),
+              sum(col("n_tok").cast("long")).as("tok"),
+              sum(col("n_masked").cast("long")).as("msk"),
+              sum(size(col("targets")).cast("long")).as("tgt"))
+            .collect().head
+        }
         val nTok = agg.getLong(1)
         Seq("docs" -> agg.getLong(0),
           "tokens" -> nTok,
@@ -612,7 +601,6 @@ object Stress {
           "mask_frac" -> math.round(agg.getLong(2).toDouble / nTok
             * 1e4) / 1e4,
           "target_len" -> agg.getLong(3),
-          "secs" -> math.round(secs * 100.0) / 100.0,
           "tokens_per_sec" -> math.round(nTok / secs))
       }
     }
@@ -624,18 +612,17 @@ object Stress {
     // the scan). -----------------------------------------------------------
     step("hash_embed") {
       CacheScope.withScope { implicit scope =>
-        val t0 = System.nanoTime()
-        val emb = graft.operators.Similarity.hashEmbed(docs, "doc_id",
-          "text", dim = 64, seed = "he")
-        val agg = emb.agg(count(lit(1)).as("n"),
-          sum(when(abs(aggregate(col("embedding"), lit(0.0),
-              (a, x) => a + x * x) - lit(1.0)) < lit(1e-9), 1L)
-            .otherwise(0L)).as("unit")).collect().head
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (agg, secs) = timed("secs") {
+          graft.operators.Similarity.hashEmbed(docs, "doc_id",
+            "text", dim = 64, seed = "he")
+            .agg(count(lit(1)).as("n"),
+              sum(when(abs(aggregate(col("embedding"), lit(0.0),
+                  (a, x) => a + x * x) - lit(1.0)) < lit(1e-9), 1L)
+                .otherwise(0L)).as("unit")).collect().head
+        }
         Seq("vectors" -> agg.getLong(0),
           "unit_norm" -> agg.getLong(1),
           "dim" -> 64,
-          "secs" -> math.round(secs * 100.0) / 100.0,
           "vecs_per_sec" -> math.round(agg.getLong(0) / secs))
       }
     }
@@ -650,17 +637,17 @@ object Stress {
     // IVF cell boundary — the known nprobe-1 trade SemDeDup makes. ------
     step("hash_semdedup") {
       CacheScope.withScope { implicit scope =>
-        val t0 = System.nanoTime()
-        val emb = scope.cache(graft.operators.Similarity.hashEmbed(
-          docs, "doc_id", "text", dim = 64, seed = "he"))
-        val index = graft.operators.Similarity.ivfBuild(emb, "doc_id",
-          "embedding", nCells = 1024, iters = 2)
-        val out = graft.operators.Dedup.semanticDedup(emb, "doc_id",
-          "embedding", index.centroids, threshold = 0.95,
-          maxClusterSize = 100000)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nDropped = out.filter(!col("keep")).count()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val ((out, nDropped), _) = timed("secs") {
+          val emb = scope.cache(graft.operators.Similarity.hashEmbed(
+            docs, "doc_id", "text", dim = 64, seed = "he"))
+          val index = graft.operators.Similarity.ivfBuild(emb, "doc_id",
+            "embedding", nCells = 1024, iters = 2)
+          val out = graft.operators.Dedup.semanticDedup(emb, "doc_id",
+            "embedding", index.centroids, threshold = 0.95,
+            maxClusterSize = 100000)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (out, out.filter(!col("keep")).count())
+        }
         val maxCell = out.groupBy(col("cell")).agg(count(lit(1)).as("n"))
           .agg(max(col("n"))).collect().head.getLong(0)
         val planted = docs.filter(col("doc_id") % 97 === 0 &&
@@ -675,7 +662,6 @@ object Stress {
           .count()
         out.unpersist()
         Seq("vectors" -> nDocs,
-          "secs" -> math.round(secs * 100.0) / 100.0,
           "n_dropped" -> nDropped,
           "max_cell" -> maxCell,
           "planted_pairs" -> nPlanted,
@@ -694,17 +680,17 @@ object Stress {
     // cosines either way), ~4× verify candidates. ------------------------
     step("hash_semdedup_mp") {
       CacheScope.withScope { implicit scope =>
-        val t0 = System.nanoTime()
-        val emb = scope.cache(graft.operators.Similarity.hashEmbed(
-          docs, "doc_id", "text", dim = 64, seed = "he"))
-        val index = graft.operators.Similarity.ivfBuild(emb, "doc_id",
-          "embedding", nCells = 1024, iters = 2)
-        val out = graft.operators.Dedup.semanticDedup(emb, "doc_id",
-          "embedding", index.centroids, threshold = 0.95,
-          maxClusterSize = 100000, nprobe = 2)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nDropped = out.filter(!col("keep")).count()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val ((out, nDropped), _) = timed("secs") {
+          val emb = scope.cache(graft.operators.Similarity.hashEmbed(
+            docs, "doc_id", "text", dim = 64, seed = "he"))
+          val index = graft.operators.Similarity.ivfBuild(emb, "doc_id",
+            "embedding", nCells = 1024, iters = 2)
+          val out = graft.operators.Dedup.semanticDedup(emb, "doc_id",
+            "embedding", index.centroids, threshold = 0.95,
+            maxClusterSize = 100000, nprobe = 2)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (out, out.filter(!col("keep")).count())
+        }
         val planted = docs.filter(col("doc_id") % 97 === 0 &&
           col("doc_id") + 1 < nDocs && col("doc_id") % 101 =!= 0 &&
           (col("doc_id") + 1) % 101 =!= 0)
@@ -716,7 +702,6 @@ object Stress {
           .count()
         out.unpersist()
         Seq("vectors" -> nDocs, "nprobe" -> 2,
-          "secs" -> math.round(secs * 100.0) / 100.0,
           "n_dropped" -> nDropped,
           "planted_pairs" -> nPlanted,
           "planted_collapsed" -> nCaught,
@@ -745,16 +730,11 @@ object Stress {
           .bpeWordFreq(docs, "text"))
         wf.count()
         val ta = graft.operators.TextAnalysis
-        def timed[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime()
-          val r = f
-          (r, (System.nanoTime() - t0) / 1e9)
-        }
         // char-BPE (2k merges)
         val merges = ta.bpeTrainLocal(wf, nMerges = 2000)
           .orderBy(col("iter")).collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
-        val (cvp, cSecs) = timed {
+        val (cvp, cSecs) = timed("bpe_char_encode_secs") {
           val (v, p) = ta.bpeEncodeCorpus(docs, "doc_id", "text", merges)
           val pc = p.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -766,7 +746,7 @@ object Stress {
             graft.operators.ByteBpe.byteWordFreq(docs, "text"), 2000)
           .orderBy(col("iter")).collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
-        val (yvp, ySecs) = timed {
+        val (yvp, ySecs) = timed("bpe_byte_encode_secs") {
           val (v, p) = graft.operators.ByteBpe.encodeCorpus(
             docs, "doc_id", "text", bmerges)
           val pc = p.persist(
@@ -777,7 +757,7 @@ object Stress {
         // unigram (8k pieces)
         val umodel = graft.operators.Unigram.trainLocal(wf,
           vocabSize = 8000, emIters = 2)
-        val (uvp, uSecs) = timed {
+        val (uvp, uSecs) = timed("unigram_encode_secs") {
           val (v, p) = graft.operators.Unigram.encodeCorpus(
             docs, "doc_id", "text", umodel.costs)
           val pc = p.persist(
@@ -789,7 +769,7 @@ object Stress {
         val pieces = graft.operators.WordPiece.vocab(wf,
             vocabSize = 8000)
           .select(col("piece")).collect().map(_.getString(0)).toIndexedSeq
-        val (wvp, wSecs) = timed {
+        val (wvp, wSecs) = timed("wordpiece_encode_secs") {
           val (v, p) = graft.operators.WordPiece.encodeCorpus(
             docs, "doc_id", "text", pieces)
           val pc = p.persist(
@@ -819,8 +799,6 @@ object Stress {
               math.round(r.getDouble(8) * 1e4) / 1e4,
             s"${tag}_bytes_per_token" ->
               math.round(r.getDouble(9) * 1e4) / 1e4,
-            s"${tag}_encode_secs" ->
-              math.round(secsBy(fam) * 100.0) / 100.0,
             s"${tag}_tokens_per_sec" ->
               math.round(nTok / secsBy(fam)))
         }
@@ -847,12 +825,13 @@ object Stress {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val nTok = perDoc.agg(sum(col("n_tok"))).collect()
           .head.getLong(0)
-        val t0 = System.nanoTime()
-        val dec = bb.decodeCorpus(perDoc, "token_ids", bmerges)
-          .select(col("doc_id"), col("decoded"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dec.count()
-        val decSecs = (System.nanoTime() - t0) / 1e9
+        val (dec, decSecs) = timed("bpe_byte_sp_decode_secs") {
+          val d = bb.decodeCorpus(perDoc, "token_ids", bmerges)
+            .select(col("doc_id"), col("decoded"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          d.count()
+          d
+        }
         val mismatches = dec
           .join(docs.select(col("doc_id"),
             coalesce(col("text"), lit("")).as("text")), Seq("doc_id"))
@@ -869,22 +848,18 @@ object Stress {
         val wpd = wpd0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val wTok = wpd.agg(sum(col("n_tok"))).collect().head.getLong(0)
-        val t1 = System.nanoTime()
-        val wn = graft.operators.WordPiece.decodeCorpus(wpd,
-            "token_ids", pieces)
-          .select(length(col("decoded")).as("l"))
-          .agg(sum(col("l"))).collect().head.getLong(0)
-        val wSecs = (System.nanoTime() - t1) / 1e9
+        val (wn, wSecs) = timed("wordpiece_decode_secs") {
+          graft.operators.WordPiece.decodeCorpus(wpd, "token_ids", pieces)
+            .select(length(col("decoded")).as("l"))
+            .agg(sum(col("l"))).collect().head.getLong(0)
+        }
         wpd.unpersist(blocking = false)
         Seq("docs" -> nDocs,
           "bpe_byte_sp_tokens" -> nTok,
-          "bpe_byte_sp_decode_secs" ->
-            math.round(decSecs * 100.0) / 100.0,
           "bpe_byte_sp_decode_tok_per_sec" ->
             math.round(nTok / decSecs),
           "roundtrip_mismatches" -> mismatches,
           "wordpiece_tokens" -> wTok,
-          "wordpiece_decode_secs" -> math.round(wSecs * 100.0) / 100.0,
           "wordpiece_decode_tok_per_sec" -> math.round(wTok / wSecs),
           "wordpiece_decoded_chars" -> wn)
       }
@@ -897,27 +872,25 @@ object Stress {
         val wf = scope.cache(graft.operators.TextAnalysis
           .bpeWordFreq(docs, "text"))
         val nWords = wf.count()
-        val t0 = System.nanoTime()
-        val model = graft.operators.Unigram.trainLocal(wf,
-          vocabSize = vocabSize, emIters = 2)
-        val trainSecs = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val (vocabDf, out) = graft.operators.Unigram.encodeCorpus(
-          docs, "doc_id", "text", model.costs)
-        val agg = out.agg(count(lit(1)).as("n"),
-          sum(col("n_tok").cast("long")).as("tok"),
-          sum(col("score_mu")).as("nll"),
-          max(col("n_tok")).as("mx")).collect().head
-        val encodeSecs = (System.nanoTime() - t1) / 1e9
+        val (model, _) = timed("train_secs") {
+          graft.operators.Unigram.trainLocal(wf,
+            vocabSize = vocabSize, emIters = 2)
+        }
+        val ((vocabDf, agg), encodeSecs) = timed("encode_secs") {
+          val (vocabDf, out) = graft.operators.Unigram.encodeCorpus(
+            docs, "doc_id", "text", model.costs)
+          (vocabDf, out.agg(count(lit(1)).as("n"),
+            sum(col("n_tok").cast("long")).as("tok"),
+            sum(col("score_mu")).as("nll"),
+            max(col("n_tok")).as("mx")).collect().head)
+        }
         val nTok = agg.getLong(1)
         Seq("n_distinct_words" -> nWords,
           "vocab_pieces" -> model.pieces.size,
-          "train_secs" -> math.round(trainSecs * 100.0) / 100.0,
           "encode_docs" -> agg.getLong(0),
           "encode_tokens" -> nTok,
           "max_doc_tokens" -> agg.getInt(3),
           "vocab_ids_used" -> vocabDf.count(),
-          "encode_secs" -> math.round(encodeSecs * 100.0) / 100.0,
           "tokens_per_sec" -> math.round(nTok / encodeSecs),
           "avg_cost_mu_per_token" -> math.round(
             agg.getLong(2).toDouble / math.max(1L, nTok)))
@@ -938,29 +911,27 @@ object Stress {
         val wf = scope.cache(graft.operators.TextAnalysis
           .bpeWordFreq(docs, "text"))
         val nWords = wf.count()
-        val t0 = System.nanoTime()
-        val pieces = graft.operators.WordPiece.vocab(wf,
-            vocabSize = vocabSize, maxPieceLen = 8)
-          .select(col("piece")).collect().map(_.getString(0)).toIndexedSeq
-        val vocabSecs = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val (vocabDf, out) = graft.operators.WordPiece.encodeCorpus(
-          docs, "doc_id", "text", pieces)
-        val agg = out.agg(count(lit(1)).as("n"),
-          sum(col("n_tok").cast("long")).as("tok"),
-          sum(col("n_unk").cast("long")).as("unk"),
-          max(col("n_tok")).as("mx")).collect().head
-        val encodeSecs = (System.nanoTime() - t1) / 1e9
+        val (pieces, _) = timed("vocab_secs") {
+          graft.operators.WordPiece.vocab(wf,
+              vocabSize = vocabSize, maxPieceLen = 8)
+            .select(col("piece")).collect().map(_.getString(0)).toIndexedSeq
+        }
+        val ((vocabDf, agg), encodeSecs) = timed("encode_secs") {
+          val (vocabDf, out) = graft.operators.WordPiece.encodeCorpus(
+            docs, "doc_id", "text", pieces)
+          (vocabDf, out.agg(count(lit(1)).as("n"),
+            sum(col("n_tok").cast("long")).as("tok"),
+            sum(col("n_unk").cast("long")).as("unk"),
+            max(col("n_tok")).as("mx")).collect().head)
+        }
         val nTok = agg.getLong(1)
         Seq("n_distinct_words" -> nWords,
           "vocab_pieces" -> pieces.size,
-          "vocab_secs" -> math.round(vocabSecs * 100.0) / 100.0,
           "encode_docs" -> agg.getLong(0),
           "encode_tokens" -> nTok,
           "unk_words" -> agg.getLong(2),
           "max_doc_tokens" -> agg.getInt(3),
           "vocab_ids_used" -> vocabDf.count(),
-          "encode_secs" -> math.round(encodeSecs * 100.0) / 100.0,
           "tokens_per_sec" -> math.round(nTok / encodeSecs))
       }
     }
@@ -1074,15 +1045,15 @@ object Stress {
           .collect().head.getLong(0)
         // the NEW terminal hop: token sequences → T5 denoising pairs
         // (map-only — the whole hop adds one scan over the token frame)
-        val tDen = System.nanoTime()
-        val pairs = graft.operators.Curation.spanCorrupt(toks,
-          "doc_id", "token_ids", window = 20, span = 3,
-          sentinelBase = 100000L, seed = "t5", validateIds = true)
-        val pAgg = pairs.agg(count(lit(1)).as("n"),
-          sum(col("n_masked").cast("long")).as("msk"),
-          sum(size(col("inputs")).cast("long")).as("inp"))
-          .collect().head
-        val denoiseSecs = (System.nanoTime() - tDen) / 1e9
+        val (pAgg, _) = timed("denoise_secs") {
+          graft.operators.Curation.spanCorrupt(toks,
+            "doc_id", "token_ids", window = 20, span = 3,
+            sentinelBase = 100000L, seed = "t5", validateIds = true)
+            .agg(count(lit(1)).as("n"),
+              sum(col("n_masked").cast("long")).as("msk"),
+              sum(size(col("inputs")).cast("long")).as("inp"))
+            .collect().head
+        }
         // the shipped dataset card over the final corpus; lang rides
         // the heuristic langId (synthetic text scores 'und' — the
         // card must survive that, not assume clean labels)
@@ -1100,7 +1071,6 @@ object Stress {
           "denoise_docs" -> pAgg.getLong(0),
           "denoise_masked" -> pAgg.getLong(1),
           "denoise_input_len" -> pAgg.getLong(2),
-          "denoise_secs" -> math.round(denoiseSecs * 100.0) / 100.0,
           "card_n_docs" -> card.getAs[Long]("n_docs"),
           "card_n_words" -> card.getAs[Long]("n_words"),
           "card_dup_rate" -> card.getAs[Double]("dup_rate"),
@@ -1119,11 +1089,6 @@ object Stress {
     step("multimodal") {
       val nMedia = math.max(50000L, nDocs / 10)
       val ids = spark.range(nMedia).toDF("media_id")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("payload",
-          org.apache.spark.sql.types.BinaryType)))
       val media = spark.createDataFrame(ids.rdd.mapPartitions { it =>
         it.map { r =>
           val id = r.getLong(0)
@@ -1142,39 +1107,35 @@ object Stress {
                   (((id + i) % 2000) - 1000).toShort))
           org.apache.spark.sql.Row(id, payload)
         }
-      }, schema).persist(
+      }, mediaSchema).persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = media.count()
-      val t0 = System.nanoTime()
-      val probed = graft.operators.Multimodal.probeMedia(
-        media, "media_id", "payload")
-      val byType = probed.groupBy(col("meta.media_type"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val probeSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val imgStats = graft.operators.Multimodal.decodeImageStats(
-        media.filter(col("media_id") % 2 === 0))
-        .agg(count(lit(1)), sum(col("width").cast("long"))).collect().head
-      val decodeSecs = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      val resized = graft.operators.Multimodal.resizeImages(
-        graft.operators.Multimodal.probeMedia(
-          media.filter(col("media_id") % 2 === 0), "media_id",
-          "payload"), 8, 6)
-        .agg(count(lit(1)),
-          sum(col("meta.size_bytes"))).collect().head
-      val resizeSecs = (System.nanoTime() - t2) / 1e9
+      val (byType, probeSecs) = timed("probe_secs") {
+        graft.operators.Multimodal.probeMedia(media, "media_id", "payload")
+          .groupBy(col("meta.media_type"))
+          .agg(count(lit(1)).as("n")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      val (imgStats, decodeSecs) = timed("decode_secs") {
+        graft.operators.Multimodal.decodeImageStats(
+          media.filter(col("media_id") % 2 === 0))
+          .agg(count(lit(1)), sum(col("width").cast("long"))).collect().head
+      }
+      val (resized, resizeSecs) = timed("resize_secs") {
+        graft.operators.Multimodal.resizeImages(
+          graft.operators.Multimodal.probeMedia(
+            media.filter(col("media_id") % 2 === 0), "media_id",
+            "payload"), 8, 6)
+          .agg(count(lit(1)),
+            sum(col("meta.size_bytes"))).collect().head
+      }
       media.unpersist(blocking = false)
       Seq("n_media" -> n,
         "n_images" -> byType.getOrElse("image", 0L),
         "n_audio" -> byType.getOrElse("audio", 0L),
-        "probe_secs" -> math.round(probeSecs * 100.0) / 100.0,
         "probe_per_sec" -> math.round(n / probeSecs),
-        "decode_secs" -> math.round(decodeSecs * 100.0) / 100.0,
         "decode_imgs_per_sec" -> math.round(
           imgStats.getLong(0) / decodeSecs),
-        "resize_secs" -> math.round(resizeSecs * 100.0) / 100.0,
         "resize_imgs_per_sec" -> math.round(
           resized.getLong(0) / resizeSecs))
     }
@@ -1187,11 +1148,6 @@ object Stress {
     step("multimodal_gif") {
       val nGifs = math.max(20000L, nDocs / 100)
       val ids = spark.range(nGifs).toDF("media_id")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("payload",
-          org.apache.spark.sql.types.BinaryType)))
       val media = spark.createDataFrame(ids.rdd.mapPartitions { it =>
         it.map { r =>
           val id = r.getLong(0)
@@ -1200,26 +1156,23 @@ object Stress {
               (16 + (id % 4) * 4).toInt, (12 + (id % 3) * 4).toInt,
               graft.operators.Multimodal.GifIo.testbedFrames(id)))
         }
-      }, schema).persist(
+      }, mediaSchema).persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = media.count()
-      val t0 = System.nanoTime()
-      val sampled = graft.operators.Multimodal.sampleGifFrames(media, 3)
-        .agg(count(lit(1)), sum(col("mean_r"))).collect().head
-      val sampleSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val extracted = graft.operators.Multimodal
-        .extractGifFrames(media, 2)
-        .agg(count(lit(1)), sum(octet_length(col("payload"))))
-        .collect().head
-      val extractSecs = (System.nanoTime() - t1) / 1e9
+      val (sampled, sampleSecs) = timed("sample_secs") {
+        graft.operators.Multimodal.sampleGifFrames(media, 3)
+          .agg(count(lit(1)), sum(col("mean_r"))).collect().head
+      }
+      val (extracted, extractSecs) = timed("extract_secs") {
+        graft.operators.Multimodal.extractGifFrames(media, 2)
+          .agg(count(lit(1)), sum(octet_length(col("payload"))))
+          .collect().head
+      }
       media.unpersist(blocking = false)
       Seq("n_gifs" -> n,
         "frames_sampled" -> sampled.getLong(0),
-        "sample_secs" -> math.round(sampleSecs * 100.0) / 100.0,
         "gifs_sampled_per_sec" -> math.round(n / sampleSecs),
         "frames_extracted" -> extracted.getLong(0),
-        "extract_secs" -> math.round(extractSecs * 100.0) / 100.0,
         "gifs_extracted_per_sec" -> math.round(n / extractSecs))
     }
 
@@ -1302,11 +1255,7 @@ object Stress {
     // ---- embedding-cosine near-dup at nDocs/5 vectors, planes sized
     // with log2(n) per the density note (16 planes -> 65k buckets) ------
     step("embdup") {
-      val nVecs = math.max(100000L, nDocs / 5)
-      val vecsPath = s"$dir/vecs_$nVecs.parquet"
-      if (!new java.io.File(vecsPath).isDirectory)
-        vectors(spark, nVecs).write.mode("overwrite").parquet(vecsPath)
-      val vecs = spark.read.parquet(vecsPath)
+      val vecs = loadVecs()
       CacheScope.withScope { implicit scope =>
         val pairs = graft.operators.Dedup.embeddingDupPairs(vecs,
           "vec_id", "embedding", threshold = 0.999, planes = 16,
@@ -1334,15 +1283,11 @@ object Stress {
     // copies share their original's direction hence its cell — recall
     // for them must be exact -------------------------------------------
     step("semdedup") {
-      val nVecs = math.max(100000L, nDocs / 5)
-      val vecsPath = s"$dir/vecs_$nVecs.parquet"
-      if (!new java.io.File(vecsPath).isDirectory)
-        vectors(spark, nVecs).write.mode("overwrite").parquet(vecsPath)
-      val vecs = spark.read.parquet(vecsPath)
-      val t0 = System.nanoTime()
-      val index = graft.operators.Similarity.ivfBuild(vecs, "vec_id",
-        "embedding", nCells = 1024, iters = 2)
-      val trainSecs = (System.nanoTime() - t0) / 1e9
+      val vecs = loadVecs()
+      val (index, _) = timed("train_secs") {
+        graft.operators.Similarity.ivfBuild(vecs, "vec_id",
+          "embedding", nCells = 1024, iters = 2)
+      }
       CacheScope.withScope { implicit scope =>
         val out = graft.operators.Dedup.semanticDedup(vecs, "vec_id",
           "embedding", index.centroids, threshold = 0.999,
@@ -1364,7 +1309,7 @@ object Stress {
           .join(out.filter(!col("keep")).select(col("vec_id")),
             Seq("vec_id"), "left_semi").count()
         out.unpersist()
-        Seq("n_vectors" -> nVecs, "train_secs" -> trainSecs,
+        Seq("n_vectors" -> nVecs,
           "n_kept" -> nKept, "n_dropped" -> nDropped,
           "max_cell" -> maxCell, "planted_pairs" -> nPlanted,
           "planted_collapsed" -> nCaught,
@@ -1374,42 +1319,34 @@ object Stress {
 
     // ---- ANN: IVF+PQ store over nDocs/5 synthetic 64-dim vectors ---------
     step("ann") {
-      val nVecs = math.max(100000L, nDocs / 5)
-      val vecsPath = s"$dir/vecs_$nVecs.parquet"
-      if (!new java.io.File(vecsPath).isDirectory)
-        vectors(spark, nVecs).write.mode("overwrite").parquet(vecsPath)
-      val vecs = spark.read.parquet(vecsPath)
+      val vecs = loadVecs()
       val storeDir = s"$dir/vstore_$nVecs"
-      val t0 = System.nanoTime()
-      graft.pipelines.VectorStore.create(spark, storeDir, vecs,
-        "vec_id", "embedding", nCells = 256, m = 8, ksub = 16,
-        ivfIters = 2, pqIters = 2)
-      val createSecs = (System.nanoTime() - t0) / 1e9
-      // 100 queries drawn from the corpus itself
-      val queries = vecs.filter(col("vec_id") % (nVecs / 100) === 0)
-        .limit(100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      timed("create_secs") {
+        graft.pipelines.VectorStore.create(spark, storeDir, vecs,
+          "vec_id", "embedding", nCells = 256, m = 8, ksub = 16,
+          ivfIters = 2, pqIters = 2)
+      }
+      val queries = vecQueries(vecs)
       val nQ = queries.count()
-      val t1 = System.nanoTime()
-      val ivf = graft.pipelines.VectorStore.topK(spark, storeDir,
-        queries, "qid", "qv", k = 10, nprobe = 16)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nIvf = ivf.count()
-      val ivfSecs = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      val brute = graft.operators.Similarity.bruteForceTopK(
-        vecs, "vec_id", "embedding", queries, "qid", "qv", k = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nBrute = brute.count()
-      val bruteSecs = (System.nanoTime() - t2) / 1e9
+      def countPersisted(df: DataFrame) = {
+        val p = df.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (p, p.count())
+      }
+      val ((ivf, nIvf), _) = timed("ivf_query_secs") {
+        countPersisted(graft.pipelines.VectorStore.topK(spark, storeDir,
+          queries, "qid", "qv", k = 10, nprobe = 16))
+      }
+      val ((brute, nBrute), _) = timed("brute_query_secs") {
+        countPersisted(graft.operators.Similarity.bruteForceTopK(
+          vecs, "vec_id", "embedding", queries, "qid", "qv", k = 10))
+      }
       val hits = brute.select(col("qid"), col("vec_id"))
         .join(ivf.select(col("qid"), col("vec_id")), Seq("qid", "vec_id"),
           "left_semi").count()
       ivf.unpersist(); brute.unpersist(); queries.unpersist()
       Seq("n_vectors" -> nVecs, "n_queries" -> nQ,
-        "create_secs" -> createSecs, "ivf_query_secs" -> ivfSecs,
-        "brute_query_secs" -> bruteSecs, "ivf_rows" -> nIvf,
+        "ivf_rows" -> nIvf,
         "recall_at_10" -> hits.toDouble / math.max(1, nBrute))
     }
 
@@ -1423,75 +1360,60 @@ object Stress {
     // and the dequant transform sits per scored pair (documented in
     // VectorStore.readVectors). --------------------------------------
     step("ann_int8") {
-      val nVecs = math.max(100000L, nDocs / 5)
-      val vecsPath = s"$dir/vecs_$nVecs.parquet"
-      if (!new java.io.File(vecsPath).isDirectory)
-        vectors(spark, nVecs).write.mode("overwrite").parquet(vecsPath)
-      val vecs = spark.read.parquet(vecsPath)
+      val vecs = loadVecs()
       val f64Dir = s"$dir/vstore_$nVecs"
       if (!new java.io.File(s"$f64Dir/vectors").isDirectory)
         graft.pipelines.VectorStore.create(spark, f64Dir, vecs,
           "vec_id", "embedding", nCells = 256, m = 8, ksub = 16,
           ivfIters = 2, pqIters = 2)
       val i8Dir = s"$dir/vstore_i8_$nVecs"
-      val t0 = System.nanoTime()
-      graft.pipelines.VectorStore.create(spark, i8Dir, vecs,
-        "vec_id", "embedding", nCells = 256, m = 8, ksub = 16,
-        ivfIters = 2, pqIters = 2, int8 = true)
-      val createSecs = (System.nanoTime() - t0) / 1e9
+      timed("i8_create_secs") {
+        graft.pipelines.VectorStore.create(spark, i8Dir, vecs,
+          "vec_id", "embedding", nCells = 256, m = 8, ksub = 16,
+          ivfIters = 2, pqIters = 2, int8 = true)
+      }
       def dirBytes(p: String): Long = {
         val path = new org.apache.hadoop.fs.Path(s"$p/vectors")
         path.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(path).getLength
       }
-      val queries = vecs.filter(col("vec_id") % (nVecs / 100) === 0)
-        .limit(100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val queries = vecQueries(vecs)
       queries.count()
       // Scan bytes come from the PLAN's pruned file listing
       // (selectedPartitions.totalFileSize) — deterministic and honest
       // about what a cold executor must pull. Task inputMetrics are a
       // dead end here: local-FS parquet reads bypass the Hadoop
       // statistics layer (measured: 3 MB "read" for a 480 MB scan).
-      // AQE is disabled for the measured query so the scan node is
-      // inspectable in the executed plan; the plan itself (pruning,
-      // join, topk) is AQE-independent at this size.
-      def run(storeDir: String) = {
-        val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
-          val t = System.nanoTime()
+      // The listing is read off the physical plan before adaptive
+      // execution wraps it (an adaptive plan hides its scans until it
+      // runs); the scans and their static cell pruning are the same.
+      def run(storeDir: String, tag: String) = {
+        val (df, res, n) = timed(s"query_secs_$tag") {
           val df = graft.pipelines.VectorStore.topK(spark, storeDir,
             queries, "qid", "qv", k = 10, nprobe = 16)
           val res = df.select(col("qid"), col("vec_id"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val n = res.count()
-          val secs = (System.nanoTime() - t) / 1e9
-          // read the listing off df's OWN plan, not res's: res is now
-          // cached and its executed plan is an InMemoryTableScan with
-          // no file scan underneath (measured: sum = 0)
-          val scanBytes = df.queryExecution.executedPlan
-            .collectWithSubqueries {
-              case s: org.apache.spark.sql.execution.FileSourceScanExec
-                if s.relation.location.rootPaths.exists(
-                  _.toString.contains("/vectors")) =>
-                s.selectedPartitions.totalFileSize
-            }.sum
-          (secs, scanBytes, res, n)
-        } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+          (df, res, res.count())
+        }._1
+        // read the listing off df's OWN plan, not res's: res is now
+        // cached and its plan is an InMemoryTableScan with no file scan
+        // underneath (measured: sum = 0)
+        val scanBytes = df.queryExecution.sparkPlan.collectWithSubqueries {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.rootPaths.exists(
+              _.toString.contains("/vectors")) =>
+            s.selectedPartitions.totalFileSize
+        }.sum
+        (scanBytes, res, n)
       }
-      val (f64Secs, f64Bytes, f64Res, nF) = run(f64Dir)
-      val (i8Secs, i8Bytes, i8Res, _) = run(i8Dir)
+      val (f64Bytes, f64Res, nF) = run(f64Dir, "f64")
+      val (i8Bytes, i8Res, _) = run(i8Dir, "i8")
       val overlap = f64Res.join(i8Res, Seq("qid", "vec_id"), "left_semi")
         .count()
       f64Res.unpersist(); i8Res.unpersist(); queries.unpersist()
       Seq("n_vectors" -> nVecs,
-        "i8_create_secs" -> math.round(createSecs * 100.0) / 100.0,
         "store_mb_f64" -> dirBytes(f64Dir) / (1024 * 1024),
         "store_mb_i8" -> dirBytes(i8Dir) / (1024 * 1024),
-        "query_secs_f64" -> math.round(f64Secs * 100.0) / 100.0,
-        "query_secs_i8" -> math.round(i8Secs * 100.0) / 100.0,
         "scan_mb_f64" -> f64Bytes / (1024 * 1024),
         "scan_mb_i8" -> i8Bytes / (1024 * 1024),
         "scan_bytes_ratio" -> math.round(
@@ -1512,22 +1434,18 @@ object Stress {
     // exactly-once contract is spec-pinned at toy scale
     // (VectorStoreSpec); this is the same contract where it matters. --
     step("ann_stream") {
-      val nVecs = math.max(100000L, nDocs / 5)
-      val vecsPath = s"$dir/vecs_$nVecs.parquet"
-      if (!new java.io.File(vecsPath).isDirectory)
-        vectors(spark, nVecs).write.mode("overwrite").parquet(vecsPath)
-      val vecs = spark.read.parquet(vecsPath)
+      val vecs = loadVecs()
       val root = s"$dir/vstream_$nVecs"
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
       val storeDir = s"$root/store"
       val nSeed = nVecs / 10
-      val t0 = System.nanoTime()
-      graft.pipelines.VectorStore.create(spark, storeDir,
-        vecs.filter(col("vec_id") < nSeed), "vec_id", "embedding",
-        nCells = 256, m = 8, ksub = 16, ivfIters = 2, pqIters = 2)
-      val seedSecs = (System.nanoTime() - t0) / 1e9
+      timed("seed_secs") {
+        graft.pipelines.VectorStore.create(spark, storeDir,
+          vecs.filter(col("vec_id") < nSeed), "vec_id", "embedding",
+          nCells = 256, m = 8, ksub = 16, ivfIters = 2, pqIters = 2)
+      }
       // ~45 one-file batches of ~20k vectors each
       val streamed = vecs.filter(col("vec_id") >= nSeed)
         .withColumn("bkt", (col("vec_id") % 45).cast("int"))
@@ -1547,37 +1465,31 @@ object Stress {
           .count(_.getPath.getName.startsWith("b=stream-"))
       }
       // phase 1: drain in a thread, kill after >= 5 landed batches
-      val t1 = System.nanoTime()
-      val runner = new Thread(() =>
-        try drain() catch { case _: Throwable => () })
-      runner.start()
-      while (runner.isAlive && streamBatches() < 5) Thread.sleep(200)
-      val killedAt = streamBatches()
-      spark.streams.active.foreach(q => try q.stop() catch {
-        case _: Throwable => () })
-      runner.join(120000)
-      val phase1Secs = (System.nanoTime() - t1) / 1e9
+      val (killedAt, _) = timed("phase1_secs") {
+        val runner = new Thread(() =>
+          try drain() catch { case _: Throwable => () })
+        runner.start()
+        while (runner.isAlive && streamBatches() < 5) Thread.sleep(200)
+        val killedAt = streamBatches()
+        spark.streams.active.foreach(q => try q.stop() catch {
+          case _: Throwable => () })
+        runner.join(120000)
+        killedAt
+      }
       // phase 2: restart from the same checkpoint — replays the
       // uncommitted batch (overwrite-by-tag), drains the rest
-      val t2 = System.nanoTime()
-      drain()
-      val phase2Secs = (System.nanoTime() - t2) / 1e9
+      timed("phase2_secs")(drain())
       val stored = spark.read.parquet(s"$storeDir/vectors")
       val nRows = stored.count()
       val nIds = stored.select("id").distinct().count()
       val nBatchesLanded = streamBatches()
       // and the store still answers: planted near-dup neighbors rank
-      val queries = vecs.filter(col("vec_id") % (nVecs / 100) === 0)
-        .limit(100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val queries = vecQueries(vecs)
       queries.count()
-      def timedTopK(): (Double, Long) = {
-        val t = System.nanoTime()
-        val n = graft.pipelines.VectorStore.topK(spark, storeDir,
+      def timedTopK(name: String): Long = timed(name) {
+        graft.pipelines.VectorStore.topK(spark, storeDir,
           queries, "qid", "qv", k = 10, nprobe = 16).count()
-        ((System.nanoTime() - t) / 1e9, n)
-      }
+      }._1
       def nFiles(): Long = {
         val it = fs.listFiles(
           new org.apache.hadoop.fs.Path(s"$storeDir/vectors"), true)
@@ -1588,14 +1500,14 @@ object Stress {
       // compaction payoff: fold the ~46 micro-batch dirs into one
       // committed dir, vacuum the retired sources, and measure what
       // the probe's directory walk + scan actually gained
-      val (qSecsBefore, nTop) = timedTopK()
+      val nTop = timedTopK("query_secs_before")
       val filesBefore = nFiles()
-      val t3 = System.nanoTime()
-      val tag = graft.pipelines.VectorStore.compact(spark, storeDir,
-        vacuumAfter = true)
-      val compactSecs = (System.nanoTime() - t3) / 1e9
+      val (tag, _) = timed("compact_secs") {
+        graft.pipelines.VectorStore.compact(spark, storeDir,
+          vacuumAfter = true)
+      }
       val filesAfter = nFiles()
-      val (qSecsAfter, nTopAfter) = timedTopK()
+      val nTopAfter = timedTopK("query_secs_after")
       val storedC = spark.read.parquet(s"$storeDir/vectors")
       val nRowsC = storedC.count()
       val nIdsC = storedC.select("id").distinct().count()
@@ -1603,17 +1515,11 @@ object Stress {
       Seq("n_vectors" -> nVecs, "n_seed" -> nSeed,
         "n_stream_batches" -> nBatchesLanded,
         "killed_after_batches" -> killedAt,
-        "seed_secs" -> math.round(seedSecs * 100.0) / 100.0,
-        "phase1_secs" -> math.round(phase1Secs * 100.0) / 100.0,
-        "phase2_secs" -> math.round(phase2Secs * 100.0) / 100.0,
         "rows_stored" -> nRows, "distinct_ids" -> nIds,
         "exactly_once_ok" -> (nRows == nVecs && nIds == nVecs),
         "topk_rows" -> nTop,
         "compacted" -> tag.nonEmpty,
-        "compact_secs" -> math.round(compactSecs * 100.0) / 100.0,
         "files_before" -> filesBefore, "files_after" -> filesAfter,
-        "query_secs_before" -> math.round(qSecsBefore * 100.0) / 100.0,
-        "query_secs_after" -> math.round(qSecsAfter * 100.0) / 100.0,
         "lossless_ok" -> (nRowsC == nVecs && nIdsC == nVecs &&
           nTopAfter == nTop))
     }
@@ -1624,28 +1530,19 @@ object Stress {
     // projected scan+dot is ~4× less work, and recall@10 against the
     // full-dim truth quantifies what the 4× costs. ---------------------
     step("rp") {
-      val nVecs = math.max(100000L, nDocs / 5)
-      val vecsPath = s"$dir/vecs_$nVecs.parquet"
-      if (!new java.io.File(vecsPath).isDirectory)
-        vectors(spark, nVecs).write.mode("overwrite").parquet(vecsPath)
-      val vecs = spark.read.parquet(vecsPath)
-      val queries = vecs.filter(col("vec_id") % (nVecs / 100) === 0)
-        .limit(100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val vecs = loadVecs()
+      val queries = vecQueries(vecs)
       queries.count()
-      def topk(data: org.apache.spark.sql.DataFrame, vc: String,
-          qs: org.apache.spark.sql.DataFrame, qc: String, k: Int) = {
-        val t = System.nanoTime()
+      def topk(name: String, data: DataFrame, vc: String,
+          qs: DataFrame, qc: String, k: Int) = timed(name) {
         val r = graft.operators.Similarity.bruteForceTopK(
           data, "vec_id", vc, qs, "qid", qc, k = k)
           .select(col("qid"), col("vec_id"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = r.count()
-        ((System.nanoTime() - t) / 1e9, r, n)
+        (r, r.count())
       }
-      val (fullSecs, fullRes, nFull) = topk(vecs, "embedding",
-        queries, "qv", k = 10)
+      val ((fullRes, nFull), _) = topk("full_dim_query_secs", vecs,
+        "embedding", queries, "qv", k = 10)
       // RP is a PREFILTER (the rp2 two-stage): the projected scan
       // keeps a 100-candidate pool per query at outDim-dot cost, the
       // exact rerank touches only pool×queries rows, and the number
@@ -1655,43 +1552,40 @@ object Stress {
       // measuring 16 AND 32 dims makes the recall/compute trade
       // explicit rather than asserted.
       val byDim = Seq(16, 32).flatMap { k =>
-        val t0 = System.nanoTime()
         val projPath = s"$dir/vecs_rp${k}_$nVecs.parquet"
-        vecs.select(col("vec_id"),
-            graft.operators.Similarity.randomProject(
-              col("embedding"), 64, k, "stress").as("p"))
-          .write.mode("overwrite").parquet(projPath)
-        val projSecs = (System.nanoTime() - t0) / 1e9
+        timed(s"project_secs_d$k") {
+          vecs.select(col("vec_id"),
+              graft.operators.Similarity.randomProject(
+                col("embedding"), 64, k, "stress").as("p"))
+            .write.mode("overwrite").parquet(projPath)
+        }
         val proj = spark.read.parquet(projPath)
         val pqk = queries.select(col("qid"),
             graft.operators.Similarity.randomProject(
               col("qv"), 64, k, "stress").as("qp"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         pqk.count()
-        val (preSecs, pool, _) = topk(proj, "p", pqk, "qp", k = 100)
-        val t2 = System.nanoTime()
-        val reranked = graft.operators.Similarity.rankTopK(
-          pool.join(vecs, Seq("vec_id"))
-            .join(broadcast(queries), Seq("qid"))
-            .withColumn("cosine", graft.operators.Similarity.cosine(
-              col("embedding"), col("qv"))), "qid", "vec_id", k = 10)
-          .select(col("qid"), col("vec_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        reranked.count()
-        val rerankSecs = (System.nanoTime() - t2) / 1e9
+        val ((pool, _), _) = topk(s"prefilter_secs_d$k", proj, "p", pqk,
+          "qp", k = 100)
+        val (reranked, _) = timed(s"rerank_secs_d$k") {
+          val r = graft.operators.Similarity.rankTopK(
+            pool.join(vecs, Seq("vec_id"))
+              .join(broadcast(queries), Seq("qid"))
+              .withColumn("cosine", graft.operators.Similarity.cosine(
+                col("embedding"), col("qv"))), "qid", "vec_id", k = 10)
+            .select(col("qid"), col("vec_id"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          r.count()
+          r
+        }
         val hits = fullRes.join(reranked, Seq("qid", "vec_id"),
           "left_semi").count()
         pool.unpersist(); reranked.unpersist(); pqk.unpersist()
-        Seq(s"project_secs_d$k" -> math.round(projSecs * 100.0) / 100.0,
-          s"prefilter_secs_d$k" -> math.round(preSecs * 100.0) / 100.0,
-          s"rerank_secs_d$k" -> math.round(rerankSecs * 100.0) / 100.0,
-          s"recall_at_10_d$k" -> math.round(
+        Seq(s"recall_at_10_d$k" -> math.round(
             hits.toDouble / math.max(1L, nFull) * 10000.0) / 10000.0)
       }
       fullRes.unpersist(); queries.unpersist()
-      Seq("n_vectors" -> nVecs,
-        "full_dim_query_secs" -> math.round(fullSecs * 100.0) / 100.0
-      ) ++ byDim
+      ("n_vectors" -> nVecs) +: byDim
     }
 
     // ---- web-graph PageRank: damped power iterations over a
@@ -1704,25 +1598,20 @@ object Stress {
     // make the run bit-replayable (wg2 gates the arithmetic; this
     // measures its scale shape). -----------------------------------------
     step("pagerank") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
-      def run(iters: Int): (Double, Long, String, Long, Long) =
-        CacheScope.withScope { implicit sc =>
-          val t0 = System.nanoTime()
+      val e = loadEdges()
+      def run(iters: Int, key: String) = CacheScope.withScope {
+        implicit sc => timed(key) {
           val pr = graft.operators.WebGraph.pageRank(e, iters = iters)
           val top = pr.orderBy(col("rank_fp").desc, col("node"))
             .limit(1).collect().head
           val agg = pr.agg(sum(col("rank_fp")), count(lit(1)))
             .collect().head
-          ((System.nanoTime() - t0) / 1e9, agg.getLong(0),
-            top.getString(0), top.getLong(1), agg.getLong(1))
+          (agg.getLong(0), top.getString(0), top.getLong(1), agg.getLong(1))
         }
-      val (oneSecs, _, _, _, _) = run(1)
-      val (tenSecs, mass, topNode, topRank, nOut) = run(10)
+      }
+      val (_, oneSecs) = run(1, "secs_1_iter")
+      val ((mass, topNode, topRank, nOut), tenSecs) = run(10, "secs_10_iters")
       Seq("n_edges" -> e.count(), "n_nodes" -> nOut,
-        "secs_1_iter" -> math.round(oneSecs * 100.0) / 100.0,
-        "secs_10_iters" -> math.round(tenSecs * 100.0) / 100.0,
         "secs_marginal_iter" -> math.round(
           (tenSecs - oneSecs) / 9.0 * 100.0) / 100.0,
         "mass_retained" -> math.round(
@@ -1742,26 +1631,21 @@ object Stress {
     // check (wg4 gates the values; this measures the scale shape of
     // the doubled iteration). ---------------------------------------------
     step("hits") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
-      def run(iters: Int): (Double, Long, Long, String, Long) =
-        CacheScope.withScope { implicit sc =>
-          val t0 = System.nanoTime()
+      val e = loadEdges()
+      def run(iters: Int, key: String) = CacheScope.withScope {
+        implicit sc => timed(key) {
           val hs = graft.operators.WebGraph.hits(e, iters = iters,
             localMaxEdges = 0L)
           val top = hs.orderBy(col("auth_fp").desc, col("node"))
             .limit(1).collect().head
           val agg = hs.agg(sum(col("auth_fp")), sum(col("hub_fp")),
             count(lit(1))).collect().head
-          ((System.nanoTime() - t0) / 1e9, agg.getLong(0),
-            agg.getLong(1), top.getString(0), agg.getLong(2))
+          (agg.getLong(0), agg.getLong(1), top.getString(0), agg.getLong(2))
         }
-      val (oneSecs, _, _, _, _) = run(1)
-      val (fiveSecs, aMass, hMass, topAuth, nOut) = run(5)
+      }
+      val (_, oneSecs) = run(1, "secs_1_iter")
+      val ((aMass, hMass, topAuth, nOut), fiveSecs) = run(5, "secs_5_iters")
       Seq("n_edges" -> e.count(), "n_nodes" -> nOut,
-        "secs_1_iter" -> math.round(oneSecs * 100.0) / 100.0,
-        "secs_5_iters" -> math.round(fiveSecs * 100.0) / 100.0,
         "secs_marginal_iter" -> math.round(
           (fiveSecs - oneSecs) / 4.0 * 100.0) / 100.0,
         "auth_mass_retained" -> math.round(
@@ -1777,9 +1661,7 @@ object Stress {
     // uniform — measured as resume-2-iters vs cold-5-iters wall on
     // the union, with identical per-iteration arithmetic. ------------------
     step("hits_resume") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
+      val e = loadEdges()
       // 50k delta edges between existing d-nodes (md5-derived)
       val delta = spark.range(0, 50000L).select(
         concat(lit("d"), pmod(conv(substring(md5(concat(lit("ha"),
@@ -1796,26 +1678,24 @@ object Stress {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
       prior.count()
-      val t0 = System.nanoTime()
-      val (rMass, rN) = CacheScope.withScope { implicit sc =>
-        val r = graft.operators.WebGraph.hitsResume(union, prior,
-          iters = 2, localMaxEdges = 0L)
-        val agg = r.agg(sum(col("auth_fp")), count(lit(1)))
-          .collect().head
-        (agg.getLong(0), agg.getLong(1))
+      val ((rMass, rN), _) = timed("resume_2it_secs") {
+        CacheScope.withScope { implicit sc =>
+          val r = graft.operators.WebGraph.hitsResume(union, prior,
+            iters = 2, localMaxEdges = 0L)
+          val agg = r.agg(sum(col("auth_fp")), count(lit(1)))
+            .collect().head
+          (agg.getLong(0), agg.getLong(1))
+        }
       }
-      val resumeSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      CacheScope.withScope { implicit sc =>
-        graft.operators.WebGraph.hits(union, iters = 5,
-            localMaxEdges = 0L)
-          .agg(sum(col("auth_fp"))).collect()
+      timed("cold_5it_secs") {
+        CacheScope.withScope { implicit sc =>
+          graft.operators.WebGraph.hits(union, iters = 5,
+              localMaxEdges = 0L)
+            .agg(sum(col("auth_fp"))).collect()
+        }
       }
-      val coldSecs = (System.nanoTime() - t1) / 1e9
       prior.unpersist(blocking = false)
       Seq("delta_edges" -> 50000L, "n_nodes" -> rN,
-        "resume_2it_secs" -> math.round(resumeSecs * 100.0) / 100.0,
-        "cold_5it_secs" -> math.round(coldSecs * 100.0) / 100.0,
         "auth_mass_retained" -> math.round(rMass.toDouble /
           graft.operators.WebGraph.Scale * 10000.0) / 10000.0)
     }
@@ -1826,23 +1706,20 @@ object Stress {
     // node column, so the marginal-iteration cost should match
     // pagerank's within noise. ------------------------------------------
     step("trustrank") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
+      val e = loadEdges()
       val seeds = (0 until 10).map(i => s"d$i")
       CacheScope.withScope { implicit sc =>
-        val t0 = System.nanoTime()
-        val tr = graft.operators.WebGraph.trustRank(e, seeds,
-          iters = 10, damping = 0.85, localMaxEdges = 0L)
-        val top = tr.orderBy(col("rank_fp").desc, col("node"))
-          .limit(1).collect().head
-        val agg = tr.agg(sum(col("rank_fp")), count(lit(1)),
-            sum(when(col("rank_fp") > 0L, 1L).otherwise(0L)))
-          .collect().head
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (top, agg) = timed("secs_10_iters") {
+          val tr = graft.operators.WebGraph.trustRank(e, seeds,
+            iters = 10, damping = 0.85, localMaxEdges = 0L)
+          (tr.orderBy(col("rank_fp").desc, col("node")).limit(1)
+            .collect().head,
+            tr.agg(sum(col("rank_fp")), count(lit(1)),
+              sum(when(col("rank_fp") > 0L, 1L).otherwise(0L)))
+              .collect().head)
+        }._1
         Seq("n_edges" -> e.count(), "n_nodes" -> agg.getLong(1),
           "n_seeds" -> seeds.size,
-          "secs_10_iters" -> math.round(secs * 100.0) / 100.0,
           "mass_retained" -> math.round(agg.getLong(0).toDouble /
             graft.operators.WebGraph.Scale * 10000.0) / 10000.0,
           "nodes_reached" -> agg.getLong(2),
@@ -1856,21 +1733,18 @@ object Stress {
     // symmetrized adjacency + an exact-long (node, label) argmax agg
     // with map-side combine — rows in flight are three longs. ------------
     step("labelprop") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
+      val e = loadEdges()
       CacheScope.withScope { implicit sc =>
-        val t0 = System.nanoTime()
-        val lp = graft.operators.WebGraph.labelProp(e, iters = 5,
-          localMaxEdges = 0L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val agg = lp.agg(count(lit(1)).as("n"),
-          max(col("n_members")).as("mx")).collect().head
-        val nComm = lp.select(col("community_rep")).distinct().count()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (lp, agg, nComm) = timed("secs_5_iters") {
+          val lp = graft.operators.WebGraph.labelProp(e, iters = 5,
+            localMaxEdges = 0L)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (lp, lp.agg(count(lit(1)).as("n"),
+            max(col("n_members")).as("mx")).collect().head,
+            lp.select(col("community_rep")).distinct().count())
+        }._1
         lp.unpersist(blocking = false)
         Seq("n_edges" -> e.count(), "n_nodes" -> agg.getLong(0),
-          "secs_5_iters" -> math.round(secs * 100.0) / 100.0,
           "n_communities" -> nComm,
           "largest_community" -> agg.getLong(1))
       }
@@ -1882,20 +1756,17 @@ object Stress {
     // at 100 TB, and the oscillation flag turns the documented sync-LPA
     // failure mode into telemetry. ----------------------------------------
     step("labelprop_converge") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
+      val e = loadEdges()
       CacheScope.withScope { implicit sc =>
-        val t0 = System.nanoTime()
-        val (lp, st) = graft.operators.WebGraph.labelPropWithStats(e,
-          iters = 30, localMaxEdges = 0L)
-        val nNodes = lp.count()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val ((nNodes, st), secs) = timed("secs") {
+          val (lp, st) = graft.operators.WebGraph.labelPropWithStats(e,
+            iters = 30, localMaxEdges = 0L)
+          (lp.count(), st)
+        }
         Seq("n_nodes" -> nNodes,
           "budget" -> 30, "rounds" -> st.rounds,
           "converged" -> st.converged,
           "oscillating" -> st.oscillating,
-          "secs" -> math.round(secs * 100.0) / 100.0,
           "secs_per_round" ->
             math.round(secs / math.max(1, st.rounds) * 100.0) / 100.0,
           "changed_curve" ->
@@ -1911,9 +1782,7 @@ object Stress {
     // (Resumed != cold labels is expected and fine — LPA has no
     // unique fixed point; determinism is wg8b's gate.) ------------------
     step("labelprop_resume") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
-      val e = spark.read.parquet(edgesPath)
+      val e = loadEdges()
       val delta = spark.range(0, 50000L).select(
         concat(lit("d"), pmod(conv(substring(md5(concat(lit("la"),
           col("id").cast("string"))), 1, 15), 16, 10).cast("long"),
@@ -1930,31 +1799,28 @@ object Stress {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         p.count(); p
       }
-      val t0 = System.nanoTime()
-      val (resumedRounds, resumedOsc) = CacheScope.withScope {
-        implicit sc =>
+      val ((resumedRounds, resumedOsc), _) = timed("resume_secs") {
+        CacheScope.withScope { implicit sc =>
           val (lp, st) = graft.operators.WebGraph
             .labelPropResumeWithStats(union, prior, iters = 30,
               localMaxEdges = 0L)
           lp.count()
           (st.rounds, st.oscillating)
+        }
       }
-      val resumeSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val (coldRounds, coldOsc) = CacheScope.withScope { implicit sc =>
-        val (lp, st) = graft.operators.WebGraph.labelPropWithStats(
-          union, iters = 30, localMaxEdges = 0L)
-        lp.count()
-        (st.rounds, st.oscillating)
+      val ((coldRounds, coldOsc), _) = timed("cold_secs") {
+        CacheScope.withScope { implicit sc =>
+          val (lp, st) = graft.operators.WebGraph.labelPropWithStats(
+            union, iters = 30, localMaxEdges = 0L)
+          lp.count()
+          (st.rounds, st.oscillating)
+        }
       }
-      val coldSecs = (System.nanoTime() - t1) / 1e9
       prior.unpersist(blocking = false)
       Seq("delta_edges" -> 50000L,
         "resume_rounds" -> resumedRounds,
-        "resume_secs" -> math.round(resumeSecs * 100.0) / 100.0,
         "resume_oscillating" -> resumedOsc,
         "cold_rounds" -> coldRounds,
-        "cold_secs" -> math.round(coldSecs * 100.0) / 100.0,
         "cold_oscillating" -> coldOsc)
     }
 
@@ -1963,22 +1829,18 @@ object Stress {
     // long) shuffle rounds regardless of component diameter, which the
     // power-law target distribution does not bound. ----------------------
     step("components") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
       CacheScope.withScope { implicit sc =>
-        val e = spark.read.parquet(edgesPath)
-        val t0 = System.nanoTime()
-        val comps = graft.operators.WebGraph.components(e)
-        val agg = comps.agg(
-          countDistinct(col("component_rep")).as("nc"),
-          count(lit(1)).as("nn"),
-          max(col("n_members")).as("mx")).collect().head
-        val secs = (System.nanoTime() - t0) / 1e9
+        val e = loadEdges()
+        val (agg, _) = timed("cc_secs") {
+          graft.operators.WebGraph.components(e).agg(
+            countDistinct(col("component_rep")).as("nc"),
+            count(lit(1)).as("nn"),
+            max(col("n_members")).as("mx")).collect().head
+        }
         Seq("n_edges" -> e.count(),
           "n_nodes" -> agg.getLong(1),
           "n_components" -> agg.getLong(0),
-          "largest_component" -> agg.getLong(2),
-          "cc_secs" -> math.round(secs * 100.0) / 100.0)
+          "largest_component" -> agg.getLong(2))
       }
     }
 
@@ -1989,10 +1851,8 @@ object Stress {
     // the per-batch maintenance cost becomes O(nodes + delta),
     // independent of accumulated edge count. -------------------------------
     step("components_delta") {
-      val nEdges = math.max(1000000L, nDocs)
-      val edgesPath = ensurePagerankEdges(spark, dir, nEdges)
       CacheScope.withScope { implicit sc =>
-        val e = spark.read.parquet(edgesPath)
+        val e = loadEdges()
         val prior = graft.operators.WebGraph.components(e)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         prior.count()
@@ -2013,15 +1873,14 @@ object Stress {
             concat(lit("d"), pmod(conv(substring(md5(concat(lit("b"),
               col("id").cast("string"))), 1, 15), 16, 10).cast("long"),
               lit(500000L)).cast("string")).as("dst"))
-        val t0 = System.nanoTime()
-        val res = graft.operators.WebGraph.componentsResume(delta, prior,
-          localMaxEdges = 0L)
-        val agg = res.agg(countDistinct(col("component_rep")).as("nc"),
-          count(lit(1)).as("nn")).collect().head
-        val resumeSecs = (System.nanoTime() - t0) / 1e9
+        val (agg, _) = timed("resume_secs") {
+          graft.operators.WebGraph.componentsResume(delta, prior,
+              localMaxEdges = 0L)
+            .agg(countDistinct(col("component_rep")).as("nc"),
+              count(lit(1)).as("nn")).collect().head
+        }
         prior.unpersist(blocking = false)
         Seq("delta_edges" -> 50000L,
-          "resume_secs" -> math.round(resumeSecs * 100.0) / 100.0,
           "n_nodes" -> agg.getLong(1),
           "n_components" -> agg.getLong(0))
       }
@@ -2072,21 +1931,21 @@ object Stress {
       // ---- standing state at HALF: corpus + signatures + graph ----
       val d0 = docs.filter(col("doc_id") < half)
         .select(col("doc_id"), col("text"))
-      val t0 = System.nanoTime()
-      graft.pipelines.CorpusStore.ensure(spark, table, "doc_id", "text")
-      graft.pipelines.CorpusStore.ingest(spark, table, d0, "doc_id",
-        "text")
-      graft.pipelines.SignatureStore.create(spark, sigDir, d0,
-        "doc_id", "text")
-      var prPrior = CacheScope.withScope { implicit sc =>
-        persistCount(graft.operators.WebGraph.pageRank(dEdges(d0),
-          iters = 5, damping = 0.85, localMaxEdges = 0L)
-          .select(col("node"), col("rank_fp")))
+      val ((pr0, comp0), _) = timed("setup_secs") {
+        graft.pipelines.CorpusStore.ensure(spark, table, "doc_id", "text")
+        graft.pipelines.CorpusStore.ingest(spark, table, d0, "doc_id",
+          "text")
+        graft.pipelines.SignatureStore.create(spark, sigDir, d0,
+          "doc_id", "text")
+        (CacheScope.withScope { implicit sc =>
+          persistCount(graft.operators.WebGraph.pageRank(dEdges(d0),
+            iters = 5, damping = 0.85, localMaxEdges = 0L)
+            .select(col("node"), col("rank_fp")))
+        }, CacheScope.withScope { implicit sc =>
+          persistCount(graft.operators.WebGraph.components(dEdges(d0)))
+        })
       }
-      var compPrior = CacheScope.withScope { implicit sc =>
-        persistCount(graft.operators.WebGraph.components(dEdges(d0)))
-      }
-      val setupSecs = (System.nanoTime() - t0) / 1e9
+      var (prPrior, compPrior) = (pr0, comp0)
       // ---- one day: 1% new docs + exact re-crawls + near re-crawls
       def day(tag: String, newLo: Long, sliceLo: Long)
           : Seq[(String, Double)] = {
@@ -2110,37 +1969,38 @@ object Stress {
         val delta = persistCount(
           fresh.unionByName(recrawl).unionByName(nears))
         // (1) near-dup query BEFORE append (the d9 order), then append
-        val t1 = System.nanoTime()
-        val nNd = CacheScope.withScope { implicit sc =>
-          graft.pipelines.SignatureStore.nearDups(spark, sigDir, delta,
-            "doc_id", "text", minAgreement = 0.45,
-            skipFullyCapped = true).count()
+        val (nNd, sigSecs) = timed(s"${tag}_sig_secs") {
+          val n = CacheScope.withScope { implicit sc =>
+            graft.pipelines.SignatureStore.nearDups(spark, sigDir, delta,
+              "doc_id", "text", minAgreement = 0.45,
+              skipFullyCapped = true).count()
+          }
+          graft.pipelines.SignatureStore.append(spark, sigDir, delta,
+            "doc_id", "text", tag)
+          n
         }
-        graft.pipelines.SignatureStore.append(spark, sigDir, delta,
-          "doc_id", "text", tag)
-        val sigSecs = (System.nanoTime() - t1) / 1e9
         // (2) bucketed exact-dedup ingest — corpus read IN PLACE
-        val t2 = System.nanoTime()
-        val (nAdded, nBatch) = graft.pipelines.CorpusStore.ingest(
-          spark, table, delta, "doc_id", "text")
-        val ingestSecs = (System.nanoTime() - t2) / 1e9
+        val ((nAdded, nBatch), ingestSecs) = timed(s"${tag}_ingest_secs") {
+          graft.pipelines.CorpusStore.ingest(
+            spark, table, delta, "doc_id", "text")
+        }
         // (3) graph maintenance: components contract O(nodes+delta);
         // rank resumes 2 iterations on the union
         val deltaE = dEdges(delta.select(col("doc_id")))
-        val t3 = System.nanoTime()
-        val newComp = CacheScope.withScope { implicit sc =>
-          persistCount(graft.operators.WebGraph.componentsResume(
-            deltaE, compPrior, localMaxEdges = 0L))
+        val (newComp, compSecs) = timed(s"${tag}_components_secs") {
+          CacheScope.withScope { implicit sc =>
+            persistCount(graft.operators.WebGraph.componentsResume(
+              deltaE, compPrior, localMaxEdges = 0L))
+          }
         }
-        val compSecs = (System.nanoTime() - t3) / 1e9
         val unionE = dEdges(spark.table(table).select(col("doc_id")))
-        val t4 = System.nanoTime()
-        val newPr = CacheScope.withScope { implicit sc =>
-          persistCount(graft.operators.WebGraph.pageRankResume(unionE,
-            prPrior, iters = 2, damping = 0.85, localMaxEdges = 0L)
-            .select(col("node"), col("rank_fp")))
+        val (newPr, _) = timed(s"${tag}_rank2it_secs") {
+          CacheScope.withScope { implicit sc =>
+            persistCount(graft.operators.WebGraph.pageRankResume(unionE,
+              prPrior, iters = 2, damping = 0.85, localMaxEdges = 0L)
+              .select(col("node"), col("rank_fp")))
+          }
         }
-        val prSecs = (System.nanoTime() - t4) / 1e9
         compPrior.unpersist(blocking = false)
         prPrior.unpersist(blocking = false)
         compPrior = newComp
@@ -2149,30 +2009,24 @@ object Stress {
         Seq(s"${tag}_batch" -> nBatch.toDouble,
           s"${tag}_neardups" -> nNd.toDouble,
           s"${tag}_appended" -> nAdded.toDouble,
-          s"${tag}_sig_secs" -> sigSecs,
-          s"${tag}_ingest_secs" -> ingestSecs,
-          s"${tag}_components_secs" -> compSecs,
-          s"${tag}_rank2it_secs" -> prSecs,
           s"${tag}_odelta_secs" -> (sigSecs + ingestSecs + compSecs))
       }
       val day1 = day("day1", 10000000L, 0L)
       // ---- the state DOUBLES (second half lands as one big ingest)
-      val tg = System.nanoTime()
-      val d1 = docs.filter(col("doc_id") >= half)
-        .select(col("doc_id"), col("text"))
-      graft.pipelines.CorpusStore.ingest(spark, table, d1, "doc_id",
-        "text")
-      graft.pipelines.SignatureStore.append(spark, sigDir, d1,
-        "doc_id", "text", "half2")
-      val growSecs = (System.nanoTime() - tg) / 1e9
+      timed("grow_secs") {
+        val d1 = docs.filter(col("doc_id") >= half)
+          .select(col("doc_id"), col("text"))
+        graft.pipelines.CorpusStore.ingest(spark, table, d1, "doc_id",
+          "text")
+        graft.pipelines.SignatureStore.append(spark, sigDir, d1,
+          "doc_id", "text", "half2")
+      }
       val day2 = day("day2", 20000000L, math.max(10000L, nDocs / 100))
       val o1 = day1.find(_._1 == "day1_odelta_secs").get._2
       val o2 = day2.find(_._1 == "day2_odelta_secs").get._2
       compPrior.unpersist(blocking = false)
       prPrior.unpersist(blocking = false)
-      (Seq("docs_day0" -> half.toDouble,
-        "setup_secs" -> setupSecs,
-        "grow_secs" -> growSecs) ++ day1 ++ day2 ++
+      (Seq("docs_day0" -> half.toDouble) ++ day1 ++ day2 ++
         Seq("odelta_day2_over_day1" ->
           math.round(o2 / math.max(0.01, o1) * 100.0) / 100.0))
         .map { case (k, v) => k -> (math.round(v * 100.0) / 100.0) }
@@ -2203,23 +2057,20 @@ object Stress {
               concat(lit("<a href=\"https://"), dstDom("g3"),
                 lit("/z\">see also</a>"))).otherwise(lit("")),
             lit("</body></html>")).as("html"))
-        val t0 = System.nanoTime()
-        val edges = sc.cache(
-          graft.operators.WebGraph.domainEdges(pages, "url", "html"))
-        val nEdges = edges.count()
-        val extractSecs = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val pr = graft.operators.WebGraph.pageRank(edges, iters = 10,
-          damping = 0.85, localMaxEdges = 0L)
-        val top = pr.orderBy(col("rank_fp").desc, col("node"))
-          .limit(1).collect().head
-        val agg = pr.agg(sum(col("rank_fp")), count(lit(1)))
-          .collect().head
-        val prSecs = (System.nanoTime() - t1) / 1e9
+        val ((edges, nEdges), extractSecs) = timed("extract_secs") {
+          val edges = sc.cache(
+            graft.operators.WebGraph.domainEdges(pages, "url", "html"))
+          (edges, edges.count())
+        }
+        val (top, agg) = timed("pagerank_secs") {
+          val pr = graft.operators.WebGraph.pageRank(edges, iters = 10,
+            damping = 0.85, localMaxEdges = 0L)
+          (pr.orderBy(col("rank_fp").desc, col("node")).limit(1)
+            .collect().head,
+            pr.agg(sum(col("rank_fp")), count(lit(1))).collect().head)
+        }._1
         Seq("n_pages" -> nDocs, "n_edges" -> nEdges,
           "n_nodes" -> agg.getLong(1),
-          "extract_secs" -> math.round(extractSecs * 100.0) / 100.0,
-          "pagerank_secs" -> math.round(prSecs * 100.0) / 100.0,
           "pages_per_sec" -> math.round(nDocs / extractSecs),
           "mass_retained" -> math.round(agg.getLong(0).toDouble /
             graft.operators.WebGraph.Scale * 10000.0) / 10000.0,
@@ -2238,14 +2089,14 @@ object Stress {
       val storeDir = s"$dir/idxstore_$nDocs"
       val seed = docs.filter(col("doc_id") % 100 =!= 0)
       val batch = docs.filter(col("doc_id") % 100 === 0)
-      val t0 = System.nanoTime()
-      graft.pipelines.IndexStore.create(spark, storeDir, seed,
-        "doc_id", "text")
-      val seedSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      graft.pipelines.IndexStore.append(spark, storeDir, batch,
-        "doc_id", "text", "b1")
-      val appendSecs = (System.nanoTime() - t1) / 1e9
+      timed("seed_secs") {
+        graft.pipelines.IndexStore.create(spark, storeDir, seed,
+          "doc_id", "text")
+      }
+      timed("append_secs") {
+        graft.pipelines.IndexStore.append(spark, storeDir, batch,
+          "doc_id", "text", "b1")
+      }
       val nPostings = spark.read.parquet(s"$storeDir/postings").count()
       // 100 queries: tokens 3-10 of each doc — 3 template tokens (hot,
       // df ≈ nDocs/20: the stop-term surface) + 5 tail tokens (df ≈
@@ -2257,51 +2108,44 @@ object Stress {
             3, 8)).as("qtext"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nQ = queries.count()
-      val run = (frac: Double) => CacheScope.withScope { implicit scope =>
-        val t = System.nanoTime()
-        val res = graft.pipelines.IndexStore.bm25TopK(spark, storeDir,
-          queries, "qid", "qtext", k = 10, maxDfFrac = frac)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = res.count()
-        // self-retrieval: the query IS doc qid's own prefix, so qid
-        // must appear in its own top-10 (prefix tokens are 5 of ~24)
-        val selfHits = res.filter(col("id") === col("qid")).count()
-        res.unpersist()
-        ((System.nanoTime() - t) / 1e9, n, selfHits)
+      def run(key: String, frac: Double) = timed(key) {
+        CacheScope.withScope { implicit scope =>
+          val res = graft.pipelines.IndexStore.bm25TopK(spark, storeDir,
+            queries, "qid", "qtext", k = 10, maxDfFrac = frac)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val n = res.count()
+          // self-retrieval: the query IS doc qid's own prefix, so qid
+          // must appear in its own top-10 (prefix tokens are 5 of ~24)
+          val selfHits = res.filter(col("id") === col("qid")).count()
+          res.unpersist()
+          (n, selfHits)
+        }
       }
       // 0.01 · 5M = 50k: template tokens (df ≈ 250k) are pruned, tail
       // tokens (df ≈ 300) survive — self-retrieval must hold either way
-      val (fullSecs, nFull, selfFull) = run(1.0)
-      val (prunedSecs, nPruned, selfPruned) = run(0.01)
+      val ((nFull, selfFull), _) = run("query_secs", 1.0)
+      val ((nPruned, selfPruned), _) = run("query_pruned_secs", 0.01)
       queries.unpersist()
-      Seq("n_postings" -> nPostings, "seed_secs" -> seedSecs,
-        "append_secs" -> appendSecs, "n_queries" -> nQ,
-        "query_secs" -> fullSecs, "query_pruned_secs" -> prunedSecs,
+      Seq("n_postings" -> nPostings, "n_queries" -> nQ,
         "rows_full" -> nFull, "rows_pruned" -> nPruned,
         "self_hits_full" -> selfFull, "self_hits_pruned" -> selfPruned)
     }
 
-    println("STRESS_SUMMARY {" +
-      results.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString(",") + "}")
+    println(s"STRESS_SUMMARY ${Json.write(Json.obj(results.toSeq: _*))}")
     spark.stop()
   }
 
-  /** Deterministic web-shaped corpus: boilerplate templates (each
-    * shared by nDocs/nTemplates docs — its shingles' DF is the hot
-    * posting-list surface), Zipfian sources, planted near-dups (mod 97)
-    * and quotes (mod 101). All token material derives from xxhash64(id)
-    * — no RNG, so every run and every engine sees the same corpus. */
-  /** Raw-crawl wrap of the stress corpus (shared by web_pipeline and
-    * end_to_end): copies are character-translated (template 'b' AND
-    * tail 'w') so no 5-gram repeats across copies; the y1/y2 spacers
-    * shift the copies' 4-token sentence phase so a trailing lexicon
-    * token ("xdup") isn't period-mangled in every copy. */
+  /** (media_id, payload) rows of the synthesized media files. */
+  private val mediaSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("media_id",
+      org.apache.spark.sql.types.LongType, nullable = false),
+    org.apache.spark.sql.types.StructField("payload",
+      org.apache.spark.sql.types.BinaryType)))
+
   /** Power-law edge list shared by the graph steps (pagerank / hits /
     * trustrank / components), generated once per (dir, nEdges) —
     * quadratic-density targets make real hubs: in-degree(j) ∝
-    * 1/sqrt(j). Every consumer calls this so STRESS_ONLY selective
-    * reruns never depend on another step having run first. */
+    * 1/sqrt(j). */
   private def ensurePagerankEdges(spark: SparkSession, dir: String,
       nEdges: Long): String = {
     val nNodes = math.max(1000L, nEdges / 10)
@@ -2321,6 +2165,11 @@ object Stress {
     edgesPath
   }
 
+  /** Raw-crawl wrap of the stress corpus (shared by web_pipeline and
+    * end_to_end): copies are character-translated (template 'b' AND
+    * tail 'w') so no 5-gram repeats across copies; the y1/y2 spacers
+    * shift the copies' 4-token sentence phase so a trailing lexicon
+    * token ("xdup") isn't period-mangled in every copy. */
   private def rawWeb(docs: DataFrame): DataFrame = {
     val tripled = concat_ws(" ", col("text"), lit("y1"),
       translate(col("text"), "wb", "vc"), lit("y2"),
@@ -2341,6 +2190,11 @@ object Stress {
         .as("html"))
   }
 
+  /** Deterministic web-shaped corpus: boilerplate templates (each
+    * shared by nDocs/nTemplates docs — its shingles' DF is the hot
+    * posting-list surface), Zipfian sources, planted near-dups (mod 97)
+    * and quotes (mod 101). All token material derives from xxhash64(id)
+    * — no RNG, so every run and every engine sees the same corpus. */
   def corpus(spark: SparkSession, nDocs: Long,
       nTemplates: Int = 20): DataFrame = {
     val ids = spark.range(nDocs).toDF("doc_id")

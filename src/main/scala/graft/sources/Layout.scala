@@ -37,8 +37,20 @@ object Layout {
     df.withColumn("p_month", monthKey(col(dateCol)))
       .write.mode("append").partitionBy("p_month").parquet(path)
 
-  def read(spark: SparkSession, path: String): DataFrame =
+  /** Read the table, first finishing or undoing any partition replace
+    * that [[compactPartition]] left crashed: its hidden
+    * `.p_month=…__old`/`__staging` siblings would otherwise hide the
+    * month from every read. One listing of `path`, no Spark job. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val Leftover = """\.(.+)__(?:old|staging)""".r
+    if (fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath.getName).collect {
+        case Leftover(live) => live
+      }.distinct.foreach(live => BatchLog.recoverDir(spark, s"$path/$live"))
     spark.read.parquet(path)
+  }
 
   /** N-column Z-order (Morton) key: interleave the low `bits` bits of
     * each column so one sort clusters EVERY listed dimension at once.
@@ -97,8 +109,8 @@ object Layout {
     * (listing + footer reads) long before data size does. Rewrites the
     * partition into ceil(bytes / targetBytes) files and commits it with
     * [[graft.pipelines.BatchLog.replaceDir]] (readers of other
-    * partitions are unaffected; a reader of this one calls
-    * `recoverDir` on it first, as this method does).
+    * partitions are unaffected; [[read]] recovers a crashed replace
+    * first, as this method does).
     * Returns (filesBefore, filesAfter). */
   def compactPartition(spark: SparkSession, path: String,
       partition: String, targetBytes: Long = 128L * 1024 * 1024)

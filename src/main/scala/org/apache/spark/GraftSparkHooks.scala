@@ -1,16 +1,14 @@
 package org.apache.spark
 
-/** Bench-side access to one `private[spark]` member: the async
-  * listener bus's drain barrier. [[graft.Bench]] attributes executor
-  * task metrics (GC time, input/shuffle/output bytes, spill, peak
-  * execution memory) to individual gates by snapshot-diffing a
-  * SparkListener around each gate's runs — but listener events post
-  * asynchronously, so without a drain between gates a slow bus leaks
-  * one gate's tasks into its neighbor's delta. `waitUntilEmpty()` is
-  * exactly that barrier; Spark exposes it package-private for its own
-  * tests. Nothing else from the internal namespace is touched, and no
-  * behavior is altered — this is a read-side synchronization point
-  * only.
+/** Harness-side access to one `private[spark]` member: the async
+  * listener bus's drain barrier. [[graft.Trace]] attributes listener
+  * events (jobs, executor task metrics, query planning time) to the
+  * innermost open span — but events post asynchronously, so without a
+  * drain at each span boundary a slow bus leaks one span's tasks into
+  * its neighbour's. `waitUntilEmpty()` is exactly that barrier; Spark
+  * exposes it package-private for its own tests. Nothing else from the
+  * internal namespace is touched, and no behavior is altered — this is
+  * a read-side synchronization point only.
   */
 object GraftSparkHooks {
   def drainListenerBus(sc: SparkContext): Unit =

@@ -259,7 +259,8 @@ class BatchLogSpec extends SparkSpec {
       },
       run = root => Layout.compactPartition(spark, s"$root/fact", month),
       read = { root =>
-        val rows = recovered(s"$root/fact/$month", "id")
+        val rows = Layout.read(spark, s"$root/fact")
+          .filter(col("p_month") === 202401).orderBy("id").collect().toSeq
         val files = new java.io.File(s"$root/fact/$month").list()
           .count(_.endsWith(".parquet"))
         Seq(Row(files) +: rows)
