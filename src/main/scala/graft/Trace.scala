@@ -7,11 +7,11 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** One Spark job: its call site (`count at Stress.scala:96`), its
-  * [start, end] epoch ms, and the tasks and executor time of its
-  * stages. */
+/** One Spark job: its call site (`count at Stress.scala:96`), the SQL
+  * execution (query) it ran for, if any, its [start, end] epoch ms, and
+  * the tasks and executor time of its stages. */
 private[graft] final class Job(val id: Int, val site: String,
-    val startMs: Long, val stages: Int) {
+    val sqlId: Option[Long], val startMs: Long, val stages: Int) {
   var endMs: Long = startMs
   var tasks = 0L
   var runMs = 0L
@@ -92,12 +92,13 @@ private[graft] final class Trace(spark: SparkSession) {
         // execution submits stages asynchronously); the action that
         // started its SQL execution names the caller. Other jobs are
         // named by their result stage.
-        val site = Option(e.properties)
+        val sqlId = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .flatMap(id => sqlSites.get(id.toLong))
+          .map(_.toLong)
+        val site = sqlId.flatMap(sqlSites.get)
           .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
           .getOrElse("unknown")
-        val j = new Job(e.jobId, site, e.time, e.stageIds.size)
+        val j = new Job(e.jobId, site, sqlId, e.time, e.stageIds.size)
         current.jobs += j
         running(e.jobId) = j
         e.stageIds.foreach(stageJob(_) = j)

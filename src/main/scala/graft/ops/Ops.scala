@@ -36,9 +36,13 @@ object DimResolver {
 
   private def norm(c: Column): Column = Cleansing.normalizeKey(c)
 
-  /** Left-join every lookup in sequence; unresolved keys stay null (the
-    * caller drops/counts them — P5). Dims are broadcast: at 100 TB the
-    * fact side never shuffles for dimension resolution. */
+  /** Left-join every lookup in sequence; unresolved keys stay null. The
+    * caller counts and drops them (P5): `Pipelines.loadIncoming` counts
+    * the misses with an `Observation` on the frame that feeds its
+    * checkpointed delta, as the reference counts them in the loop that
+    * resolves each row (load_fact_sales_dw.py:263-277). Dims are
+    * broadcast: at 100 TB the fact side never shuffles for dimension
+    * resolution. */
   def resolveDimKeys(facts: DataFrame, lookups: Seq[DimLookup]): DataFrame =
     lookups.foldLeft(facts) { (df, lk) =>
       val dimKeyed = lk.dim.select(
@@ -68,15 +72,6 @@ object DimResolver {
             .drop("__fk", "__fb")
       }
     }
-
-  /** Per-dimension miss counters (load_fact_sales_dw.py:263-277) in ONE
-    * pass — a single aggregate, not one count() job per dim. */
-  def missCounts(resolved: DataFrame, outCols: Seq[String]): Map[String, Long] = {
-    val aggs = outCols.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(c))
-    val row = resolved.agg(aggs.head, aggs.tail: _*).collect()(0)
-    outCols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
 }
 
 // ---------------------------------------------------------------------------
@@ -145,47 +140,38 @@ object SurrogateKeys {
   /** Gap-free sequential keys: maxKey + global rank over a stable total
     * order — SAME semantics as `row_number().over(Window.orderBy(ord))`,
     * executed scalably: range-repartition on the order columns, sort
-    * within partitions, then zipWithIndex (per-partition counts + offset
-    * prefix-sum). No single-reducer WindowExec anywhere: the old
-    * unpartitioned-window form funneled every row through one task, the
-    * silent scale cliff SURVEY §7.4 risk 1 warns about. Cost is one range
-    * shuffle + one light count job — the shuffle also existed in the
-    * window form; the single reducer is what's gone. Keys are contiguous
-    * maxKey+1..maxKey+N in `ord` order (ties ranked arbitrarily but
-    * counted once, exactly like row_number). */
+    * within partitions, then [[numbered]]. No single-reducer WindowExec
+    * anywhere: the old unpartitioned-window form funneled every row
+    * through one task, the silent scale cliff SURVEY §7.4 risk 1 warns
+    * about. Cost is one range shuffle + one light count job — the shuffle
+    * also existed in the window form; the single reducer is what's gone.
+    * Keys are contiguous maxKey+1..maxKey+N in `ord` order (ties ranked
+    * arbitrarily but counted once, exactly like row_number). */
   def assignSequential(newRows: DataFrame, keyCol: String, maxKey: Long,
       ord: Seq[Column]): DataFrame = {
     require(ord.nonEmpty, "assignSequential needs a total order; " +
       "use assignContiguous for order-free contiguous keys")
-    val spark = newRows.sparkSession
-    val sorted = newRows.repartitionByRange(ord: _*)
-      .sortWithinPartitions(ord: _*)
-    val withKeys = sorted.rdd.zipWithIndex().map { case (row, idx) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (maxKey + idx + 1L))
-    }
-    spark.createDataFrame(withKeys, sorted.schema.add(keyCol, "long"))
+    numbered(newRows.repartitionByRange(ord: _*)
+      .sortWithinPartitions(ord: _*), keyCol, maxKey)
   }
 
-  /** Scale path: contiguous (gap-free) but order-free keys via
-    * per-partition counts + offsets — no global sort, no single reducer.
-    * The reference only needs max+1 density, not a particular order
-    * (SURVEY §7.4 risk 1). */
+  /** Scale path: contiguous (gap-free) but order-free keys in the rows'
+    * partition order — no global sort, no single reducer. The reference
+    * only needs max+1 density, not a particular order (SURVEY §7.4
+    * risk 1). */
   def assignContiguous(newRows: DataFrame, keyCol: String,
+      maxKey: Long): DataFrame = numbered(newRows, keyCol, maxKey)
+
+  /** `rows` plus `keyCol` = maxKey+1.. in partition order, then row order
+    * within each partition: `zipWithIndex` (one per-partition count job,
+    * offsets, then the numbering pass). */
+  private def numbered(rows: DataFrame, keyCol: String,
       maxKey: Long): DataFrame = {
-    val spark = newRows.sparkSession
-    import spark.implicits._
-    val counts = newRows.rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator.single(i -> it.size.toLong)
-    }.collect().sortBy(_._1)
-    val offsets = counts.map(_._2).scanLeft(maxKey)(_ + _)
-    val offsetByPart = counts.map(_._1).zip(offsets).toMap
-    val schema = newRows.schema
-    val withKeys = newRows.rdd.mapPartitionsWithIndex { case (i, it) =>
-      var k = offsetByPart(i)
-      it.map { row => k += 1
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ k) }
+    val withKeys = rows.rdd.zipWithIndex().map { case (row, idx) =>
+      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (maxKey + idx + 1L))
     }
-    spark.createDataFrame(withKeys, schema.add(keyCol, "long"))
+    rows.sparkSession.createDataFrame(withKeys,
+      rows.schema.add(keyCol, "long"))
   }
 
   /** Read the current max key (A1: NVL(MAX(id),0)). */

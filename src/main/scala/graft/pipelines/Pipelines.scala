@@ -1,7 +1,10 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
 import graft.datagen.DataGen
 import graft.datedim.DateDim
@@ -130,15 +133,20 @@ object Pipelines {
         "dist_id", "DIST_KEY"),
       DimLookup(db.dates.withColumn("fd", col("full_date").cast("string")),
         Seq("FULL_DATE"), Seq("fd"), "date_id", "DATE_ID")))
-    val misses = DimResolver.missCounts(keyed,
-      Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY", "DATE_ID"))
-    // stage 6: drop unresolved / unparseable rows (P5/P6)
-    val clean = keyed.na.drop(Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY",
-      "DATE_ID", "QUANTITY_SOLD", "NET_AMOUNT"))
+    // stage 6: drop unresolved / unparseable rows (P5/P6), counting the
+    // dim misses with an Observation. An Observation reports from the
+    // first action whose plan carries it: here the checkpoint below
+    val dimKeys = Seq("STORE_KEY", "PRODUCT_KEY", "DIST_KEY", "DATE_ID")
+    val missObs, deltaObs, opsObs = Observation()
+    val missAggs = dimKeys.map(k => count(when(col(k).isNull, 1)).as(k))
+    val clean = keyed.observe(missObs, missAggs.head, missAggs.tail: _*)
+      .na.drop(dimKeys ++ Seq("QUANTITY_SOLD", "NET_AMOUNT"))
       .withColumn("natural_key", Cleansing.naturalKey(col("DATE_ID"),
         col("STORE_KEY"), col("PRODUCT_KEY"), col("DIST_KEY")))
-    // the delta at DW schema minus fact_key, persisted: every later job
-    // would re-run the CSV read + schema map + dim joins + dedup otherwise
+    // the delta at DW schema minus fact_key, checkpointed by its own
+    // action: later jobs read it instead of re-running the CSV read +
+    // schema map + dim joins + dedup, and no later plan carries the
+    // observed nodes
     val incoming = Dedupe.dedupeByKey(clean, Seq("natural_key"),
       Seq(col("SALES_ID")))
       .select(col("natural_key"), col("DATE_ID").as("date_id"),
@@ -150,7 +158,8 @@ object Pipelines {
         col("GROSS_AMOUNT").cast("double").as("gross_amount"),
         col("DISCOUNT_AMOUNT").cast("double").as("discount_amount"),
         col("NET_AMOUNT").cast("double").as("net_amount"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .observe(deltaObs, count(lit(1)).as("incoming"))
+      .localCheckpoint(eager = true)
     try {
       // stage 7: classify vs current DW state
       val dwPath = s"$root/dw/fact_sales"
@@ -176,22 +185,36 @@ object Pipelines {
         .withColumn("fact_key", lit(null).cast(LongType))
       val staged = inserts.unionByName(updates.select(inserts.columns
         .map(col).toIndexedSeq: _*))
-      // stage 9: merge, committed by the directory replace below
-      val merged = MergeInto.mergeInto(existing, staged, Seq("natural_key"),
-        incoming.columns.filterNot(c => c == "natural_key").toSeq,
-        "operation", nullSafeKeys = false)
-      // one aggregate for both counts, over the rows the merge applies
-      val ops = staged.agg(
-        count(when(col("operation") === "INSERT", 1)),
-        count(when(col("operation") === "UPDATE", 1))).head()
-      val stats = Map("incoming" -> incoming.count(),
-        "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++
-        misses.map { case (k, v) => s"miss_$k" -> v }
+      // stage 9: merge, committed by the directory replace below; the
+      // merge sets the target's null `operation` on each row it applies
+      val merged = MergeInto.mergeInto(
+          existing.withColumn("operation", lit(null).cast(StringType)),
+          staged, Seq("natural_key"),
+          incoming.columns.filterNot(_ == "natural_key").toSeq :+ "operation",
+          "operation", nullSafeKeys = false)
+        .observe(opsObs,
+          count(when(col("operation") === "INSERT", 1)).as("inserts"),
+          count(when(col("operation") === "UPDATE", 1)).as("updates"))
+        .drop("operation")
       BatchLog.replaceDir(spark, dwPath)(
         merged.write.mode("overwrite").parquet(_))
+      val misses = observed(missObs, "dim misses").getValuesMap[Long](dimKeys)
+      val ops = observed(opsObs, "inserts/updates")
+      val stats = Map("incoming" -> observed(deltaObs, "incoming").getLong(0),
+        "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++
+        misses.map { case (k, v) => s"miss_$k" -> v }
       Loaded(spark.read.parquet(dwPath), stats)
-    } finally incoming.unpersist()
+    } finally incoming.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
   }
+
+  /** `obs`'s metrics, which reach the driver through the listener bus
+    * after the action: a bounded wait that fails naming `what` when they
+    * never arrive, or arrive empty (the action's plan lost the node). */
+  private def observed(obs: Observation, what: String): Row =
+    scala.util.Try(Await.result(obs.future, 60.seconds)).toOption
+      .filter(_.length > 0).getOrElse(throw new IllegalStateException(
+        s"load stats: the $what observation never reported"))
 
   /** Alias-tolerant logical schema of the incoming snapshot (FIXTURES
     * §1): shared by resolution checks and the loader. */

@@ -1,16 +1,17 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Cleansing
 
 /** Declarative data-quality checks (SURVEY.md §2.8 V1-V10): the engine
   * behind the reference's validate_table.py CLI, re-expressed so that ALL
-  * scalar checks for a table evaluate in ONE aggregation job (one scan —
-  * the reference runs one SQL per check; at 100 TB that's the difference
-  * between 1 and 10 full-table reads). PK-uniqueness needs its own
-  * shuffle; everything else folds into the single agg.
+  * checks for a table evaluate in ONE aggregate query (one scan — the
+  * reference runs one SQL per check; at 100 TB that's the difference
+  * between 1 and 10 full-table reads). PK-uniqueness folds in as grouping
+  * sets beside the scalar checks' indicator sums: one shuffle of the key
+  * columns for all PKs of the table (see [[Validator.run]]).
   */
 sealed trait Check
 /** V1: row count >= n (validate_table.py:135-140, 277-285) */
@@ -32,7 +33,7 @@ final case class Freshness(dateCol: String, execDate: String,
 /** Beyond parity: columns must be free of PII patterns (the email/phone
   * regexes of [[graft.operators.Curation.redactPii]]) — the release
   * gate a training-data pipeline runs AFTER redaction: observed = rows
-  * still matching, pass only at zero. Rides the shared single-agg pass. */
+  * still matching, pass only at zero. Rides the table's one aggregate query. */
 final case class PiiFree(cols: Seq[String]) extends Check
 
 final case class CheckResult(check: String, column: String,
@@ -71,20 +72,15 @@ object Validator {
     case MinRows(_)             => Nil
   }
 
-  private val resultSchema = StructType(Seq(
-    StructField("check", StringType, nullable = false),
-    StructField("column", StringType, nullable = false),
-    StructField("observed", LongType, nullable = false),
-    StructField("threshold", LongType, nullable = false),
-    StructField("passed", BooleanType, nullable = false),
-    StructField("severity", StringType, nullable = false)))
-
-  /** Evaluate all checks; returns one row per (check, column). Scalar
-    * checks share a single aggregation pass; each PkUnique adds one
-    * shuffle job. */
+  /** Evaluate all checks; returns one row per (check, column): the
+    * schema checks, then the scalar checks, then each PkUnique, each in
+    * the order given. Every scalar check is a per-row 0/1 indicator, and
+    * one aggregate query evaluates them all together with every
+    * PkUnique's count of duplicated key groups: grouping sets over the
+    * PK columns, the empty set carrying the indicator sums and each PK's
+    * set its groups, folded to one row by an outer aggregate. */
   def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
     checks.flatMap(referencedNames).foreach(Identifiers.requireSafe)
-    val spark = df.sparkSession
     val present = df.columns.map(_.toUpperCase).toSet
 
     // schema-level checks need no job at all
@@ -95,68 +91,62 @@ object Validator {
       }
     }.flatten
 
-    // one aggregation pass for every scalar check
-    case class AggSlot(check: String, column: String, threshold: Long,
-        passIfAtLeast: Boolean, severity: String, expr: Column)
-    val slots = scala.collection.mutable.ArrayBuffer.empty[AggSlot]
-    checks.foreach {
-      case MinRows(n) =>
-        slots += AggSlot("min_rows", "*", n, passIfAtLeast = true, "ERROR",
-          count(lit(1)))
-      case NoNulls(cols) => cols.foreach { c =>
-        slots += AggSlot("no_nulls", c, 0L, passIfAtLeast = false, "ERROR",
-          sum(when(col(c).isNull, 1L).otherwise(0L)))
-      }
-      case NumericParsable(cols) => cols.foreach { c =>
-        slots += AggSlot("numeric_parsable", c, 0L, passIfAtLeast = false,
-          "ERROR", sum(when(col(c).isNotNull &&
-            Cleansing.cleanNumericValidator(col(c)).isNull, 1L)
-            .otherwise(0L)))
-      }
-      case FlagDomain(cols) => cols.foreach { c =>
-        slots += AggSlot("flag_domain", c, 0L, passIfAtLeast = false,
-          "ERROR", sum(when(col(c).isNull || !col(c).isin("Y", "N"), 1L)
-            .otherwise(0L)))
-      }
+    // every scalar check with its per-row hit, then every PkUnique
+    case class Slot(check: String, column: String, threshold: Long,
+        passIfAtLeast: Boolean, severity: String)
+    val scalars: Seq[(Slot, Column)] = checks.flatMap {
+      case MinRows(n) => Seq(
+        Slot("min_rows", "*", n, passIfAtLeast = true, "ERROR") -> lit(true))
+      case NoNulls(cols) => cols.map(c =>
+        Slot("no_nulls", c, 0L, passIfAtLeast = false, "ERROR") ->
+          col(c).isNull)
+      case NumericParsable(cols) => cols.map(c =>
+        Slot("numeric_parsable", c, 0L, passIfAtLeast = false, "ERROR") ->
+          (col(c).isNotNull && Cleansing.cleanNumericValidator(col(c)).isNull))
+      case FlagDomain(cols) => cols.map(c =>
+        Slot("flag_domain", c, 0L, passIfAtLeast = false, "ERROR") ->
+          (col(c).isNull || !col(c).isin("Y", "N")))
       case Freshness(dateCol, execDate, warnOnly) =>
-        slots += AggSlot("freshness", dateCol, 1L, passIfAtLeast = true,
-          if (warnOnly) "WARNING" else "ERROR",
-          sum(when(col(dateCol).cast("date") === lit(execDate).cast("date"),
-            1L).otherwise(0L)))
-      case PiiFree(cols) => cols.foreach { c =>
-        slots += AggSlot("pii_free", c, 0L, passIfAtLeast = false, "ERROR",
-          sum(when(col(c).isNotNull &&
+        Seq(Slot("freshness", dateCol, 1L, passIfAtLeast = true,
+          if (warnOnly) "WARNING" else "ERROR") ->
+          (col(dateCol).cast("date") === lit(execDate).cast("date")))
+      case PiiFree(cols) => cols.map(c =>
+        Slot("pii_free", c, 0L, passIfAtLeast = false, "ERROR") ->
+          (col(c).isNotNull &&
             (col(c).rlike(graft.operators.Curation.emailRe) ||
-             col(c).rlike(graft.operators.Curation.phoneRe)), 1L)
-            .otherwise(0L)))
-      }
-      case _ => ()
+             col(c).rlike(graft.operators.Curation.phoneRe))))
+      case _ => Nil
     }
-    val aggResults: Seq[CheckResult] = if (slots.isEmpty) Nil else {
-      val named = slots.zipWithIndex.map { case (s, i) =>
-        coalesce(s.expr.cast("long"), lit(0L)).as(s"c$i") }
-      val row = df.agg(named.head, named.tail.toSeq: _*).collect()(0)
-      slots.zipWithIndex.map { case (s, i) =>
-        val v = row.getLong(i)
-        val ok = if (s.passIfAtLeast) v >= s.threshold else v <= s.threshold
-        CheckResult(s.check, s.column, v, s.threshold, ok, s.severity)
-      }.toSeq
-    }
+    val pks = checks.collect { case PkUnique(cols) => cols }
+    val slots = scalars.map(_._1) ++ pks.map(cols => Slot("pk_unique",
+      cols.mkString("+"), 0L, passIfAtLeast = false, "ERROR"))
+    val keys = pks.flatten.distinct
 
-    // PK uniqueness: count of duplicated key groups (one shuffle each)
-    val pkResults = checks.collect { case PkUnique(cols) =>
-      val dupGroups = df.groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).count()
-      CheckResult("pk_unique", cols.mkString("+"), dupGroups, 0L,
-        dupGroups == 0L, "ERROR")
+    val observed: Seq[Long] = if (slots.isEmpty) Nil else {
+      val base = df.select(keys.map(col) ++ scalars.zipWithIndex.map {
+        case ((_, hit), i) => when(hit, 1L).otherwise(0L).as(s"__i$i") }: _*)
+      // grouping_id sets bit (n-1-i) when keys(i) is NOT in the set
+      def gid(set: Seq[String]): Long = keys.indices.collect {
+        case i if !set.contains(keys(i)) => 1L << (keys.size - 1 - i) }.sum
+      val inner = count(lit(1)).as("__n") +: scalars.indices.map(i =>
+        sum(col(s"__i$i")).as(s"__s$i"))
+      val groups =
+        if (keys.isEmpty) base.agg(lit(0L).as("__g"), inner: _*)
+        else base.groupingSets(Nil +: pks.distinct.map(_.map(col)),
+          keys.map(col): _*).agg(grouping_id().as("__g"), inner: _*)
+      val whole = col("__g") === gid(Nil)
+      val outer = scalars.indices.map(i =>
+        coalesce(sum(when(whole, col(s"__s$i"))), lit(0L))) ++
+        pks.map(cols =>
+          count(when(col("__g") === gid(cols) && col("__n") > 1, 1)))
+      val row = groups.agg(outer.head, outer.tail: _*).collect()(0)
+      outer.indices.map(row.getLong)
     }
-
-    val all = schemaResults ++ aggResults ++ pkResults
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(all.map(r =>
-        Row(r.check, r.column, r.observed, r.threshold, r.passed,
-          r.severity)), 1),
-      resultSchema)
+    val aggResults = slots.zip(observed).map { case (s, v) =>
+      val ok = if (s.passIfAtLeast) v >= s.threshold else v <= s.threshold
+      CheckResult(s.check, s.column, v, s.threshold, ok, s.severity)
+    }
+    df.sparkSession.createDataFrame(schemaResults ++ aggResults)
   }
 
   /** Top-N duplicate examples for a failing PkUnique (V6's evidence,
@@ -188,11 +178,10 @@ object Validator {
         lit(pctAccuracy)).as(s"${c}__approx_median"))
     }
     val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    def d(i: Int): java.lang.Double =
-      if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
     cols.zipWithIndex.map { case (c, i) =>
       val b = i * 5
-      (c, d(b), d(b + 1), r.getLong(b + 2), r.getLong(b + 3), d(b + 4))
+      (c, boxed(r, b), boxed(r, b + 1), r.getLong(b + 2), r.getLong(b + 3),
+        boxed(r, b + 4))
     }.toDF("column", "min", "max", "non_null", "approx_distinct",
       "approx_median")
   }
@@ -282,6 +271,8 @@ object Validator {
   /** V8: numeric profile per column in one pass (:398-415). avg is
     * decimal-sum/count for cross-engine determinism. */
   def numericProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val aggs = cols.flatMap { c => Seq(
       min(col(c)).cast("double").as(s"${c}__min"),
       max(col(c)).cast("double").as(s"${c}__max"),
@@ -289,23 +280,18 @@ object Validator {
         .as(s"${c}__avg"),
       count(col(c)).as(s"${c}__nonnull"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*)
-    // unpivot to (column, min, max, avg, non_null) rows; min/max/avg are
-    // null for an empty table or all-null column — exactly the degenerate
-    // inputs a validator must survive, so box nulls instead of getDouble
-    val spark = df.sparkSession
-    val r = row.collect()(0)
-    def d(i: Int): java.lang.Double =
-      if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
-    val out = cols.zipWithIndex.map { case (c, i) =>
-      Row(c, d(i * 4), d(i * 4 + 1), d(i * 4 + 2), r.getLong(i * 4 + 3))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1),
-      StructType(Seq(
-        StructField("column", StringType, nullable = false),
-        StructField("min", DoubleType), StructField("max", DoubleType),
-        StructField("avg", DoubleType), StructField("non_null", LongType))))
+    // unpivot to (column, min, max, avg, non_null) rows
+    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    cols.zipWithIndex.map { case (c, i) => (c, boxed(r, i * 4),
+      boxed(r, i * 4 + 1), boxed(r, i * 4 + 2), r.getLong(i * 4 + 3))
+    }.toDF("column", "min", "max", "avg", "non_null")
   }
+
+  /** Double slot `i` of `r`, boxed: min/max/avg are null for an empty
+    * table or all-null column — exactly the degenerate inputs a
+    * validator must survive. */
+  private def boxed(r: Row, i: Int): java.lang.Double =
+    if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
 
   /** V10: the DAG-shaped suite — named tables with their contracts,
     * evaluated in order (dims ∥ → fact → file in the reference; order

@@ -56,7 +56,6 @@ class OpsSpec extends SparkSpec {
     // rows ordered: (alpha,brandx-spaced)... orderBy f_name: "  alpha ",
     // "alpha", "beta", "gamma"
     assert(got === Seq(Some(1L), Some(1L), Some(3L), None))
-    assert(DimResolver.missCounts(resolved, Seq("dim_key"))("dim_key") === 1L)
   }
 
   test("ChangeClassifier: insert/update/unchanged with tolerance") {

@@ -2,12 +2,16 @@ package graft
 
 import graft.pipelines.Pipelines
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Minutes, Span}
 import java.nio.file.Files
 
 /** The SURVEY §7.2 minimum end-to-end slice: generate → extract →
   * snapshot → dw-load → validate, plus the idempotence contract (§5:
   * re-running the same file is a no-op). */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with TimeLimits {
+  // a load whose stats never arrive is interrupted, not left to hang
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def load(db: Pipelines.SourceDb, root: String): Pipelines.Loaded =
     Pipelines.loadIncoming(spark, db, root,
@@ -124,6 +128,63 @@ class PipelineSpec extends SparkSpec {
       assert(math.abs(r.getAs[Double]("net_amount") -
         r.getAs[Double]("n")) < 0.01)
     }
+  }
+
+  test("Loaded.stats pins every counter: known misses, the same file " +
+      "again, and a file where every row misses a dim") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_pipe_stats").toString
+    val db = Pipelines.sourceLoad(spark, root, nFacts = 20,
+      dateId = 20240115)
+    def names(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.orderBy(df.columns.head).select(c).as[String].collect()
+    val stores = names(db.stores, "store_name")
+    val products = names(db.products, "product_name")
+    val dists = names(db.distributors, "dist_name")
+    // 12 good rows, one store each, so their natural keys are distinct
+    def row(id: Int, store: String, product: String, dist: String,
+        date: String = "2024-01-15", qty: String = "3") =
+      (id.toString, date, store, product, dist, qty, "10.00", "30.00",
+        "0.00", "30.00")
+    val good = (0 until 12).map(i => row(i, stores(i), products(i),
+      dists(i % dists.length)))
+    val rows = good ++ Seq(
+      row(12, "No Such Store", products(0), dists(0)),
+      // misses the exact lookup and the name fallback alike
+      row(13, stores(12), "No Such Product", dists(0)),
+      row(14, stores(13), products(0), "No Such Distributor"),
+      row(15, stores(14), products(0), dists(0), date = "1999-12-31"),
+      row(16, stores(15), products(0), dists(0), qty = "n/a"),
+      // row 0's natural key again: dedupe keeps the lower sales_id
+      row(17, stores(0), products(0), dists(0)))
+    def write(rs: Seq[(String, String, String, String, String, String,
+        String, String, String, String)], name: String): String = {
+      val dir = s"$root/incoming/$name"
+      graft.sources.CsvIO.write(rs.toDF("sales_id", "full_date",
+        "store_name", "product_name", "dist_name", "quantity_sold",
+        "sales_unit_price", "gross_amount", "discount_amount",
+        "net_amount"), dir)
+      dir
+    }
+    def stats(dir: String): Map[String, Long] = failAfter(Span(2, Minutes)) {
+      Pipelines.loadIncoming(spark, db, root, dir) match {
+        case Pipelines.Loaded(_, s) => s
+        case other => fail(s"expected Loaded, got $other")
+      }
+    }
+    def expected(incoming: Long, inserts: Long, store: Long = 1,
+        others: Long = 1) = Map("incoming" -> incoming,
+      "inserts" -> inserts, "updates" -> 0L, "miss_STORE_KEY" -> store,
+      "miss_PRODUCT_KEY" -> others, "miss_DIST_KEY" -> others,
+      "miss_DATE_ID" -> others)
+    val fixture = write(rows, "fixture")
+    assert(stats(fixture) === expected(incoming = 12, inserts = 12))
+    assert(stats(fixture) === expected(incoming = 12, inserts = 0))
+    val allMiss = write((0 until 5).map(i =>
+      row(100 + i, "No Such Store", products(i), dists(0))), "all_miss")
+    assert(stats(allMiss) ===
+      expected(incoming = 0, inserts = 0, store = 5, others = 0))
+    assert(spark.read.parquet(s"$root/dw/fact_sales").count() === 12)
   }
 
   test("FIXTURES §6: poison, retry, and snowflake-dim maintenance") {
