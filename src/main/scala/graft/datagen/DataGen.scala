@@ -1,10 +1,10 @@
 package graft.datagen
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 import graft.functions.{Cleansing, RefData}
-import graft.ops.SurrogateKeys
 
 /** Seeded synthetic generators (SURVEY §2.7 F27/F28, §7.1 item 6) — the
   * Spark re-expression of the reference's daily data-generation scripts
@@ -174,22 +174,25 @@ object DataGen {
     * both derived from `dateId`, each its own draw — plus tiered
     * discount + decimal money math (F21/F22).
     *
-    * Dim picks are broadcast joins on a modular index — the fact side
-    * never shuffles; at 1000 executors this is embarrassingly parallel.
+    * Each dim is collected once, in pick order, and numbered on the
+    * driver (the reference picks from in-memory lists); the picks are
+    * broadcast joins of those rows, so the fact side never shuffles.
     */
   def factSales(spark: SparkSession, n: Long, dateId: Int,
-      productsDf0: DataFrame, storesDf0: DataFrame,
-      distributorsDf0: DataFrame,
+      productsDf: DataFrame, storesDf: DataFrame,
+      distributorsDf: DataFrame,
       seed: Long = 45, startKey: Long = 0): DataFrame = {
-    // each dim feeds a count, an assignSequential pass and a broadcast
-    // build — cache them once (tiny control-plane frames) instead of
-    // re-running the md5 generators per consumer (~7 extra jobs/call)
-    val productsDf = graft.CacheScope.session.cache(productsDf0)
-    val storesDf = graft.CacheScope.session.cache(storesDf0)
-    val distributorsDf = graft.CacheScope.session.cache(distributorsDf0)
-    val nStores = storesDf.count()
-    val nProducts = productsDf.count()
-    val nDists = distributorsDf.count()
+    // `df`'s rows in `ord` order: one task sorts the whole dim
+    def collectSorted(df: DataFrame, ord: Column*): Seq[Row] =
+      df.coalesce(1).sortWithinPartitions(ord: _*).collect().toSeq
+    // `rows` (each followed by `extra`'s values) as a local frame: its
+    // broadcast runs no job
+    def local(schema: StructType, rows: Seq[Seq[Any]],
+        extra: (String, DataType)*): DataFrame =
+      spark.createDataFrame(rows.map(Row.fromSeq).asJava,
+        extra.foldLeft(schema) { case (s, (c, t)) => s.add(c, t) })
+    def numbered(rows: Seq[Row]): Seq[Seq[Any]] =
+      rows.zipWithIndex.map { case (r, i) => r.toSeq :+ i.toLong }
     val base = spark.range(n)
       .withColumn("sales_id", col("id") + 1 + startKey)
       .withColumn("u_store", hashUniform("fact", seed, col("sales_id")))
@@ -199,16 +202,14 @@ object DataGen {
       .withColumn("u_boost", hashUniform("fact", seed + 4, col("sales_id")))
     // weighted store pick: square the uniform (u*u, not pow — exact
     // single IEEE multiply on every engine) to skew toward the
-    // high-weight (low index after desc sort) stores. Dense 0-based
-    // indices come from assignSequential — range-partitioned two-phase,
-    // no single-reducer row_number window — here and for the pools
-    // below.
-    val storesIdx = SurrogateKeys.assignSequential(storesDf, "sidx", -1L,
-      Seq(col("volume_weight").desc, col("store_id")))
+    // high-weight (low index after desc sort) stores
+    val stores = collectSorted(storesDf, col("volume_weight").desc,
+      col("store_id"))
     val withStore = base
       .withColumn("sidx",
-        floor(col("u_store") * col("u_store") * nStores).cast("int"))
-      .join(broadcast(storesIdx), "sidx")
+        floor(col("u_store") * col("u_store") * stores.size.toLong).cast("int"))
+      .join(broadcast(local(storesDf.schema, numbered(stores),
+        "sidx" -> LongType)), "sidx")
     // category-affinity product pick (P7): Kirana/Convenience draw from
     // their allowed-category product pools, everyone else from the full
     // catalog. Drawing WITHIN the pool (indexed per group) honors the
@@ -218,34 +219,32 @@ object DataGen {
       "kirana" -> Seq("Grocery", "Beverage", "Dairy"),
       "convenience" -> Seq("Beverage", "Dairy", "Grocery"),
       "all" -> Nil)
+    val products = collectSorted(productsDf, col("product_id"))
     val pools = affinityGroups.map { case (g, cats) =>
-      val pool = if (cats.isEmpty) productsDf
-        else productsDf.filter(col("category").isin(cats: _*))
-      g -> SurrogateKeys.assignSequential(pool, "pidx", -1L,
-          Seq(col("product_id")))
-        .withColumn("pgroup", lit(g))
+      g -> products.filter(r =>
+        cats.isEmpty || cats.contains(r.getAs[String]("category")))
     }
-    val poolSizes = pools.map { case (g, df) => g -> df.count() }.toMap
-    val poolUnion = pools.map(_._2).reduce(_ unionByName _)
+    val poolUnion = local(productsDf.schema, pools.flatMap {
+      case (g, pool) => numbered(pool).map(_ :+ g) },
+      "pidx" -> LongType, "pgroup" -> StringType)
     val groupCol = when(col("class_of_trade").contains("Kirana"),
       "kirana")
       .when(col("class_of_trade").contains("Convenience"), "convenience")
       .otherwise("all")
-    val sizeCol = affinityGroups.map(_._1).foldLeft(lit(0L)) { (acc, g) =>
-      when(col("pgroup_pick") === g, lit(poolSizes(g))).otherwise(acc)
+    val sizeCol = pools.foldLeft(lit(0L)) { case (acc, (g, pool)) =>
+      when(col("pgroup_pick") === g, lit(pool.size.toLong)).otherwise(acc)
     }
     val withProd = withStore
       .withColumn("pgroup_pick", groupCol)
       .withColumn("pidx", floor(col("u_prod") * sizeCol).cast("int"))
       .withColumnRenamed("pgroup_pick", "pgroup")
       .join(broadcast(poolUnion), Seq("pgroup", "pidx"))
-    val distsIdx = SurrogateKeys.assignSequential(
-      distributorsDf.filter(col("active_flag") === "Y"), "didx", -1L,
-      Seq(col("dist_id")))
-    val nActive = distsIdx.count()
+    val dists = collectSorted(
+      distributorsDf.filter(col("active_flag") === "Y"), col("dist_id"))
     val joined = withProd
-      .withColumn("didx", floor(col("u_dist") * nActive).cast("int"))
-      .join(broadcast(distsIdx), "didx")
+      .withColumn("didx", floor(col("u_dist") * dists.size.toLong).cast("int"))
+      .join(broadcast(local(distributorsDf.schema, numbered(dists),
+        "didx" -> LongType)), "didx")
     val isWholesale = col("class_of_trade").contains("Wholesale")
     // F28 boosts (fact_sales_daily.py:86-97): weekend 1.2-1.4, seasonal
     // Oct-Dec 1.3-1.6 / Apr-May 1.1-1.3, each its own draw; off-season /

@@ -448,8 +448,8 @@ object Curation {
     * reducer (the SURVEY §7.4 scale cliff). Here: range-repartition on
     * id, per-partition token totals (a `collect()` of one long per
     * partition), scanLeft those into partition start offsets, then a
-    * second per-partition pass assigns running offsets — same shape as
-    * [[graft.SurrogateKeys.assignSequential]]. Both passes run over
+    * second per-partition pass assigns running offsets (`zipWithIndex`'s
+    * shape, summing tokens where it counts rows). Both passes run over
     * the SAME materialized RDD object, so the (sampled) range
     * boundaries cannot drift between them.
     *

@@ -45,33 +45,34 @@ object DimResolver {
     * resolution. */
   def resolveDimKeys(facts: DataFrame, lookups: Seq[DimLookup]): DataFrame =
     lookups.foldLeft(facts) { (df, lk) =>
-      val dimKeyed = lk.dim.select(
-        (lk.dimCols.zipWithIndex.map { case (c, i) =>
-          norm(col(c)).as(s"__dk$i") } :+ col(lk.keyCol).as(lk.outCol)): _*)
-        // one dim row per normalized key (dict semantics: last put wins in
-        // python; we keep MIN key for determinism — documented deviation)
-        .groupBy((0 until lk.dimCols.size).map(i => col(s"__dk$i")): _*)
-        .agg(min(col(lk.outCol)).as(lk.outCol))
-      val joinCond = lk.factCols.zipWithIndex.map { case (c, i) =>
-        norm(df(c)) === dimKeyed(s"__dk$i") }.reduce(_ && _)
-      val joined = df.join(broadcast(dimKeyed), joinCond, "left")
-        .drop((0 until lk.dimCols.size).map(i => s"__dk$i"): _*)
-      lk.fallback match {
-        case None => joined
-        case Some((factNameCol, dimNameCol, ordCol)) =>
-          // J3: name-only map populated with the FIRST-seen key by ordCol
-          val byName = lk.dim
-            .select(norm(col(dimNameCol)).as("__fk"),
-              col(lk.keyCol).as("__fb"), col(ordCol).as("__ord"))
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy(col("__fk")).orderBy(col("__ord"))))
-            .filter(col("__rn") === 1).drop("__rn", "__ord")
-          joined.join(broadcast(byName),
-              norm(joined(factNameCol)) === byName("__fk"), "left")
-            .withColumn(lk.outCol, coalesce(col(lk.outCol), col("__fb")))
-            .drop("__fk", "__fb")
+      // one dim row per normalized key (dict semantics: last put wins in
+      // python; we keep MIN key for determinism — documented deviation)
+      val exact = lookup(df, lk, lk.keyCol)
+      lk.fallback.fold(exact) { case (factNameCol, dimNameCol, ordCol) =>
+        // J3: name-only map populated with the FIRST-seen key by ordCol
+        lookup(exact, lk.copy(factCols = Seq(factNameCol),
+            dimCols = Seq(dimNameCol), outCol = "__fb"), ordCol)
+          .withColumn(lk.outCol, coalesce(col(lk.outCol), col("__fb")))
+          .drop("__fb")
       }
     }
+
+  /** `df` left-joined to `lk.dim` on the normalized keys, adding
+    * `lk.outCol` = the `keyCol` of the matching dim row lowest in
+    * `ordCol`. The build side groups inside the dim's one partition: a
+    * broadcast side is gathered to one place anyway, so the aggregate
+    * needs no exchange. */
+  private def lookup(df: DataFrame, lk: DimLookup,
+      ordCol: String): DataFrame = {
+    val keys = lk.dimCols.indices.map(i => s"__dk$i")
+    val side = lk.dim.coalesce(1)
+      .groupBy(lk.dimCols.zip(keys).map { case (c, k) =>
+        norm(col(c)).as(k) }: _*)
+      .agg(min_by(col(lk.keyCol), col(ordCol)).as(lk.outCol))
+    df.join(broadcast(side), lk.factCols.zip(keys).map { case (c, k) =>
+        norm(df(c)) === side(k) }.reduce(_ && _), "left")
+      .drop(keys: _*)
+  }
 }
 
 // ---------------------------------------------------------------------------

@@ -11,7 +11,7 @@ import graft.datedim.DateDim
 import graft.functions.Cleansing
 import graft.ops._
 import graft.schema.{LogicalCol, SchemaMapper}
-import graft.sources.{CsvIO, Ledger}
+import graft.sources.CsvIO
 import graft.validate._
 
 /** The reference's four DAGs (SURVEY §3 E1-E3 + §2.8 V10) composed from
@@ -126,8 +126,8 @@ object Pipelines {
     val keyed = DimResolver.resolveDimKeys(resolved, Seq(
       DimLookup(db.stores, Seq("STORE_NAME"), Seq("store_name"),
         "store_id", "STORE_KEY"),
-      DimLookup(db.products, Seq("PRODUCT_NAME"), Seq("product_name"),
-        "product_id", "PRODUCT_KEY",
+      DimLookup(db.products, Seq("PRODUCT_NAME", "BRAND"),
+        Seq("product_name", "brand"), "product_id", "PRODUCT_KEY",
         fallback = Some(("PRODUCT_NAME", "product_name", "product_id"))),
       DimLookup(db.distributors, Seq("DIST_NAME"), Seq("dist_name"),
         "dist_id", "DIST_KEY"),
@@ -203,7 +203,7 @@ object Pipelines {
       val stats = Map("incoming" -> observed(deltaObs, "incoming").getLong(0),
         "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++
         misses.map { case (k, v) => s"miss_$k" -> v }
-      Loaded(spark.read.parquet(dwPath), stats)
+      Loaded(spark.read.schema(merged.schema).parquet(dwPath), stats)
     } finally incoming.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
   }
@@ -268,13 +268,13 @@ object Pipelines {
     }.toMap
   }
 
-  /** The table at `path` after [[BatchLog.recoverDir]], or an empty
-    * frame when none exists yet. */
+  /** The table at `path` after [[BatchLog.recoverDir]], read with its
+    * `schema` (no inference job), or an empty frame when none exists yet. */
   private def loadOrEmpty(spark: SparkSession, path: String,
       schema: StructType): DataFrame =
-    if (BatchLog.recoverDir(spark, path)) spark.read.parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (BatchLog.recoverDir(spark, path))
+      spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   // ---- V10: validation suite -------------------------------------------
   def validationSuite(db: SourceDb, dwFacts: DataFrame,

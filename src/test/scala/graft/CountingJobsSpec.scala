@@ -1,14 +1,21 @@
 package graft
 
+import graft.datagen.DataGen
+import graft.ops.{DimLookup, DimResolver}
 import graft.pipelines.Pipelines
 import graft.validate._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Job-count tripwires on [[Trace]] for the counting in the daily
   * cycle: the validator checks a table in one aggregate query, and the
   * DW load counts with Observations on the frames it already runs, so
-  * no job of either comes from a counting action of its own. */
+  * no job of either comes from a counting action of its own. The dims
+  * are broadcast-sized: the generator collects each once, and a dim
+  * lookup's build side needs no shuffle. */
 class CountingJobsSpec extends SparkSpec {
 
   test("Validator.run with two PkUnique checks and every scalar check " +
@@ -56,5 +63,47 @@ class CountingJobsSpec extends SparkSpec {
     // the one collect left reads the current max key for stage 8
     assert(sites.filter(_.startsWith("collect at")).distinct.size <= 1,
       sites)
+  }
+
+  test("DataGen.factSales collects each dim once; writing its facts " +
+      "runs no numbering job") {
+    val trace = new Trace(spark)
+    val (facts, build) = trace.timed("build") {
+      DataGen.factSales(spark, 500, 20240115,
+        DataGen.products(spark, 60, 42), DataGen.stores(spark, 20, 43),
+        DataGen.distributors(spark, 8, 44))
+    }
+    val sites = build.counters.jobs.map(_.site)
+    assert(sites.size === 3 &&
+      sites.forall(_.startsWith("collect at DataGen.scala")), sites)
+    val dir = Files.createTempDirectory("graft_count_gen").toString
+    val write = trace.timed("write") {
+      facts.write.mode("overwrite").parquet(dir)
+    }._2
+    val written = write.counters.jobs.map(_.site)
+    assert(!written.exists(_.contains("Ops.scala")), written)
+    assert(spark.read.parquet(dir).count() === 500)
+  }
+
+  test("resolveDimKeys: no shuffle exchange under a lookup's broadcast") {
+    val dim = spark.range(0, 40, 1, 4).select(col("id").as("key"),
+      concat(lit("Name "), (col("id") % 30).cast("string")).as("name"),
+      concat(lit("B"), (col("id") % 3).cast("string")).as("brand"),
+      (-col("id")).as("ord"))
+    val facts = spark.range(0, 200, 1, 4).select(
+      concat(lit(" name "), (col("id") % 35).cast("string")).as("f_name"),
+      lit("b1").as("f_brand"))
+    val resolved = DimResolver.resolveDimKeys(facts, Seq(
+      DimLookup(dim, Seq("f_name", "f_brand"), Seq("name", "brand"), "key",
+        "k1", fallback = Some(("f_name", "name", "ord"))),
+      DimLookup(dim, Seq("f_name"), Seq("name"), "key", "k2")))
+    assert(resolved.collect().length === 200)
+    object Plan extends AdaptiveSparkPlanHelper
+    val plan = resolved.queryExecution.executedPlan
+    val broadcasts = Plan.collect(plan) { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.size === 3, plan)
+    broadcasts.foreach { b =>
+      assert(Plan.find(b)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty, b)
+    }
   }
 }

@@ -187,6 +187,44 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     assert(spark.read.parquet(s"$root/dw/fact_sales").count() === 12)
   }
 
+  test("J3: a product resolves by (name, brand), and by name alone when " +
+      "its brand is unknown") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_pipe_j3").toString
+    val db0 = Pipelines.sourceLoad(spark, root, nFacts = 20,
+      dateId = 20240115)
+    // two products whose names normalize alike, under different brands
+    def twin(id: Long, name: String, brand: String) =
+      org.apache.spark.sql.Row(id, name, brand, "Grocery", "Rice", "Acme",
+        s"SKU-$id", new java.math.BigDecimal("10.00"))
+    val twins = spark.createDataFrame(java.util.Arrays.asList(
+      twin(9001L, "Twin Rice", "Alpha"), twin(9002L, " twin rice ", "Beta")),
+      db0.products.schema)
+    val db = db0.copy(products = db0.products.unionByName(twins))
+    val stores = db.stores.orderBy("store_id")
+      .select(col("store_id"), col("store_name")).as[(Long, String)]
+      .collect().take(4)
+    // one store per row, so the natural keys are distinct
+    val brands = Seq("beta", "Alpha", "Gamma", null)
+    val rows = stores.zip(brands).zipWithIndex.map {
+      case (((_, store), brand), i) => (i.toString, "2024-01-15", store,
+        "TWIN RICE", brand, "Distributor 1", "3", "10.00", "30.00", "0.00",
+        "30.00")
+    }.toSeq
+    val dir = s"$root/incoming/twins"
+    graft.sources.CsvIO.write(rows.toDF("sales_id", "full_date",
+      "store_name", "product_name", "brand", "dist_name", "quantity_sold",
+      "sales_unit_price", "gross_amount", "discount_amount", "net_amount"),
+      dir)
+    val Pipelines.Loaded(dw, stats) = Pipelines.loadIncoming(spark, db,
+      root, dir)
+    assert(stats("inserts") === 4 && stats("miss_PRODUCT_KEY") === 0)
+    val got = dw.select("store_key", "product_key").as[(Long, Long)]
+      .collect().toMap
+    assert(got === stores.map(_._1).zip(Seq(9002L, 9001L, 9001L, 9001L))
+      .toMap)
+  }
+
   test("FIXTURES §6: poison, retry, and snowflake-dim maintenance") {
     val root = Files.createTempDirectory("graft_pipe2").toString
     val db = Pipelines.sourceLoad(spark, root, nFacts = 200,
