@@ -96,11 +96,13 @@ object ChangeClassifier {
       }
     }.reduce(_ || _)
 
-  /** Classify `incoming` vs `existing` on business key `bk`:
-    * INSERTs = left_anti on bk; UPDATEs = inner join where any tracked
-    * attribute changed. Returns incoming's columns + an `operation` tag
-    * (O4). Matches load_dim_product_dw.py:500-552 and clones. Sides are
-    * aliased so incoming/existing may share lineage (self-join safe).
+  /** Classify `incoming` vs `existing` on business key `bk`: one left
+    * join with a presence marker on the existing side, as
+    * [[MergeInto.merge]] does. An unmatched row is an INSERT, a matched
+    * one where any tracked attribute changed an UPDATE, and the rest
+    * drop. Returns incoming's columns + an `operation` tag (O4). Matches
+    * load_dim_product_dw.py:500-552 and clones. Sides are aliased so
+    * incoming/existing may share lineage (self-join safe).
     *
     * Scale: one shuffle of each side on bk (sort-merge); when `existing`
     * is a dimension (small), Spark's AQE broadcasts it automatically.
@@ -116,19 +118,17 @@ object ChangeClassifier {
       bk: Seq[String], tracked: Seq[TrackedCol],
       nullSafeKeys: Boolean = true): DataFrame = {
     val in2 = incoming.alias("__in")
-    val ex2 = existing.alias("__ex")
+    val ex2 = existing.withColumn("__ex_present", lit(true)).alias("__ex")
     val joinCond = bk.map { k =>
       if (nullSafeKeys) col(s"__in.$k") <=> col(s"__ex.$k")
       else col(s"__in.$k") === col(s"__ex.$k")
     }.reduce(_ && _)
-    val inCols = incoming.columns.map(c => col(s"__in.$c"))
-    val inserts = in2.join(ex2, joinCond, "left_anti")
-      .withColumn("operation", lit("INSERT"))
-    val updates = in2.join(ex2, joinCond, "inner")
-      .filter(changePredicate(tracked, "__in", "__ex"))
-      .select(inCols.toIndexedSeq: _*)
-      .withColumn("operation", lit("UPDATE"))
-    inserts.unionByName(updates)
+    val matched = col("__ex.__ex_present").isNotNull
+    in2.join(ex2, joinCond, "left")
+      .filter(!matched || changePredicate(tracked, "__in", "__ex"))
+      .select(incoming.columns.map(c => col(s"__in.$c")).toIndexedSeq :+
+        when(matched, lit("UPDATE")).otherwise(lit("INSERT"))
+          .as("operation"): _*)
   }
 }
 

@@ -101,7 +101,8 @@ object Pipelines {
 
   /** E3, the 9-stage fact loader (load_fact_sales_dw.py), with the
     * reference's file-level outcomes: empty file → Poison; unresolvable
-    * schema → Poison; any empty dim → Retry. Otherwise the file read for
+    * schema → Poison; any empty dim → Retry, read off the lookups' own
+    * build (load_fact_sales_dw.py:129-175). Otherwise the file read for
     * those checks runs every stage: alias-resolve → clean → resolve the
     * 4 dim keys → drop misses → classify INSERT/UPDATE vs the current DW
     * state → assign surrogate keys → merge → commit. `dw/fact_sales`
@@ -115,23 +116,24 @@ object Pipelines {
     if (!res.ok)
       return Poison(s"missing required columns: " +
         res.missingRequired.mkString(", "))
-    val dimsEmpty = Seq("stores" -> db.stores, "products" -> db.products,
-      "distributors" -> db.distributors, "dates" -> db.dates)
-      .collect { case (n, d) if d.isEmpty => n }
-    if (dimsEmpty.nonEmpty)
-      return Retry(s"empty dims: ${dimsEmpty.mkString(", ")}")
     // stage 4: alias-tolerant schema resolution, all-string → cleaned
     val resolved = SchemaMapper(raw, factLogicalCols)
-    // stage 5: dim-key resolution through normalized business keys
+    // stage 5: dim-key resolution through normalized business keys; each
+    // dim's rows are counted as its lookup builds its broadcast side
+    val dims = Seq("stores" -> db.stores, "products" -> db.products,
+      "distributors" -> db.distributors, "dates" -> db.dates)
+      .map { case (n, d) => (n, Observation(), d) }
+    val Seq(stores, products, dists, dates) = dims.map { case (_, o, d) =>
+      d.observe(o, count(lit(1)).as("n")) }
     val keyed = DimResolver.resolveDimKeys(resolved, Seq(
-      DimLookup(db.stores, Seq("STORE_NAME"), Seq("store_name"),
+      DimLookup(stores, Seq("STORE_NAME"), Seq("store_name"),
         "store_id", "STORE_KEY"),
-      DimLookup(db.products, Seq("PRODUCT_NAME", "BRAND"),
+      DimLookup(products, Seq("PRODUCT_NAME", "BRAND"),
         Seq("product_name", "brand"), "product_id", "PRODUCT_KEY",
         fallback = Some(("PRODUCT_NAME", "product_name", "product_id"))),
-      DimLookup(db.distributors, Seq("DIST_NAME"), Seq("dist_name"),
+      DimLookup(dists, Seq("DIST_NAME"), Seq("dist_name"),
         "dist_id", "DIST_KEY"),
-      DimLookup(db.dates.withColumn("fd", col("full_date").cast("string")),
+      DimLookup(dates.withColumn("fd", col("full_date").cast("string")),
         Seq("FULL_DATE"), Seq("fd"), "date_id", "DATE_ID")))
     // stage 6: drop unresolved / unparseable rows (P5/P6), counting the
     // dim misses with an Observation. An Observation reports from the
@@ -161,6 +163,14 @@ object Pipelines {
       .observe(deltaObs, count(lit(1)).as("incoming"))
       .localCheckpoint(eager = true)
     try {
+      // Retry on an empty dim, before any commit. Adaptive execution
+      // drops a join whose build side came out empty, observed node and
+      // all, so an empty dim reports no row, not 0: a dim that reports no
+      // row or 0 is confirmed by its own job, which runs only on this path
+      val dimsEmpty = dims.collect { case (n, o, d) if scala.util.Try(
+          observed(o, n).getLong(0)).getOrElse(0L) == 0L && d.isEmpty => n }
+      if (dimsEmpty.nonEmpty)
+        return Retry(s"empty dims: ${dimsEmpty.mkString(", ")}")
       // stage 7: classify vs current DW state
       val dwPath = s"$root/dw/fact_sales"
       val existing = loadOrEmpty(spark, dwPath, incoming.schema

@@ -68,9 +68,9 @@ object CsvIO {
 
 /** S5/S7: the processed-file ledger — `filename|timestamp` per consumed
   * file, one file consumed per run, newest-first (load_fact_sales_dw.py:
-  * 22-35, 65-79). Kept as a parquet table + anti-join (the streaming
-  * checkpoint in IncrementalLoad supersedes this for exactly-once; the
-  * ledger remains for parity with the reference's explicit bookkeeping).
+  * 22-35, 65-79). Kept as a parquet table + anti-join; it is the engine's
+  * one exactly-once mechanism for incoming files: a marked file is never
+  * offered again, and a file that arrives later is the next one.
   */
 object Ledger {
 

@@ -1,52 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.streaming.Trigger
 
-/** Structured-Streaming re-expression of the reference's incremental
-  * one-file-per-run consumption (SURVEY §2.9): the file source +
-  * checkpoint gives exactly-once for free (supersedes the hand-rolled
-  * processed-file ledger), `maxFilesPerTrigger=1` preserves the
-  * one-file-per-batch cadence, and Trigger.AvailableNow drains everything
-  * pending then stops — the batch-job shape the reference's Airflow tasks
-  * have.
-  *
-  * Retry-vs-poison (load_fact_sales_dw.py:156-175 vs 204-210): the batch
-  * function THROWS to retry (checkpoint not advanced — the file will be
-  * re-presented) and returns a PoisonFile to skip-and-commit.
+/** Event-time windowed aggregation, on static and streaming frames
+  * alike. The reference's one-file-per-run consumption (SURVEY §2.9) is
+  * [[graft.sources.Ledger]], and the loader's Poison/Retry file outcomes
+  * are [[graft.pipelines.Pipelines.LoadOutcome]].
   */
 object IncrementalLoad {
-
-  sealed trait BatchOutcome
-  case object Processed extends BatchOutcome
-  final case class PoisonFile(reason: String) extends BatchOutcome
-
-  /** Run an incremental CSV load to completion (AvailableNow). `process`
-    * sees one micro-batch per pending file; outcomes are returned in
-    * batch order. */
-  def runCsv(spark: SparkSession, inDir: String, schema: StructType,
-      checkpoint: String, sep: String = "|")(
-      process: (DataFrame, Long) => BatchOutcome): Seq[(Long, BatchOutcome)] = {
-    val outcomes = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, BatchOutcome)]
-    val stream = spark.readStream
-      .option("sep", sep).option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .schema(schema)
-      .csv(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        outcomes += (id -> process(batch, id))
-        () // poison files commit (advance checkpoint); retries throw
-      }
-      .start()
-    q.awaitTermination()
-    outcomes.toSeq
-  }
 
   /** Event-time windowed aggregation with watermark — the streaming-agg
     * shape the engine exposes for event feeds (not present in the

@@ -7,11 +7,11 @@ import graft.functions.Cleansing
 
 /** Declarative data-quality checks (SURVEY.md §2.8 V1-V10): the engine
   * behind the reference's validate_table.py CLI, re-expressed so that ALL
-  * checks for a table evaluate in ONE aggregate query (one scan — the
-  * reference runs one SQL per check; at 100 TB that's the difference
-  * between 1 and 10 full-table reads). PK-uniqueness folds in as grouping
-  * sets beside the scalar checks' indicator sums: one shuffle of the key
-  * columns for all PKs of the table (see [[Validator.run]]).
+  * checks of a suite evaluate in ONE query (the reference runs one SQL
+  * per check; at 100 TB that's the difference between 1 and 10 full-table
+  * reads per table): each table is read once, its scalar checks'
+  * indicator sums and every PK's key groups in one aggregate (see
+  * [[Validator.query]]).
   */
 sealed trait Check
 /** V1: row count >= n (validate_table.py:135-140, 277-285) */
@@ -33,7 +33,7 @@ final case class Freshness(dateCol: String, execDate: String,
 /** Beyond parity: columns must be free of PII patterns (the email/phone
   * regexes of [[graft.operators.Curation.redactPii]]) — the release
   * gate a training-data pipeline runs AFTER redaction: observed = rows
-  * still matching, pass only at zero. Rides the table's one aggregate query. */
+  * still matching, pass only at zero. Rides the suite's one query. */
 final case class PiiFree(cols: Seq[String]) extends Check
 
 final case class CheckResult(check: String, column: String,
@@ -74,80 +74,116 @@ object Validator {
 
   /** Evaluate all checks; returns one row per (check, column): the
     * schema checks, then the scalar checks, then each PkUnique, each in
-    * the order given. Every scalar check is a per-row 0/1 indicator, and
-    * one aggregate query evaluates them all together with every
-    * PkUnique's count of duplicated key groups: grouping sets over the
-    * PK columns, the empty set carrying the indicator sums and each PK's
-    * set its groups, folded to one row by an outer aggregate. */
-  def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
+    * the order given. The one-table case of [[suite]]. */
+  def run(df: DataFrame, checks: Seq[Check]): DataFrame =
+    df.sparkSession.createDataFrame(evaluate(Seq(df -> checks)).head)
+
+  /** V10: the DAG-shaped suite — named tables with their contracts
+    * (dims ∥ → fact → file in the reference; order here is the caller's
+    * list). Returns each table's [[run]] rows in turn, tagged by table,
+    * from one query with one collect: [[query]]. */
+  def suite(tables: Seq[(String, DataFrame, Seq[Check])]): DataFrame =
+    tables.head._2.sparkSession.createDataFrame(tables.map(t =>
+        Identifiers.requireSafe(t._1)).zip(evaluate(tables.map(t =>
+        t._2 -> t._3))).flatMap { case (n, rs) => rs.map(n -> _) })
+      .select(col("_2.*"), col("_1").as("table"))
+
+  /** A check's result for observed value `v`: passed when `v` is at
+    * least `threshold` (`atLeast`), else at most it. */
+  private def judged(check: String, column: String, threshold: Long,
+      atLeast: Boolean = false, severity: String = "ERROR")(v: Long) =
+    CheckResult(check, column, v, threshold,
+      if (atLeast) v >= threshold else v <= threshold, severity)
+
+  /** A table's checks: the schema results, which need no job, then each
+    * scalar check's per-row hit, then the PKs. */
+  private final case class Plan(schema: Seq[CheckResult],
+      scalars: Seq[(Long => CheckResult, Column)], pks: Seq[Seq[String]]) {
+    def slots: Seq[Long => CheckResult] = scalars.map(_._1) ++
+      pks.map(cols => judged("pk_unique", cols.mkString("+"), 0L) _)
+  }
+
+  /** Per column of `cols`: a check passed at 0 rows hit, and its hit. */
+  private def hits(check: String, cols: Seq[String])(hit: Column => Column) =
+    cols.map(c => judged(check, c, 0L) _ -> hit(col(c)))
+
+  private def plan(df: DataFrame, checks: Seq[Check]): Plan = {
     checks.flatMap(referencedNames).foreach(Identifiers.requireSafe)
     val present = df.columns.map(_.toUpperCase).toSet
-
-    // schema-level checks need no job at all
-    val schemaResults = checks.collect { case MandatoryColumns(cols) =>
-      cols.map { c =>
-        val ok = present.contains(c.toUpperCase)
-        CheckResult("mandatory_column", c, if (ok) 1L else 0L, 1L, ok, "ERROR")
-      }
-    }.flatten
-
-    // every scalar check with its per-row hit, then every PkUnique
-    case class Slot(check: String, column: String, threshold: Long,
-        passIfAtLeast: Boolean, severity: String)
-    val scalars: Seq[(Slot, Column)] = checks.flatMap {
-      case MinRows(n) => Seq(
-        Slot("min_rows", "*", n, passIfAtLeast = true, "ERROR") -> lit(true))
-      case NoNulls(cols) => cols.map(c =>
-        Slot("no_nulls", c, 0L, passIfAtLeast = false, "ERROR") ->
-          col(c).isNull)
-      case NumericParsable(cols) => cols.map(c =>
-        Slot("numeric_parsable", c, 0L, passIfAtLeast = false, "ERROR") ->
-          (col(c).isNotNull && Cleansing.cleanNumericValidator(col(c)).isNull))
-      case FlagDomain(cols) => cols.map(c =>
-        Slot("flag_domain", c, 0L, passIfAtLeast = false, "ERROR") ->
-          (col(c).isNull || !col(c).isin("Y", "N")))
-      case Freshness(dateCol, execDate, warnOnly) =>
-        Seq(Slot("freshness", dateCol, 1L, passIfAtLeast = true,
-          if (warnOnly) "WARNING" else "ERROR") ->
-          (col(dateCol).cast("date") === lit(execDate).cast("date")))
-      case PiiFree(cols) => cols.map(c =>
-        Slot("pii_free", c, 0L, passIfAtLeast = false, "ERROR") ->
-          (col(c).isNotNull &&
-            (col(c).rlike(graft.operators.Curation.emailRe) ||
-             col(c).rlike(graft.operators.Curation.phoneRe))))
-      case _ => Nil
-    }
-    val pks = checks.collect { case PkUnique(cols) => cols }
-    val slots = scalars.map(_._1) ++ pks.map(cols => Slot("pk_unique",
-      cols.mkString("+"), 0L, passIfAtLeast = false, "ERROR"))
-    val keys = pks.flatten.distinct
-
-    val observed: Seq[Long] = if (slots.isEmpty) Nil else {
-      val base = df.select(keys.map(col) ++ scalars.zipWithIndex.map {
-        case ((_, hit), i) => when(hit, 1L).otherwise(0L).as(s"__i$i") }: _*)
-      // grouping_id sets bit (n-1-i) when keys(i) is NOT in the set
-      def gid(set: Seq[String]): Long = keys.indices.collect {
-        case i if !set.contains(keys(i)) => 1L << (keys.size - 1 - i) }.sum
-      val inner = count(lit(1)).as("__n") +: scalars.indices.map(i =>
-        sum(col(s"__i$i")).as(s"__s$i"))
-      val groups =
-        if (keys.isEmpty) base.agg(lit(0L).as("__g"), inner: _*)
-        else base.groupingSets(Nil +: pks.distinct.map(_.map(col)),
-          keys.map(col): _*).agg(grouping_id().as("__g"), inner: _*)
-      val whole = col("__g") === gid(Nil)
-      val outer = scalars.indices.map(i =>
-        coalesce(sum(when(whole, col(s"__s$i"))), lit(0L))) ++
-        pks.map(cols =>
-          count(when(col("__g") === gid(cols) && col("__n") > 1, 1)))
-      val row = groups.agg(outer.head, outer.tail: _*).collect()(0)
-      outer.indices.map(row.getLong)
-    }
-    val aggResults = slots.zip(observed).map { case (s, v) =>
-      val ok = if (s.passIfAtLeast) v >= s.threshold else v <= s.threshold
-      CheckResult(s.check, s.column, v, s.threshold, ok, s.severity)
-    }
-    df.sparkSession.createDataFrame(schemaResults ++ aggResults)
+    Plan(checks.collect { case MandatoryColumns(cols) => cols.map(c =>
+        judged("mandatory_column", c, 1L, atLeast = true)(
+          if (present.contains(c.toUpperCase)) 1L else 0L))
+      }.flatten,
+      checks.flatMap {
+        case MinRows(n) =>
+          Seq(judged("min_rows", "*", n, atLeast = true) _ -> lit(true))
+        case NoNulls(cols) => hits("no_nulls", cols)(_.isNull)
+        case NumericParsable(cols) => hits("numeric_parsable", cols)(c =>
+          c.isNotNull && Cleansing.cleanNumericValidator(c).isNull)
+        case FlagDomain(cols) =>
+          hits("flag_domain", cols)(c => c.isNull || !c.isin("Y", "N"))
+        case Freshness(dateCol, execDate, warnOnly) =>
+          Seq(judged("freshness", dateCol, 1L, atLeast = true,
+            if (warnOnly) "WARNING" else "ERROR") _ ->
+            (col(dateCol).cast("date") === lit(execDate).cast("date")))
+        case PiiFree(cols) => hits("pii_free", cols)(c => c.isNotNull &&
+          (c.rlike(graft.operators.Curation.emailRe) ||
+            c.rlike(graft.operators.Curation.phoneRe)))
+        case _ => Nil
+      },
+      checks.collect { case PkUnique(cols) => cols })
   }
+
+  /** Each table's results from one collect of [[query]]. */
+  private def evaluate(
+      tables: Seq[(DataFrame, Seq[Check])]): Seq[Seq[CheckResult]] = {
+    val planned = tables.map { case (df, checks) => df -> plan(df, checks) }
+    val observed = planned.map(p => new Array[Long](p._2.slots.size))
+    if (observed.exists(_.nonEmpty))
+      query(planned).collect().foreach { r =>
+        val (t, b, v) = (r.getInt(0), r.getInt(1), r.getSeq[Long](2))
+        // PK 0's row fills the scalars and its own slot, PK b > 0's its own
+        if (b == 0) v.copyToArray(observed(t))
+        else observed(t)(planned(t)._2.scalars.size + b) = v.last
+      }
+    planned.zip(observed).map { case ((_, p), vs) =>
+      p.schema ++ p.slots.zip(vs).map { case (judge, v) => judge(v) } }
+  }
+
+  /** [[query]] over `tables`' checks, for the plan tripwires. */
+  private[graft] def aggregates(tables: Seq[(DataFrame, Seq[Check])]) =
+    query(tables.map { case (df, checks) => df -> plan(df, checks) })
+
+  /** The suite's one query: rows (table index, PK index b, values). Each
+    * table is read once: with k > 1 PKs every row is exploded into one
+    * row per PK, b's key columns kept and the others nulled, and one
+    * aggregate over (b, keys) counts each PK's duplicated key groups. The
+    * scalar checks' hit sums ride the same groups; PK 0's row carries
+    * them, then its count (a table with no PK sums its rows directly).
+    * A table whose optimized-plan size estimate is within the broadcast
+    * threshold is gathered into one partition, where its aggregates run
+    * without an exchange: the size a join would gather to one place. */
+  private def query(tables: Seq[(DataFrame, Plan)]): DataFrame =
+    tables.zipWithIndex.collect { case ((df, p), t) if p.slots.nonEmpty =>
+      val sums = p.scalars.indices.map(i => s"__i$i")
+      val keys = p.pks.flatten.distinct
+      val b = if (p.pks.size > 1) explode(array(p.pks.indices.map(lit): _*))
+        else lit(0)
+      val rows = df.select((b.as("__b") +: keys.map(col)) ++ p.scalars
+          .zip(sums).map { case ((_, hit), i) =>
+            when(hit, 1L).otherwise(0L).as(i) }: _*)
+        .withColumns(keys.map(k => k -> when(col("__b").isin(p.pks.indices
+          .filter(p.pks(_).contains(k)): _*), col(k))).toMap)
+      val gathered = if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+        rows.coalesce(1) else rows
+      (if (p.pks.isEmpty) gathered else gathered
+        .groupBy(col("__b") +: keys.map(col): _*)
+        .agg(count(lit(1)).as("__n"), sums.map(c => sum(col(c)).as(c)): _*))
+        .groupBy("__b").agg(array(sums.map(c => sum(col(c))) ++
+          p.pks.take(1).map(_ => count(when(col("__n") > 1, 1))): _*).as("v"))
+        .select(lit(t).as("t"), col("__b"), col("v"))
+    }.reduce(_ union _)
 
   /** Top-N duplicate examples for a failing PkUnique (V6's evidence,
     * validate_table.py:320-327). */
@@ -292,13 +328,4 @@ object Validator {
     * validator must survive. */
   private def boxed(r: Row, i: Int): java.lang.Double =
     if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
-
-  /** V10: the DAG-shaped suite — named tables with their contracts,
-    * evaluated in order (dims ∥ → fact → file in the reference; order
-    * here is the caller's list). Returns results tagged by table. */
-  def suite(tables: Seq[(String, DataFrame, Seq[Check])]): DataFrame =
-    tables.map { case (name, df, checks) =>
-      Identifiers.requireSafe(name)
-      run(df, checks).withColumn("table", lit(name))
-    }.reduce(_ unionByName _)
 }

