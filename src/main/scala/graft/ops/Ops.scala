@@ -144,8 +144,8 @@ object SurrogateKeys {
     * within partitions, then [[numbered]]. No single-reducer WindowExec
     * anywhere: the old unpartitioned-window form funneled every row
     * through one task, the silent scale cliff SURVEY §7.4 risk 1 warns
-    * about. Cost is one range shuffle + one light count job — the shuffle
-    * also existed in the window form; the single reducer is what's gone.
+    * about (the window form shuffled too). Cost: one range shuffle, its
+    * partitioner's sampling job and `zipWithIndex`'s count job.
     * Keys are contiguous maxKey+1..maxKey+N in `ord` order (ties ranked
     * arbitrarily but counted once, exactly like row_number). */
   def assignSequential(newRows: DataFrame, keyCol: String, maxKey: Long,

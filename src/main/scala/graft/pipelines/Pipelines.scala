@@ -92,7 +92,7 @@ object Pipelines {
     * (FIXTURES §6): Poison files are marked processed and skipped
     * (empty file, missing required columns — load_fact_sales_dw.py:
     * 92-96, 204-210); Retry leaves the file unconsumed (empty target
-    * dims, :156-175); Loaded carries the merge stats. */
+    * dims, :156-175; no key matches, :263-277); Loaded carries stats. */
   sealed trait LoadOutcome
   final case class Loaded(facts: DataFrame,
       stats: Map[String, Long]) extends LoadOutcome
@@ -101,13 +101,14 @@ object Pipelines {
 
   /** E3, the 9-stage fact loader (load_fact_sales_dw.py), with the
     * reference's file-level outcomes: empty file → Poison; unresolvable
-    * schema → Poison; any empty dim → Retry, read off the lookups' own
-    * build (load_fact_sales_dw.py:129-175). Otherwise the file read for
-    * those checks runs every stage: alias-resolve → clean → resolve the
-    * 4 dim keys → drop misses → classify INSERT/UPDATE vs the current DW
-    * state → assign surrogate keys → merge → commit. `dw/fact_sales`
-    * stays one plain parquet dir of exactly the live rows; each load
-    * replaces it whole through [[BatchLog.replaceDir]]. */
+    * schema → Poison; no row left with some dim key missed → Retry,
+    * naming the empty dims if any (load_fact_sales_dw.py:156-175), else
+    * the misses (:263-277). Otherwise the file read for those checks
+    * runs every stage: alias-resolve → clean → resolve the 4 dim keys →
+    * drop misses → classify INSERT/UPDATE vs the current DW state →
+    * number the classified delta → merge → commit. `dw/fact_sales` stays
+    * one plain parquet dir of exactly the live rows; each load replaces
+    * it whole through [[BatchLog.replaceDir]]. */
   def loadIncoming(spark: SparkSession, db: SourceDb, root: String,
       incomingPath: String): LoadOutcome = {
     val raw = CsvIO.readAllString(spark, incomingPath, sep = "|")
@@ -118,22 +119,16 @@ object Pipelines {
         res.missingRequired.mkString(", "))
     // stage 4: alias-tolerant schema resolution, all-string → cleaned
     val resolved = SchemaMapper(raw, factLogicalCols)
-    // stage 5: dim-key resolution through normalized business keys; each
-    // dim's rows are counted as its lookup builds its broadcast side
-    val dims = Seq("stores" -> db.stores, "products" -> db.products,
-      "distributors" -> db.distributors, "dates" -> db.dates)
-      .map { case (n, d) => (n, Observation(), d) }
-    val Seq(stores, products, dists, dates) = dims.map { case (_, o, d) =>
-      d.observe(o, count(lit(1)).as("n")) }
+    // stage 5: dim-key resolution through normalized business keys
     val keyed = DimResolver.resolveDimKeys(resolved, Seq(
-      DimLookup(stores, Seq("STORE_NAME"), Seq("store_name"),
+      DimLookup(db.stores, Seq("STORE_NAME"), Seq("store_name"),
         "store_id", "STORE_KEY"),
-      DimLookup(products, Seq("PRODUCT_NAME", "BRAND"),
+      DimLookup(db.products, Seq("PRODUCT_NAME", "BRAND"),
         Seq("product_name", "brand"), "product_id", "PRODUCT_KEY",
         fallback = Some(("PRODUCT_NAME", "product_name", "product_id"))),
-      DimLookup(dists, Seq("DIST_NAME"), Seq("dist_name"),
+      DimLookup(db.distributors, Seq("DIST_NAME"), Seq("dist_name"),
         "dist_id", "DIST_KEY"),
-      DimLookup(dates.withColumn("fd", col("full_date").cast("string")),
+      DimLookup(db.dates.withColumn("fd", col("full_date").cast("string")),
         Seq("FULL_DATE"), Seq("fd"), "date_id", "DATE_ID")))
     // stage 6: drop unresolved / unparseable rows (P5/P6), counting the
     // dim misses with an Observation. An Observation reports from the
@@ -163,14 +158,20 @@ object Pipelines {
       .observe(deltaObs, count(lit(1)).as("incoming"))
       .localCheckpoint(eager = true)
     try {
-      // Retry on an empty dim, before any commit. Adaptive execution
-      // drops a join whose build side came out empty, observed node and
-      // all, so an empty dim reports no row, not 0: a dim that reports no
-      // row or 0 is confirmed by its own job, which runs only on this path
-      val dimsEmpty = dims.collect { case (n, o, d) if scala.util.Try(
-          observed(o, n).getLong(0)).getOrElse(0L) == 0L && d.isEmpty => n }
-      if (dimsEmpty.nonEmpty)
-        return Retry(s"empty dims: ${dimsEmpty.mkString(", ")}")
+      // Retry on zero key matches, before any commit: no row is left and
+      // some row missed a dim. An empty dim misses every row, so only on
+      // this path is each dim checked, by its own job, to name it
+      val misses = observed(missObs, "dim misses")
+      val missed = dimKeys.map(k => s"miss_$k" -> misses.getAs[Long](k))
+      val nIncoming = observed(deltaObs, "incoming").getLong(0)
+      val hits = missed.collect { case (k, n) if n > 0 => s"$k=$n" }
+      if (nIncoming == 0 && hits.nonEmpty) {
+        val empty = Seq("stores" -> db.stores, "products" -> db.products,
+          "distributors" -> db.distributors, "dates" -> db.dates)
+          .collect { case (n, d) if d.isEmpty => n }
+        return Retry(if (empty.nonEmpty) s"empty dims: ${empty.mkString(", ")}"
+          else s"no row matched the dims: ${hits.mkString(", ")}")
+      }
       // stage 7: classify vs current DW state
       val dwPath = s"$root/dw/fact_sales"
       val existing = loadOrEmpty(spark, dwPath, incoming.schema
@@ -185,16 +186,11 @@ object Pipelines {
       val classified = ChangeClassifier.classifyChanges(incoming,
         existing.drop("fact_key"), Seq("natural_key"), tracked,
         nullSafeKeys = false)
-      // stage 8: surrogate keys for the INSERT set only (W3's lesson)
-      val maxKey = SurrogateKeys.currentMax(existing, "fact_key")
-      val inserts = SurrogateKeys.assignSequential(
-        classified.filter(col("operation") === "INSERT"), "fact_key",
-        maxKey, Seq(col("natural_key")))
-      // a matched UPDATE keeps the target's fact_key (not in the SET list)
-      val updates = classified.filter(col("operation") === "UPDATE")
-        .withColumn("fact_key", lit(null).cast(LongType))
-      val staged = inserts.unionByName(updates.select(inserts.columns
-        .map(col).toIndexedSeq: _*))
+      // stage 8: INSERTs sort first and take maxKey+1.. by natural_key;
+      // an UPDATE's number is never written (fact_key is not in SET)
+      val staged = SurrogateKeys.assignSequential(classified, "fact_key",
+        SurrogateKeys.currentMax(existing, "fact_key"),
+        Seq(col("operation") =!= "INSERT", col("natural_key")))
       // stage 9: merge, committed by the directory replace below; the
       // merge sets the target's null `operation` on each row it applies
       val merged = MergeInto.mergeInto(
@@ -208,11 +204,9 @@ object Pipelines {
         .drop("operation")
       BatchLog.replaceDir(spark, dwPath)(
         merged.write.mode("overwrite").parquet(_))
-      val misses = observed(missObs, "dim misses").getValuesMap[Long](dimKeys)
       val ops = observed(opsObs, "inserts/updates")
-      val stats = Map("incoming" -> observed(deltaObs, "incoming").getLong(0),
-        "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++
-        misses.map { case (k, v) => s"miss_$k" -> v }
+      val stats = Map("incoming" -> nIncoming,
+        "inserts" -> ops.getLong(0), "updates" -> ops.getLong(1)) ++ missed
       Loaded(spark.read.schema(merged.schema).parquet(dwPath), stats)
     } finally incoming.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false) }

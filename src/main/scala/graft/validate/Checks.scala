@@ -160,9 +160,9 @@ object Validator {
     * aggregate over (b, keys) counts each PK's duplicated key groups. The
     * scalar checks' hit sums ride the same groups; PK 0's row carries
     * them, then its count (a table with no PK sums its rows directly).
-    * A table whose optimized-plan size estimate is within the broadcast
-    * threshold is gathered into one partition, where its aggregates run
-    * without an exchange: the size a join would gather to one place. */
+    * A table whose optimized-plan size estimate is within Spark's
+    * smallest file split (`spark.sql.files.openCostInBytes`) is gathered
+    * into one partition, where its aggregates run without an exchange. */
   private def query(tables: Seq[(DataFrame, Plan)]): DataFrame =
     tables.zipWithIndex.collect { case ((df, p), t) if p.slots.nonEmpty =>
       val sums = p.scalars.indices.map(i => s"__i$i")
@@ -175,7 +175,7 @@ object Validator {
         .withColumns(keys.map(k => k -> when(col("__b").isin(p.pks.indices
           .filter(p.pks(_).contains(k)): _*), col(k))).toMap)
       val gathered = if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+        df.sparkSession.sessionState.conf.filesOpenCostInBytes)
         rows.coalesce(1) else rows
       (if (p.pks.isEmpty) gathered else gathered
         .groupBy(col("__b") +: keys.map(col): _*)

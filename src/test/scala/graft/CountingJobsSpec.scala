@@ -4,19 +4,21 @@ import graft.datagen.DataGen
 import graft.ops.{DimLookup, DimResolver}
 import graft.pipelines.Pipelines
 import graft.validate._
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 
 /** Job-count tripwires on [[Trace]] for the counting in the daily
-  * cycle: the validator checks a whole suite in one query, a
-  * broadcast-sized table's aggregates without a shuffle, and the DW load
-  * counts with Observations on the frames it already runs (its Retry
-  * too, from the dim lookups' own build), so no job of either comes
-  * from a counting action of its own. The dims are broadcast-sized: the
+  * cycle: the validator checks a whole suite in one query, a table
+  * within the smallest file split aggregates without a shuffle, and the
+  * DW load counts with Observations on the frames it already runs (its
+  * Retry too, from the dim-miss counters), so no job of either comes
+  * from a counting action of its own; it classifies once, so it scans
+  * its target at most three times. The dims are broadcast-sized: the
   * generator collects each once, and a dim lookup's build side needs no
   * shuffle. */
 class CountingJobsSpec extends SparkSpec {
@@ -59,9 +61,11 @@ class CountingJobsSpec extends SparkSpec {
     val df = spark.read.parquet(s"$dir/t")
     val twoPks = Seq(MinRows(10), NoNulls(Seq("flag")),
       PkUnique(Seq("id")), PkUnique(Seq("k", "flag")))
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val was = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+    // neither a broadcast nor a gather: the table keeps its exchange
+    val pinned = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.files.openCostInBytes" -> "0")
+    val was = pinned.map { case (k, v) =>
+      val old = spark.conf.get(k); spark.conf.set(k, v); k -> old }
     try {
       val query = Validator.aggregates(Seq(df -> twoPks,
         df -> Seq(PkUnique(Seq("k")))))
@@ -75,7 +79,28 @@ class CountingJobsSpec extends SparkSpec {
       assert(observed === Map(("min_rows", "*") -> 2000L,
         ("no_nulls", "flag") -> 182L, ("pk_unique", "id") -> 0L,
         ("pk_unique", "k+flag") -> 14L))
-    } finally spark.conf.set(key, was)
+    } finally was.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("a table above the smallest file split but within the broadcast " +
+      "threshold keeps its exchange") {
+    val dir = Files.createTempDirectory("graft_count_gather").toString
+    // incompressible 16-byte rows, ~7 MB of parquet
+    spark.range(0, 450000, 1, 2).select(xxhash64(col("id")).as("a"),
+        xxhash64(col("id"), lit(1)).as("b"))
+      .write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    val conf = spark.sessionState.conf
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > conf.filesOpenCostInBytes &&
+      size <= conf.autoBroadcastJoinThreshold, size)
+    val query = Validator.aggregates(Seq(df -> Seq(MinRows(1),
+      PkUnique(Seq("a")))))
+    assert(query.collect().length === 1)
+    object Plan extends AdaptiveSparkPlanHelper
+    val plan = query.queryExecution.executedPlan
+    assert(Plan.find(plan)(_.isInstanceOf[ShuffleExchangeLike]).nonEmpty,
+      plan)
   }
 
   test("loadIncoming runs no job from a counting call site") {
@@ -91,12 +116,49 @@ class CountingJobsSpec extends SparkSpec {
     val sites = span.counters.jobs.map(_.site)
     val counting = Set("count", "head", "first", "take")
     assert(!sites.exists(s => counting(s.takeWhile(_ != ' '))), sites)
-    // the one isEmpty is the file's own: the dims' emptiness rides the
-    // lookups' build
+    // the one isEmpty is the file's own: a dim is checked for emptiness
+    // only on the Retry path
     assert(sites.count(_.startsWith("isEmpty at")) <= 1, sites)
     // the one collect left reads the current max key for stage 8
     assert(sites.filter(_.startsWith("collect at")).distinct.size <= 1,
       sites)
+  }
+
+  test("a load that mixes INSERTs and UPDATEs scans the target at most " +
+      "three times") {
+    val root = Files.createTempDirectory("graft_count_scans").toString
+    val db = Pipelines.sourceLoad(spark, root, nFacts = 200,
+      dateId = 20240115)
+    Pipelines.extract(spark, db, root)
+    val incoming = s"$root/incoming/sales_snapshot"
+    Pipelines.loadIncoming(spark, db, root, incoming) // the target
+    Pipelines.extract(spark, db.copy(facts = PipelineSpec.resent(db, 20)
+      .unionByName(PipelineSpec.nextDay(spark, db, 100))), root)
+    val target = new java.io.File(s"$root/dw/fact_sales").toURI.getPath
+      .stripSuffix("/")
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    object Plan extends AdaptiveSparkPlanHelper
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans.addAndGet(Plan.collect(qe.executedPlan) {
+          case s: FileSourceScanExec if s.relation.location.rootPaths
+            .exists(_.toUri.getPath.stripSuffix("/") == target) => s
+        }.size)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val stats = try {
+      val out = Pipelines.loadIncoming(spark, db, root, incoming)
+      org.apache.spark.GraftSparkHooks.drainListenerBus(spark.sparkContext)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    stats match {
+      case Pipelines.Loaded(_, s) =>
+        assert(s("inserts") > 0 && s("updates") === 20, s)
+      case other => fail(s"expected Loaded, got $other")
+    }
+    // the max-key read, the numbering pass and the merge write
+    assert(scans.get <= 3, scans.get)
   }
 
   test("validationSuite runs the jobs of one query; a broadcast-sized " +

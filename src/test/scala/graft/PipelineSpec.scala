@@ -1,7 +1,8 @@
 package graft
 
+import graft.datagen.DataGen
 import graft.pipelines.Pipelines
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Minutes, Span}
@@ -94,24 +95,24 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     Pipelines.extract(spark, db, root)
     val before = load(db, root).facts.select("natural_key", "fact_key")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // re-send k facts the DW kept (lowest sales id of their natural key)
-    // with a larger quantity and amounts
-    val key = Seq("date_id", "store_id", "product_id", "dist_id")
-    val kept = db.facts.groupBy(key.map(col): _*)
-      .agg(min("sales_id").as("sales_id")).select("sales_id")
+    // k facts re-sent with changed amounts, beside a next day's new facts
     val k = 25
-    val bump = col("sales_id") % 3 + 1
-    def plus(c: String) = (col(c) + bump * col("unit_price"))
-      .cast(db.facts.schema(c).dataType)
-    val resent = db.facts.join(kept.orderBy("sales_id").limit(k), "sales_id")
-      .withColumn("quantity_sold", col("quantity_sold") + bump)
-      .withColumn("gross_amount", plus("gross_amount"))
-      .withColumn("net_amount", plus("net_amount"))
-    Pipelines.extract(spark, db.copy(facts = resent), root)
+    val resent = PipelineSpec.resent(db, k)
+    val fresh = PipelineSpec.nextDay(spark, db, 120)
+    Pipelines.extract(spark, db.copy(facts = resent.unionByName(fresh)),
+      root)
     val Pipelines.Loaded(dw, stats) = load(db, root)
+    val nNew = fresh.select("store_id", "product_id", "dist_id").distinct()
+      .count()
     assert(stats("updates") === k)
-    assert(stats("inserts") === 0)
-    assert(dw.count() === before.size)
+    assert(stats("inserts") === nNew && nNew > 0)
+    assert(dw.count() === before.size + nNew)
+    // the new facts take max+1..max+n, ascending in natural_key
+    val added = dw.filter(!col("natural_key").isin(before.keys.toSeq: _*))
+      .select("natural_key", "fact_key").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    assert(added.map(_._2).toSeq ===
+      (before.values.max + 1 to before.values.max + nNew))
     val got = dw.join(resent.select(col("date_id"),
         col("store_id").as("store_key"), col("product_id").as("product_key"),
         col("dist_id").as("dist_key"), col("quantity_sold").as("q"),
@@ -183,8 +184,13 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     assert(stats(fixture) === expected(incoming = 12, inserts = 0))
     val allMiss = write((0 until 5).map(i =>
       row(100 + i, "No Such Store", products(i), dists(0))), "all_miss")
-    assert(stats(allMiss) ===
-      expected(incoming = 0, inserts = 0, store = 5, others = 0))
+    failAfter(Span(2, Minutes)) {
+      Pipelines.loadIncoming(spark, db, root, allMiss)
+    } match {
+      case Pipelines.Retry(r) =>
+        assert(r === "no row matched the dims: miss_STORE_KEY=5")
+      case other => fail(s"expected Retry, got $other")
+    }
     assert(spark.read.parquet(s"$root/dw/fact_sales").count() === 12)
   }
 
@@ -263,9 +269,9 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     val before = dw()
 
     // (d) valid file but empty dims -> Retry naming exactly those dims,
-    // the file stays consumable and the DW untouched. The lookups' build
-    // sides count the dims, and adaptive execution prunes an empty one:
-    // these pin that it still reads as empty
+    // the file stays consumable and the DW untouched. An empty dim misses
+    // every row, and adaptive execution prunes its lookup's build side:
+    // these pin that the misses still count and the dim reads as empty
     def retry(empty: String*): String = {
       def dim(n: String, d: DataFrame) = if (empty.contains(n)) d.limit(0)
         else d
@@ -287,10 +293,11 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     // a store dim that matches no row is not empty: every row misses
     val elsewhere = db.copy(stores = db.stores.withColumn("store_name",
       concat(lit("Elsewhere "), col("store_name"))))
+    // zero key matches: the file is left to retry, the DW untouched
     Pipelines.loadIncoming(spark, elsewhere, root, incoming) match {
-      case Pipelines.Loaded(_, stats) =>
-        assert(stats("incoming") === 0 && stats("miss_STORE_KEY") > 0)
-      case other => fail(s"expected Loaded, got $other")
+      case Pipelines.Retry(r) =>
+        assert(r === "no row matched the dims: miss_STORE_KEY=200")
+      case other => fail(s"expected Retry, got $other")
     }
     assert(dw() === before)
 
@@ -305,4 +312,29 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     assert(cats.select("key").collect().map(_.getLong(0)).sorted.toSeq
       === (1L to n1("category")))
   }
+}
+
+object PipelineSpec {
+  /** `k` facts the DW kept (the lowest sales id of their natural key),
+    * re-sent with a larger quantity and amounts: `k` UPDATEs. */
+  def resent(db: Pipelines.SourceDb, k: Int): DataFrame = {
+    val key = Seq("date_id", "store_id", "product_id", "dist_id")
+    val kept = db.facts.groupBy(key.map(col): _*)
+      .agg(min("sales_id").as("sales_id")).select("sales_id")
+    val bump = col("sales_id") % 3 + 1
+    def plus(c: String) = (col(c) + bump * col("unit_price"))
+      .cast(db.facts.schema(c).dataType)
+    db.facts.join(kept.orderBy("sales_id").limit(k), "sales_id")
+      .withColumn("quantity_sold", col("quantity_sold") + bump)
+      .withColumn("gross_amount", plus("gross_amount"))
+      .withColumn("net_amount", plus("net_amount"))
+  }
+
+  /** `n` facts of the day after `db`'s, over its dims, with sales ids
+    * above its own: INSERTs only. */
+  def nextDay(spark: SparkSession, db: Pipelines.SourceDb,
+      n: Long): DataFrame =
+    DataGen.factSales(spark, n, 20240116, db.products, db.stores,
+      db.distributors, startKey = 100000).select(db.facts.columns.map(col)
+      .toIndexedSeq: _*)
 }
